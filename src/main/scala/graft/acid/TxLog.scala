@@ -2,8 +2,8 @@ package graft.acid
 
 import scala.collection.mutable
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, concat_ws, count, lit, when}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
@@ -593,6 +593,31 @@ object TxLog {
   private def fileName(rel: String): String =
     rel.substring(rel.lastIndexOf('/') + 1)
 
+  /** The exact string `_metadata.file_path` yields for a file under
+    * `root`: the path [[TxLogFileIndex]] builds, in URI form. Spark
+    * URL-encodes it — a space in a partition value reads back as `%20`,
+    * and the `%` of an escaped one (`a%2Fb`) as `%25` — so every probe
+    * that maps collected paths back to log entries, and the DV
+    * anti-join, compares against this, never against the raw log path. */
+  private def metadataPath(hfs: FileSystem, root: Path, rel: String): String =
+    new Path(hfs.makeQualified(root), rel).toUri.toString
+
+  /** The live files whose `_metadata.file_path` a probe collected. */
+  private def filesAt(hfs: FileSystem, root: Path, files: Seq[AddFile],
+      probed: Set[String]): Seq[AddFile] =
+    files.filter(f => probed.contains(metadataPath(hfs, root, f.path)))
+
+  /** Parquet files under `dir`, by recursive `listStatus`.
+    * `listFiles` builds a `LocatedFileStatus` per entry, which loads its
+    * permissions — without Hadoop native IO that forks `ls -ld` once
+    * per file, about 100x the cost of the listing itself. */
+  private def parquetFilesUnder(hfs: FileSystem, dir: Path): Seq[FileStatus] =
+    hfs.listStatus(dir).toSeq.flatMap { s =>
+      if (s.isDirectory) parquetFilesUnder(hfs, s.getPath)
+      else if (s.getPath.getName.endsWith(".parquet")) Seq(s)
+      else Nil
+    }
+
   /** AQE coalescing aimed at FILE SIZING for the duration of a staging
     * write (optimization r17). The REBALANCE hints below ask AQE to
     * pack output to `advisoryPartitionSizeInBytes`, but with the
@@ -604,7 +629,7 @@ object TxLog {
     * parallelismFirst=false for efficient sizing; guide §2.2/§6), so
     * staging scopes it off and restores after. Session conf is global,
     * not thread-local: the only concurrent writers inside one commit
-    * are stageBoth's two STAGING futures, which both want the same
+    * are stageAll's two pooled STAGING futures, which both want the same
     * value and captured the same prior, so the restore race is benign. */
   private def withFileSizedCoalescing[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
@@ -671,32 +696,26 @@ object TxLog {
     else runWrite()
     val qualified = hfs.makeQualified(staging).toString
     val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    val it = hfs.listFiles(staging, true)
-    val files = mutable.ArrayBuffer.empty[AddFile]
-    while (it.hasNext) {
-      val status = it.next()
+    val files = parquetFilesUnder(hfs, staging).map { status =>
       val f = status.getPath
-      if (f.getName.endsWith(".parquet")) {
-        val rel = f.toString.stripPrefix(qualified).stripPrefix("/")
-        val pv = rel.split("/").dropRight(1).flatMap { seg =>
-          seg.split("=", 2) match {
-            case Array(k, v) => Some(ExternalCatalogUtils.unescapePathName(k) ->
-              ExternalCatalogUtils.unescapePathName(v))
-            case _ => None
-          }
-        }.toMap
-        // footer metadata only (no data I/O) — the commit-time stats
-        // collection that buys read-time file skipping
-        val (numRecords, mins, maxs) = ParquetStats.readFooter(conf, f)
-        files += AddFile(s"$stagingName/$rel", pv, status.getLen, numRecords,
-          mins, maxs)
-      }
+      val rel = f.toString.stripPrefix(qualified).stripPrefix("/")
+      val pv = rel.split("/").dropRight(1).flatMap { seg =>
+        seg.split("=", 2) match {
+          case Array(k, v) => Some(ExternalCatalogUtils.unescapePathName(k) ->
+            ExternalCatalogUtils.unescapePathName(v))
+          case _ => None
+        }
+      }.toMap
+      // footer metadata only (no data I/O) — the commit-time stats
+      // collection that buys read-time file skipping
+      val (numRecords, mins, maxs) = ParquetStats.readFooter(conf, f)
+      AddFile(s"$stagingName/$rel", pv, status.getLen, numRecords, mins, maxs)
     }
-    if (bloomCols.isEmpty) files.toSeq
+    if (bloomCols.isEmpty) files
     else {
       val expected = files.map(f => fileName(f.path) -> f.numRecords.max(1L)).toMap
       val blooms = computeBlooms(df.sparkSession, staging, physBloomCols, expected)
-      files.toSeq.map(f =>
+      files.map(f =>
         f.copy(blooms = blooms.getOrElse(fileName(f.path), Map.empty)))
     }
   }
@@ -722,18 +741,12 @@ object TxLog {
     }
     val qualified = hfs.makeQualified(staging).toString
     val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    val it = hfs.listFiles(staging, true)
-    val files = mutable.ArrayBuffer.empty[(String, Long, Long)]
-    while (it.hasNext) {
-      val status = it.next()
+    parquetFilesUnder(hfs, staging).map { status =>
       val f = status.getPath
-      if (f.getName.endsWith(".parquet")) {
-        val rows = ParquetStats.readFooter(conf, f)._1
-        files += ((s"$stagingName/${f.toString.stripPrefix(qualified).stripPrefix("/")}",
-          math.max(rows, 0L), status.getLen))
-      }
+      val rows = ParquetStats.readFooter(conf, f)._1
+      (s"$stagingName/${f.toString.stripPrefix(qualified).stripPrefix("/")}",
+        math.max(rows, 0L), status.getLen)
     }
-    files.toSeq
   }
 
   /** Dedicated daemon pool for overlapping a commit's two independent
@@ -756,18 +769,20 @@ object TxLog {
     "spark.jobGroup.id", "spark.job.description",
     "spark.job.interruptOnCancel", "spark.scheduler.pool")
 
-  /** Run the data-file staging and the cdc staging as OVERLAPPING Spark
-    * jobs (guide §2.6: actions are only sequential because the driver
-    * calls them sequentially). Both writes derive from the same cached
-    * working set, so running the cdc write after the data write idles
-    * the cluster through the first write's task tail twice per commit —
-    * for incremental commits the two fixed job costs were simply
-    * additive. Failures propagate; both are awaited so no staging task
-    * outlives the commit attempt. Each future body runs under the
-    * caller's job-scoping local properties ([[InheritedLocalProps]]),
-    * restored to the pool thread's prior values afterwards (cached
-    * threads are reused across commits and callers). */
-  private def stageBoth[A, B](spark: SparkSession, a: => A, b: => B): (A, B) = {
+  /** Run a commit's staging writes — data files, cdc files and, for a
+    * DV commit, the sidecars — as OVERLAPPING Spark jobs (guide §2.6:
+    * actions are only sequential because the driver calls them
+    * sequentially). The writes derive from the same cached working set,
+    * so running them one after another idles the cluster through each
+    * write's task tail — for incremental commits the fixed job costs
+    * were simply additive. `a` and `b` run on the staging pool, `c` on
+    * the calling thread. Failures propagate; every write is awaited so
+    * no staging task outlives the commit attempt. Each pooled body runs
+    * under the caller's job-scoping local properties
+    * ([[InheritedLocalProps]]), restored to the pool thread's prior
+    * values afterwards (cached threads are reused across commits and
+    * callers). */
+  private def stageAll[A, B, C](spark: SparkSession, a: => A, b: => B, c: => C): (A, B, C) = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     val sc = spark.sparkContext
@@ -780,7 +795,8 @@ object TxLog {
     }
     val fa = Future(scoped(a))(stagingPool)
     val fb = Future(scoped(b))(stagingPool)
-    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
+    val rc = try c finally { Await.ready(fa, Duration.Inf); Await.ready(fb, Duration.Inf) }
+    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf), rc)
   }
 
   /** Commits per automatic checkpoint (Delta's
@@ -932,6 +948,29 @@ object TxLog {
     stats
   }
 
+  /** Up to three duplicated source keys as probe rows (`__kind` =
+    * "dup", `__val` = the key), shaped to union with a touched-file
+    * probe so the duplicate-key gate costs no action of its own. */
+  private def duplicateKeyProbe(source: DataFrame, keyCols: Seq[String]): DataFrame =
+    source.groupBy(keyCols.map(col): _*)
+      .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).limit(3)
+      .select(lit("dup").as("__kind"),
+        concat_ws(" | ", keyCols.map(c => col(c).cast("string")): _*).as("__val"))
+
+  /** The MERGE duplicate-key error, raised when a fused probe collected
+    * any [[duplicateKeyProbe]] row. */
+  private def requireUniqueKeys(probeRows: Array[Row], keyCols: Seq[String]): Unit = {
+    val dups = probeRows.filter(_.getString(0) == "dup").map(_.getString(1))
+    if (dups.nonEmpty) throw new IllegalArgumentException(
+      s"merge source has duplicate rows for key (${keyCols.mkString(", ")}) — " +
+      s"e.g. ${dups.mkString("; ")}. Collapse the source to one row per key " +
+      "(StreamMerge does this per micro-batch) before merging.")
+  }
+
+  /** The `_metadata.file_path` values a fused probe collected. */
+  private def probedPaths(probeRows: Array[Row]): Set[String] =
+    probeRows.filter(_.getString(0) == "path").map(_.getString(1)).toSet
+
   /** Copy-on-write MERGE (upsert) keyed on `keyCols` — Delta's
     * `MERGE INTO t USING s ON keys WHEN MATCHED THEN UPDATE SET *
     * WHEN NOT MATCHED THEN INSERT *`:
@@ -984,16 +1023,12 @@ object TxLog {
             commitTag: Option[String] = None): MergeStats = {
     val spark = source.sparkSession
     val (hfs, root) = fs(spark, table)
-    val qroot = hfs.makeQualified(root).toString
     // the duplicate-key gate rides the SAME action as the touched-file
     // probe below (one fused collect per attempt): each was a separate
     // full action, and for incremental commits the per-action fixed
     // cost (analyze -> optimize -> AQE stage loop -> schedule) is the
     // dominant term, not the data (optimization r16)
-    val dupProbe = source.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).limit(3)
-      .select(lit("dup").as("__kind"),
-        concat_ws(" | ", keyCols.map(c => col(c).cast("string")): _*).as("__val"))
+    val dupProbe = duplicateKeyProbe(source, keyCols)
     var dupsChecked = false
     var attempts = 0
     while (attempts < 10) {
@@ -1033,15 +1068,9 @@ object TxLog {
         .select(lit("path").as("__kind"), col("__path").as("__val")).distinct()
       val probeRows =
         (if (dupsChecked) pathProbe else pathProbe.unionAll(dupProbe)).collect()
-      val dups = probeRows.filter(_.getString(0) == "dup").map(_.getString(1))
-      if (dups.nonEmpty) throw new IllegalArgumentException(
-        s"merge source has duplicate rows for key (${keyCols.mkString(", ")}) — " +
-        s"e.g. ${dups.mkString("; ")}. Collapse the source to one row per key " +
-        "(StreamMerge does this per micro-batch) before merging.")
+      requireUniqueKeys(probeRows, keyCols)
       dupsChecked = true
-      val touchedPaths = probeRows.filter(_.getString(0) == "path")
-        .map(_.getString(1).stripPrefix(qroot).stripPrefix("/")).toSet
-      val touched = snap.files.filter(f => touchedPaths.contains(f.path))
+      val touched = filesAt(hfs, root, snap.files, probedPaths(probeRows))
       // widened meta: rewritten files materialize the new columns; the
       // old rows they carry surface typed NULLs through the parquet read
       val touchedRows = relationFor(spark, table, meta2, touched)._1
@@ -1090,11 +1119,11 @@ object TxLog {
             .withColumn("_change_type", lit("delete")))
           .unionByName(inserts.withColumn("_change_type", lit("insert")))
         // both writes read the cached working set — overlapped (§2.6)
-        val (adds, cdcFiles) = stageBoth(spark,
+        val (adds, cdcFiles, _) = stageAll(spark,
           stage(staged, table, snap.meta.partitionCols,
             bloomCols = snap.meta.bloomCols, columnMap = snap.meta.columnMap,
             optimizeLayout = true),
-          stageCdc(cdcFrame, table))
+          stageCdc(cdcFrame, table), ())
         val metaLine = if (meta2 eq snap.meta) Seq.empty else Seq(metaJson(meta2))
         val lines = commitInfoJson("merge", commitTag) +: (metaLine ++
           touched.map(actionJson("remove", _)) ++ adds.map(actionJson("add", _)) ++
@@ -1133,7 +1162,6 @@ object TxLog {
     import MergeClause._
     val spark = source.sparkSession
     val (hfs, root) = fs(spark, table)
-    val qroot = hfs.makeQualified(root).toString
     require(clauses.nonEmpty, "mergeConditional needs at least one WHEN clause")
     val matchedCl = clauses.filter {
       case _: MatchedUpdate | _: MatchedDelete => true; case _ => false }
@@ -1153,10 +1181,7 @@ object TxLog {
         "re-keying rows mid-merge would change which rows the clauses match"))
     // duplicate-key gate fused into the touched-file probe action, as
     // in [[merge]] (optimization r16)
-    val dupProbe = source.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).limit(3)
-      .select(lit("dup").as("__kind"),
-        concat_ws(" | ", keyCols.map(c => col(c).cast("string")): _*).as("__val"))
+    val dupProbe = duplicateKeyProbe(source, keyCols)
     var dupsChecked = false
     // SQL MERGE three-valued logic: a NULL condition is "not satisfied"
     def condExpr(c: Option[String]): org.apache.spark.sql.Column =
@@ -1197,15 +1222,9 @@ object TxLog {
       val fused = (Seq(matchedProbe) ++ bySrcProbe.toSeq ++
         (if (dupsChecked) Nil else Seq(dupProbe))).reduce(_ unionAll _)
       val probeRows = fused.collect()
-      val dups = probeRows.filter(_.getString(0) == "dup").map(_.getString(1))
-      if (dups.nonEmpty) throw new IllegalArgumentException(
-        s"merge source has duplicate rows for key (${keyCols.mkString(", ")}) — " +
-        s"e.g. ${dups.mkString("; ")}. Collapse the source to one row per key " +
-        "before merging.")
+      requireUniqueKeys(probeRows, keyCols)
       dupsChecked = true
-      val touchedPaths = probeRows.filter(_.getString(0) == "path")
-        .map(_.getString(1).stripPrefix(qroot).stripPrefix("/")).toSet
-      val touched = snap.files.filter(f => touchedPaths.contains(f.path))
+      val touched = filesAt(hfs, root, snap.files, probedPaths(probeRows))
       val touchedRows = relationFor(spark, table, snap.meta, touched)._1
       val joinCond = keyCols.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
       val wide = touchedRows.alias("t")
@@ -1283,11 +1302,11 @@ object TxLog {
             .withColumn("_change_type", lit("delete")))
           .unionByName(inserts.withColumn("_change_type", lit("insert")))
         // both writes read the cached working set — overlapped (§2.6)
-        val (adds, cdcFiles) = stageBoth(spark,
+        val (adds, cdcFiles, _) = stageAll(spark,
           stage(staged, table, snap.meta.partitionCols,
             bloomCols = snap.meta.bloomCols, columnMap = snap.meta.columnMap,
             optimizeLayout = true),
-          stageCdc(cdcFrame, table))
+          stageCdc(cdcFrame, table), ())
         val lines = commitInfoJson("merge") +:
           (touched.map(actionJson("remove", _)) ++ adds.map(actionJson("add", _)) ++
             cdcFiles.map((cdcJson _).tupled))
@@ -1319,6 +1338,9 @@ object TxLog {
     * frequent small deletes (GDPR erasure, late corrections) this is the
     * difference between rewriting terabytes per commit and writing
     * kilobytes: commit cost is O(matched rows), not O(touched bytes).
+    * Like every DV verb it runs one probe action and one overlapped
+    * round of staging writes (here sidecars and cdc), and takes each
+    * file's new DV size from the log — see [[dvMergeOnRead]].
     *
     * Contract mirrors Delta's:
     *  - readers subtract DV rows via the snapshot path (broadcast
@@ -1337,8 +1359,8 @@ object TxLog {
   def deleteWithDv(spark: SparkSession, table: String,
                    condition: org.apache.spark.sql.Column): MergeStats =
     dvMergeOnRead(spark, table, op = "delete")(_.filter(condition))(
-      (_, _) => None)(
-      (rows, _) => rows.withColumn("_change_type", lit("delete")))
+      _ => None)(
+      _.withColumn("_change_type", lit("delete")))
 
   /** Merge-on-read UPDATE via deletion vectors — [[deleteWithDv]]'s
     * argument applies just as hard to small updates (GDPR corrections,
@@ -1358,8 +1380,8 @@ object TxLog {
       rows.select(rows.columns.toSeq.map(c =>
         set.get(c).map(_.as(c)).getOrElse(col(c))): _*)
     dvMergeOnRead(spark, table, op = "update")(_.filter(condition))(
-      (rows, _) => Some(applied(rows)))(
-      (rows, _) => rows.withColumn("_change_type", lit("update_preimage"))
+      rows => Some(applied(rows)))(
+      rows => rows.withColumn("_change_type", lit("update_preimage"))
         .unionByName(applied(rows)
           .withColumn("_change_type", lit("update_postimage"))))
   }
@@ -1376,40 +1398,29 @@ object TxLog {
     * daily correction batch matching 0.1% of rows must not rewrite the
     * files holding them. Schema evolution is NOT supported here (a
     * widened schema must rewrite files to stay uniform — use [[merge]]
-    * with `evolveSchema`). */
+    * with `evolveSchema`).
+    *
+    * Cost: the duplicate-key gate rides the touched-file probe action,
+    * as in [[merge]]; then sidecars, appended images and cdc stage in
+    * one overlapped round. Every non-deleted source row is a new image
+    * (matched or not), so the appended files need no join; the change
+    * feed tells inserts from post-images by an anti-join against the
+    * cached matched rows — no scan of the whole table. */
   def mergeWithDv(source: DataFrame, table: String, keyCols: Seq[String],
                   deleteWhen: Option[org.apache.spark.sql.Column] = None)
                  : MergeStats = {
     val spark = source.sparkSession
-    val dupKeys = source.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > 1)
-      .select(keyCols.map(col): _*).take(3)
-    if (dupKeys.nonEmpty) throw new IllegalArgumentException(
-      s"merge source has duplicate rows for key (${keyCols.mkString(", ")}) — " +
-      s"e.g. ${dupKeys.mkString("; ")}. Collapse the source to one row per key " +
-      "before merging.")
     val srcKeys = source.select(keyCols.map(col): _*).distinct()
     def srcFor(cols: Seq[String]): DataFrame = source.select(
       cols.map(col) :+
         coalesce(deleteWhen.getOrElse(lit(false)), lit(false)).as("__del"): _*)
-    dvMergeOnRead(spark, table, op = "merge")(
+    dvMergeOnRead(spark, table, op = "merge", uniqueKeys = Some((source, keyCols)))(
       _.join(srcKeys, keyCols, "left_semi"))(
-      (rows, fullRel) => {
+      rows => Some(srcFor(rows.columns.toSeq).filter(!col("__del")).drop("__del")))(
+      rows => {
         val src = srcFor(rows.columns.toSeq)
-        // matched post-images (non-delete) + inserts, both source-valued
-        Some(src.join(rows.select(keyCols.map(col): _*).distinct(),
-            keyCols, "left_semi")
-          .filter(!col("__del")).drop("__del")
-          .unionByName(src
-            .join(fullRel.select(keyCols.map(col): _*).distinct(),
-              keyCols, "left_anti")
-            .filter(!col("__del")).drop("__del")))
-      })(
-      (rows, fullRel) => {
-        val cols = rows.columns.toSeq
-        val src = srcFor(cols)
-        val matchedSrc = src.join(
-          rows.select(keyCols.map(col): _*).distinct(), keyCols, "left_semi")
+        val hitKeys = rows.select(keyCols.map(col): _*).distinct()
+        val matchedSrc = src.join(hitKeys, keyCols, "left_semi")
         val delKeys = matchedSrc.filter(col("__del"))
           .select(keyCols.map(col): _*)
         rows.join(delKeys, keyCols, "left_anti")
@@ -1418,9 +1429,7 @@ object TxLog {
             .withColumn("_change_type", lit("update_postimage")))
           .unionByName(rows.join(delKeys, keyCols, "left_semi")
             .withColumn("_change_type", lit("delete")))
-          .unionByName(src
-            .join(fullRel.select(keyCols.map(col): _*).distinct(),
-              keyCols, "left_anti")
+          .unionByName(src.join(hitKeys, keyCols, "left_anti")
             .filter(!col("__del")).drop("__del")
             .withColumn("_change_type", lit("insert")))
       })
@@ -1429,124 +1438,116 @@ object TxLog {
   /** Shared merge-on-read kernel: `hitsOf` selects the matched rows
     * from the metadata-bearing relation (a predicate filter for
     * DELETE/UPDATE, a key semi-join for MERGE); those rows are DV'd out
-    * of their files, `postImagesOf(matched rows, full relation)`
-    * optionally appends new data files (UPDATE/MERGE images; None for
-    * DELETE), `cdcOf` stages the change feed, and everything commits
-    * atomically. The matched set is materialized once — sidecar
-    * staging, post-image staging, and cdc staging all read the cache,
-    * not three scans of the table. */
-  private def dvMergeOnRead(spark: SparkSession, table: String, op: String)(
+    * of their files, `postImagesOf(matched rows)` optionally appends new
+    * data files (UPDATE/MERGE images; None for DELETE), `cdcOf` stages
+    * the change feed, and everything commits atomically.
+    *
+    * A commit costs what a copy-on-write commit costs:
+    *  - ONE probe action collects each touched file's count of new hits
+    *    (materializing the cached matched set on the way) and, given
+    *    `uniqueKeys`, runs MERGE's duplicate-key gate in the same action;
+    *  - each file's new DV size is its logged `dvRows` plus its new hits
+    *    — disjoint sets, because the hits come from the DV-filtered
+    *    relation — so no sidecar is read back to count it;
+    *  - sidecars, post-images and cdc stage in ONE overlapped round
+    *    ([[stageAll]]), all reading the cached matched set, not the table.
+    * A file whose DV would cover every physical row drops out (removed,
+    * no sidecar written). A commit that matched nothing pays one more
+    * action to learn whether it has anything to append (a MERGE may
+    * still insert). */
+  private def dvMergeOnRead(spark: SparkSession, table: String, op: String,
+      uniqueKeys: Option[(DataFrame, Seq[String])] = None)(
       hitsOf: DataFrame => DataFrame)(
-      postImagesOf: (DataFrame, DataFrame) => Option[DataFrame])(
-      cdcOf: (DataFrame, DataFrame) => DataFrame): MergeStats = {
+      postImagesOf: DataFrame => Option[DataFrame])(
+      cdcOf: DataFrame => DataFrame): MergeStats = {
+    import spark.implicits._
     val (hfs, root) = fs(spark, table)
+    val dupProbe = uniqueKeys.map { case (src, keys) => duplicateKeyProbe(src, keys) }
+    var dupsChecked = false
+    // sidecars are keyed by an md5 of the file's STORED path: not the
+    // name (one write job reuses part-00000-<uuid> across every
+    // partition dir it touches), and a hex key needs no path escaping
+    def dvKey(stored: String): String =
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(stored.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        .map("%02x".format(_)).mkString
     var attempts = 0
     while (attempts < 10) {
       val snap = snapshot(spark, table, None).getOrElse(throw new IllegalStateException(
         s"merge-on-read op on non-existent table $table — overwrite first"))
       val cols = snap.meta.schema.fieldNames.toSeq
-      // qualified physical path -> add action (clone-safe: an absolute
-      // clone-referenced path round-trips through the same qualification)
-      val byQual = snap.files.map(f =>
-        hfs.makeQualified(new Path(root, f.path)).toString -> f).toMap
       val rel = relationFor(spark, table, snap.meta, snap.files)._1
       val hits = graft.Caching.materialize(hitsOf(rel
         .withColumn("__path", col("_metadata.file_path"))
         .withColumn("__ri", col("_metadata.row_index"))))
       try {
-        val touchedQ = hits.select("__path").distinct().collect()
-          .map(_.getString(0))
-        val touched = touchedQ.toSeq.flatMap(byQual.get)
+        val pathProbe = hits.groupBy("__path").agg(count(lit(1)).as("__n"))
+          .select(lit("path").as("__kind"), col("__path").as("__val"), col("__n"))
+        val probeRows = (if (dupsChecked) None else dupProbe)
+          .fold(pathProbe)(pathProbe.unionByName(_, allowMissingColumns = true))
+          .collect()
+        uniqueKeys.foreach { case (_, keys) => requireUniqueKeys(probeRows, keys) }
+        dupsChecked = true
+        val newHits = probeRows.filter(_.getString(0) == "path")
+          .map(r => r.getString(1) -> r.getLong(2)).toMap
+        // (touched file, its count of new hits)
+        val touched = snap.files.flatMap(f =>
+          newHits.get(metadataPath(hfs, root, f.path)).map(f -> _))
+        require(touched.size == newHits.size,
+          s"merge-on-read probe on $table hit files missing from its snapshot")
         val rows = hits.select(cols.map(col): _*)
-        val fullRel = relationFor(spark, table, snap.meta, snap.files)._1
+        val post = postImagesOf(rows)
         // no matched rows: DELETE/UPDATE are pure no-ops; a MERGE may
         // still carry inserts, which flow through the post-image path
-        if (touched.isEmpty &&
-            postImagesOf(rows, fullRel).forall(_.isEmpty))
+        if (touched.isEmpty && post.forall(_.isEmpty))
           return MergeStats(0, snap.files.size, 0)
-        // the file's new DV = outstanding DV rows ∪ freshly matched rows,
-        // keyed by an md5 of the file's STORED path. Not the name (one
-        // write job reuses part-00000-<uuid> across every partition dir it
-        // touches — name-keying would merge unrelated files' row sets) and
-        // not the raw path (a partition-dir escaper turns its %2F into
-        // %252F through the dv scan's own _metadata and never joins back).
-        import spark.implicits._
-        def dvKey(stored: String): String =
-          java.security.MessageDigest.getInstance("MD5")
-            .digest(stored.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            .map("%02x".format(_)).mkString
-        val (gone, adds) = if (touched.isEmpty) (Seq.empty[AddFile], Seq.empty[AddFile]) else {
-          val pathLookup = broadcast(
-            touched.map(f =>
-              (hfs.makeQualified(new Path(root, f.path)).toString, dvKey(f.path)))
-              .toDF("__fp", "__f"))
-          val newDel = hits.select(col("__path").as("__fp"), col("__ri").as("__dri"))
-          val allDel = dvDeletedRows(spark, hfs, root, touched) match {
-            case None => newDel
-            case Some(old) => newDel.unionByName(old)
-          }
+        // a legacy add with unknown numRecords gets one footer read —
+        // otherwise a fully-deleted legacy file would survive as a
+        // zero-logical-row husk, violating the no-empty-husk contract
+        def physicalRows(f: AddFile): Long =
+          if (f.numRecords >= 0) f.numRecords
+          else ParquetStats.readFooter(spark.sparkContext.hadoopConfiguration,
+            new Path(root, f.path))._1
+        val (gone, kept) = touched.partition { case (f, n) => f.dvRows + n >= physicalRows(f) }
+        // one sidecar per kept file: its outstanding DV rows ∪ its new
+        // hits, hash-partitioned on the file key so each key's rows land
+        // in one task and one file; returns key -> table-relative path
+        def writeSidecars(): Map[String, String] = if (kept.isEmpty) Map.empty else {
           val stagingName = s"dv-${java.util.UUID.randomUUID()}"
           val staging = new Path(root, stagingName)
-          // one sidecar parquet per data file: repartition on the file key
-          // so each partition dir gets exactly one writer/file
-          allDel.join(pathLookup, Seq("__fp"))
+          val keyOf = broadcast(kept.map { case (f, _) =>
+            (metadataPath(hfs, root, f.path), dvKey(f.path)) }.toDF("__fp", "__f"))
+          val newDel = hits.select(col("__path").as("__fp"), col("__ri").as("__dri"))
+          dvDeletedRows(spark, hfs, root, kept.map(_._1)).fold(newDel)(newDel.unionByName)
+            .join(keyOf, Seq("__fp"))
             .select(col("__f"), col("__dri").as("row_index"))
             .repartition(col("__f"))
             .sortWithinPartitions("row_index")
             .write.partitionBy("__f").mode("overwrite").parquet(staging.toString)
-          // read the staged sidecars back for exact per-file counts (tiny:
-          // O(deleted rows))
-          val counts = spark.read.parquet(staging.toString)
-            .groupBy("__f").agg(count(lit(1)).as("n")).collect()
-            .map(r => r.getString(0) -> r.getLong(1)).toMap
-          val qualifiedStaging = hfs.makeQualified(staging).toString
-          val dvFiles = mutable.Map.empty[String, String]
-          val it = hfs.listFiles(staging, true)
-          while (it.hasNext) {
-            val f = it.next().getPath
-            if (f.getName.endsWith(".parquet")) {
-              val relP = f.toString.stripPrefix(qualifiedStaging).stripPrefix("/")
-              relP.split("/").dropRight(1).foreach { seg =>
-                seg.split("=", 2) match {
-                  case Array("__f", v) =>
-                    dvFiles(ExternalCatalogUtils.unescapePathName(v)) =
-                      s"$stagingName/$relP"
-                  case _ => ()
-                }
-              }
-            }
-          }
-          // fully-deleted files are removed outright; the rest re-add with
-          // their new DV (adds overwrite by path on replay — no remove
-          // needed). A legacy add with unknown numRecords gets one footer
-          // read here — otherwise a fully-deleted legacy file would survive
-          // as a zero-logical-row husk, violating the no-empty-husk contract
-          def physicalRows(f: AddFile): Long =
-            if (f.numRecords >= 0) f.numRecords
-            else ParquetStats.readFooter(spark.sparkContext.hadoopConfiguration,
-              new Path(root, f.path))._1
-          val (g, partial) = touched.partition(f =>
-            counts.getOrElse(dvKey(f.path), 0L) >= physicalRows(f))
-          (g, partial.map(f => f.copy(
-            dvPath = Some(dvFiles(dvKey(f.path))),
-            dvRows = counts(dvKey(f.path)))))
+          parquetFilesUnder(hfs, staging).map { s =>
+            val dir = s.getPath.getParent.getName
+            dir.stripPrefix("__f=") -> s"$stagingName/$dir/${s.getPath.getName}"
+          }.toMap
         }
         // post-images (UPDATE/MERGE) are ordinary staged data files:
         // they pass the CHECK constraints, record stats/blooms, and
         // write under the table's column mapping like any other add
-        val post = postImagesOf(rows, fullRel)
         post.foreach(p =>
           requireConstraintsSatisfied(p, snap.meta.constraints, table))
-        // post-image write + cdc stage overlapped (§2.6)
-        val (newAdds, cdcFiles) = stageBoth(spark,
+        val (newAdds, cdcFiles, sidecars) = stageAll(spark,
           post.map(p => stage(p, table, snap.meta.partitionCols,
               bloomCols = snap.meta.bloomCols, columnMap = snap.meta.columnMap,
               optimizeLayout = true))
             .getOrElse(Seq.empty),
-          stageCdc(cdcOf(rows, fullRel), table))
+          stageCdc(cdcOf(rows), table),
+          writeSidecars())
+        // kept files re-add with their new DV (adds overwrite by path on
+        // replay — no remove needed); fully-deleted ones are removed
+        val dvAdds = kept.map { case (f, n) =>
+          f.copy(dvPath = Some(sidecars(dvKey(f.path))), dvRows = f.dvRows + n) }
         val lines = commitInfoJson(op) +:
-          (gone.map(actionJson("remove", _)) ++
-            (adds ++ newAdds).map(actionJson("add", _)) ++
+          (gone.map(g => actionJson("remove", g._1)) ++
+            (dvAdds ++ newAdds).map(actionJson("add", _)) ++
             cdcFiles.map((cdcJson _).tupled))
         if (tryCommit(hfs, root, snap.version, lines))
           return MergeStats(touched.size, snap.files.size, newAdds.size)
@@ -1586,7 +1587,6 @@ object TxLog {
       transform: (DataFrame, org.apache.spark.sql.Column) => DataFrame)(
       cdcOf: (DataFrame, org.apache.spark.sql.Column) => DataFrame): MergeStats = {
     val (hfs, root) = fs(spark, table)
-    val qroot = hfs.makeQualified(root).toString
     var attempts = 0
     while (attempts < 10) {
       val snap = snapshot(spark, table, None).getOrElse(throw new IllegalStateException(
@@ -1596,19 +1596,19 @@ object TxLog {
         .withColumn("__path", col("_metadata.file_path"))
         .filter(condition)
         .select("__path").distinct().collect()
-        .map(_.getString(0).stripPrefix(qroot).stripPrefix("/")).toSet
-      val touched = snap.files.filter(f => touchedPaths.contains(f.path))
+        .map(_.getString(0)).toSet
+      val touched = filesAt(hfs, root, snap.files, touchedPaths)
       if (touched.isEmpty) return MergeStats(0, snap.files.size, 0)
       val rows = relationFor(spark, table, snap.meta, touched)._1
       val rewritten = transform(rows, condition)
       requireConstraintsSatisfied(rewritten, snap.meta.constraints, table)
       // rewrite + cdc both derive from the candidate-file rows —
       // overlapped (§2.6)
-      val (adds, cdcFiles) = stageBoth(spark,
+      val (adds, cdcFiles, _) = stageAll(spark,
         stage(rewritten, table, snap.meta.partitionCols,
           bloomCols = snap.meta.bloomCols, columnMap = snap.meta.columnMap,
           optimizeLayout = true),
-        stageCdc(cdcOf(rows, condition), table))
+        stageCdc(cdcOf(rows, condition), table), ())
       val lines = commitInfoJson(op) +:
         (touched.map(actionJson("remove", _)) ++ adds.map(actionJson("add", _)) ++
           cdcFiles.map((cdcJson _).tupled))
@@ -1855,23 +1855,26 @@ object TxLog {
   }
 
   /** Deleted (file, row-index) pairs of every DV-carrying file in
-    * `files`, as a frame `(__fp: qualified data path, __dri: row index)`
-    * — None when no file carries a DV. O(Σ dvRows) rows by construction:
-    * each sidecar is a parquet of the deleted row indexes, tagged back
-    * to its data file through the sidecar's own `_metadata.file_path`
-    * and an O(files) broadcast lookup. */
+    * `files`, as a frame `(__fp: the data file's `_metadata.file_path`,
+    * __dri: row index)` — None when no file carries a DV. O(Σ dvRows)
+    * rows by construction: each sidecar is a parquet of the deleted row
+    * indexes, tagged back to its data file through the sidecar's own
+    * `_metadata.file_path` and an O(files) broadcast lookup. Sidecars
+    * are read with their known schema, so no read of a DV-carrying
+    * table launches a parquet schema-inference job. */
   private def dvDeletedRows(spark: SparkSession, hfs: FileSystem, root: Path,
       files: Seq[AddFile]): Option[DataFrame] = {
     val withDv = files.filter(_.dvPath.isDefined)
     if (withDv.isEmpty) None
     else {
       val pairs = withDv.map { f =>
-        (hfs.makeQualified(new Path(root, f.dvPath.get)).toString,
-         hfs.makeQualified(new Path(root, f.path)).toString)
+        (new Path(hfs.makeQualified(root), f.dvPath.get),
+         metadataPath(hfs, root, f.path))
       }
       import spark.implicits._
-      val lookup = pairs.toDF("__dvf", "__fp")
-      Some(spark.read.parquet(pairs.map(_._1): _*)
+      val lookup = pairs.map { case (dv, fp) => (dv.toUri.toString, fp) }
+        .toDF("__dvf", "__fp")
+      Some(spark.read.schema("row_index long").parquet(pairs.map(_._1.toString): _*)
         .select(col("_metadata.file_path").as("__dvf"),
                 col("row_index").as("__dri"))
         .join(broadcast(lookup), Seq("__dvf"))
@@ -2003,20 +2006,11 @@ object TxLog {
     partitionCols.foreach(c => require(schema.fieldNames.contains(c),
       s"partition column $c not found in inferred schema $schema"))
     val qualRoot = hfs.makeQualified(root).toString
-    val files = {
-      val out = mutable.ArrayBuffer.empty[(String, Long)]
-      val it = hfs.listFiles(root, true)
-      while (it.hasNext) {
-        val st = it.next()
-        val rel = st.getPath.toString.stripPrefix(qualRoot).stripPrefix("/")
-        // data files only: skip _SUCCESS/_metadata and dot-files anywhere
-        // in the relative path
-        if (st.getPath.getName.endsWith(".parquet") &&
-            !rel.split("/").exists(s => s.startsWith("_") || s.startsWith(".")))
-          out += ((rel, st.getLen))
-      }
-      out.toSeq
-    }
+    // data files only: skip _SUCCESS/_metadata and dot-files anywhere
+    // in the relative path
+    val files = parquetFilesUnder(hfs, root)
+      .map(st => (st.getPath.toString.stripPrefix(qualRoot).stripPrefix("/"), st.getLen))
+      .filterNot(_._1.split("/").exists(s => s.startsWith("_") || s.startsWith(".")))
     require(files.nonEmpty, s"no parquet files under $dir")
     val adds = files.map { case (rel, size) =>
       // partition values parsed from the hive-style path segments —
@@ -2334,15 +2328,10 @@ object TxLog {
   }
 
   private def snapshotAllPaths(hfs: FileSystem, root: Path): Seq[String] = {
-    val out = mutable.ArrayBuffer.empty[String]
     val qualified = hfs.makeQualified(root).toString
-    val it = hfs.listFiles(root, true)
-    while (it.hasNext) {
-      val p = it.next().getPath.toString
-      val rel = p.stripPrefix(qualified).stripPrefix("/")
-      if (!rel.startsWith(LogDir) && rel.endsWith(".parquet")) out += rel
-    }
-    out.toSeq
+    parquetFilesUnder(hfs, root)
+      .map(_.getPath.toString.stripPrefix(qualified).stripPrefix("/"))
+      .filterNot(_.startsWith(LogDir))
   }
 
   /** OPTIMIZE: rewrite the current snapshot as one file per partition in
@@ -2572,7 +2561,7 @@ object TxLog {
     val pcols = snap.meta.partitionCols
     require(pcols.nonEmpty, s"$table is not partitioned")
     (pcols, snap.files.map(f => pcols.map(c => f.partitionValues.getOrElse(c, "")))
-      .distinct.sortBy(_.mkString(" ")))
+      .distinct.sortBy(_.mkString("\u0000")))
   }
 
   /** Driver-metadata table detail (Delta's DESCRIBE DETAIL shape):
@@ -2600,6 +2589,14 @@ object TxLog {
       versionAsOf: Option[Long] = None): Seq[(String, Long)] =
     snapshot(spark, table, versionAsOf).toSeq.flatMap(_.files
       .filter(_.dvPath.isDefined).map(f => (f.path, f.dvRows)))
+
+  /** (data path, qualified DV sidecar path) per DV-carrying live file —
+    * lets specs check a logged DV size against its sidecar. */
+  private[graft] def dvSidecars(spark: SparkSession, table: String): Map[String, String] = {
+    val (hfs, root) = fs(spark, table)
+    snapshot(spark, table, None).toSeq.flatMap(_.files.flatMap(f =>
+      f.dvPath.map(p => f.path -> hfs.makeQualified(new Path(root, p)).toString))).toMap
+  }
 
   /** Live data-file paths of the current snapshot (spec observability:
     * pins that a DV delete adds no data file and rewrites none). */

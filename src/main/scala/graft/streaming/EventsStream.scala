@@ -170,7 +170,7 @@ object EventsStream {
     runStreamStreamOuterTyped(spark, events, "full_outer")
 
   /** Run two independent staging writes as overlapping Spark jobs
-    * (guide §2.6 — the TxLog.stageBoth discipline): each feed's staging
+    * (guide §2.6 — the TxLog.stageAll discipline): each feed's staging
     * is a full events scan + filtered write; sequentially the cluster
     * idles through each write's task tail twice. */
   private def stagePair(a: => Unit, b: => Unit): Unit = {
