@@ -3,9 +3,9 @@ package graft.acid
 import scala.collection.mutable
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, concat_ws, count, lit, when}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, concat_ws, count, expr, lit, when}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** One live data file of a txlog table: table-root-relative path, parsed
@@ -607,6 +607,15 @@ object TxLog {
       probed: Set[String]): Seq[AddFile] =
     files.filter(f => probed.contains(metadataPath(hfs, root, f.path)))
 
+  /** A file's physical row count. A legacy add with unknown numRecords
+    * gets one footer read — otherwise a fully-deleted legacy file would
+    * survive as a zero-logical-row husk, and a DV ratio would divide by
+    * a missing count. */
+  private def physicalRows(spark: SparkSession, root: Path, f: AddFile): Long =
+    if (f.numRecords >= 0) f.numRecords
+    else ParquetStats.readFooter(spark.sparkContext.hadoopConfiguration,
+      new Path(root, f.path))._1
+
   /** Parquet files under `dir`, by recursive `listStatus`.
     * `listFiles` builds a `LocatedFileStatus` per entry, which loads its
     * permissions — without Hadoop native IO that forks `ls -ld` once
@@ -805,33 +814,50 @@ object TxLog {
     spark.conf.getOption("spark.graft.txlog.checkpointInterval")
       .map(_.toInt).getOrElse(10)
 
-  private def retryCommit(spark: SparkSession, table: String)(
-      mkLines: Option[Snapshot] => Seq[String]): Unit = {
+  /** The one optimistic-commit loop: every TxLog writer commits through
+    * it (Delta's single `OptimisticTransaction.commit` path). Each round
+    * reads the latest snapshot (None before the first commit), runs
+    * `attempt` for the commit's actions and the verb's result, and
+    * claims the next version with [[tryCommit]]. Retry contract:
+    *  - a lost claim re-runs `attempt` on the new snapshot, up to 10
+    *    rounds, then throws one "lost N optimistic races" error;
+    *  - `attempt` must be safe to repeat: what a lost round staged stays
+    *    invisible (no log entry names it), and it releases its caches;
+    *  - an EMPTY action list means nothing to change: no commit is
+    *    written, never an empty version that churns time travel;
+    *  - an exception from `attempt` propagates without retry.
+    * Returns the committed version (None if none) and the result. Only
+    * [[retryCommit]]'s callers auto-checkpoint; the row-level verbs and
+    * file rewrites call this directly and do not. */
+  private def transact[R](spark: SparkSession, table: String, op: String)(
+      attempt: Option[Snapshot] => (Seq[String], R)): (Option[Long], R) = {
     val (hfs, root) = fs(spark, table)
     var attempts = 0
-    var committed = false
-    var version = -1L
-    while (!committed && attempts < 10) {
+    while (attempts < 10) {
       val snap = snapshot(spark, table, None)
       val expected = snap.map(_.version).getOrElse(0L)
-      val lines = mkLines(snap)
-      // a body that produces NO actions is an explicit abort: the
-      // re-examined snapshot shows nothing to change (e.g. a concurrent
-      // analyze already statted every file) — write no commit at all
-      // rather than an empty version that churns time-travel numbers
-      if (lines.isEmpty) committed = true
-      else {
-        committed = tryCommit(hfs, root, expected, lines)
-        if (committed) version = expected + 1
-      }
-      attempts += 1
+      val (lines, result) = attempt(snap)
+      if (lines.isEmpty) return (None, result)
+      if (tryCommit(hfs, root, expected, lines)) return (Some(expected + 1), result)
+      attempts += 1 // lost the race: recompute against the new snapshot
     }
-    if (!committed) throw new IllegalStateException(
-      s"txlog commit on $table lost ${attempts} optimistic races; giving up")
+    throw new IllegalStateException(
+      s"txlog $op on $table lost $attempts optimistic races; giving up")
+  }
+
+  /** The snapshot of a table that must already exist. */
+  private def existing(snap: Option[Snapshot], table: String): Snapshot =
+    snap.getOrElse(throw new IllegalStateException(s"no txlog table at $table"))
+
+  /** [[transact]] for the metadata and whole-file writers, followed by
+    * the interval checkpoint. */
+  private def retryCommit(spark: SparkSession, table: String)(
+      mkLines: Option[Snapshot] => Seq[String]): Unit = {
+    val (version, _) = transact(spark, table, "commit")(snap => (mkLines(snap), ()))
     // Delta discipline: checkpoint every N commits, so no reader ever
     // replays an unbounded history — writers pay it, amortized 1/N
     val interval = checkpointInterval(spark)
-    if (interval > 0 && version % interval == 0) checkpoint(spark, table)
+    version.foreach(v => if (interval > 0 && v % interval == 0) checkpoint(spark, table))
   }
 
   // ------------------------------------------------------------- writers
@@ -987,6 +1013,12 @@ object TxLog {
     * that partition, not the table. Optimistic like every writer here:
     * a lost commit race recomputes against the new snapshot.
     *
+    * A preset clause list on the [[mergeConditional]] kernel: the source
+    * gains a non-null `deleteWhen` flag column, then the kernel runs
+    *   - `MatchedDelete(flag)`,
+    *   - `MatchedUpdate(None, every non-key source column -> s.<col>)`,
+    *   - `NotMatchedInsert(NOT flag)`.
+    *
     * The source must be key-unique: two source rows with the same key
     * would each claim the same target row, so the result would depend on
     * join order — like Delta's MERGE, that is an error here, detected
@@ -1016,125 +1048,24 @@ object TxLog {
     * `versionAsOf` reads below it never see the new columns. Note that
     * with evolution on, EVERY extra source column becomes a table column
     * — columns meant only for `deleteWhen` to reference must be absent
-    * from the source (or evolution off) to stay ephemeral. */
+    * from the source (or evolution off) to stay ephemeral. The internal
+    * flag column never does: evolution reads the caller's schema. */
   def merge(source: DataFrame, table: String, keyCols: Seq[String],
             deleteWhen: Option[org.apache.spark.sql.Column] = None,
             evolveSchema: Boolean = false,
             commitTag: Option[String] = None): MergeStats = {
-    val spark = source.sparkSession
-    val (hfs, root) = fs(spark, table)
-    // the duplicate-key gate rides the SAME action as the touched-file
-    // probe below (one fused collect per attempt): each was a separate
-    // full action, and for incremental commits the per-action fixed
-    // cost (analyze -> optimize -> AQE stage loop -> schedule) is the
-    // dominant term, not the data (optimization r16)
-    val dupProbe = duplicateKeyProbe(source, keyCols)
-    var dupsChecked = false
-    var attempts = 0
-    while (attempts < 10) {
-      val snap = snapshot(spark, table, None).getOrElse(throw new IllegalStateException(
-        s"merge into non-existent table $table — overwrite first"))
-      // schema evolution: source-only columns append to the table schema
-      // (nullable — old rows have no value); partition columns can never
-      // arrive this way (they'd re-layout the table, which MERGE is not)
-      val extras =
-        if (!evolveSchema) Array.empty[org.apache.spark.sql.types.StructField]
-        else source.schema.fields.filterNot(f =>
-          snap.meta.schema.fieldNames.contains(f.name))
-      extras.foreach(f => requireEvolvable(snap.meta, f.name, table))
-      val meta2 =
-        if (extras.isEmpty) snap.meta
-        else snap.meta.copy(schema = org.apache.spark.sql.types.StructType(
-          snap.meta.schema.fields ++ extras.map(_.copy(nullable = true))))
-      val cols = meta2.schema.fieldNames.toSeq
-      // the source may carry EXTRA columns for the deleteWhen clause to
-      // reference (Delta's MERGE condition sees the whole source row);
-      // without evolution only the table's columns are written, and the
-      // shared ones must be compatible
-      requireCompatible(snap.meta.schema,
-        org.apache.spark.sql.types.StructType(
-          snap.meta.schema.fieldNames.toSeq
-            .map(c => source.schema(source.schema.fieldIndex(c)))), table)
-      // __del is computed BEFORE projecting the extras away; null
-      // (unmatched join side) and absent clause both mean "not a delete"
-      val src = source.select(
-        cols.map(col) :+ coalesce(deleteWhen.getOrElse(lit(false)), lit(false)).as("__del"): _*)
-      val srcKeys = src.select(keyCols.map(col): _*).distinct()
-      // file-granular match: which live files hold a matched key —
-      // fused with the duplicate-key gate on the first attempt
-      val pathProbe = relationFor(spark, table, meta2, snap.files)._1
-        .withColumn("__path", col("_metadata.file_path"))
-        .join(srcKeys, keyCols, "left_semi")
-        .select(lit("path").as("__kind"), col("__path").as("__val")).distinct()
-      val probeRows =
-        (if (dupsChecked) pathProbe else pathProbe.unionAll(dupProbe)).collect()
-      requireUniqueKeys(probeRows, keyCols)
-      dupsChecked = true
-      val touched = filesAt(hfs, root, snap.files, probedPaths(probeRows))
-      // widened meta: rewritten files materialize the new columns; the
-      // old rows they carry surface typed NULLs through the parquet read
-      val touchedRows = relationFor(spark, table, meta2, touched)._1
-      val joinCond = keyCols.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
-      // the change join and the insert anti-join each feed BOTH staged
-      // writes (data files, then cdc files) — materialized once, the
-      // touched files are read and joined once per commit instead of
-      // twice (the working set is the rewrite set, which copy-on-write
-      // materializes as new files anyway; MEMORY_AND_DISK spills)
-      val wide = graft.Caching.materialize(touchedRows.alias("t")
-        .join(src.withColumn("__m", lit(true)).alias("s"), joinCond, "left"))
-      // inserts anti-join runs against the TOUCHED files' matched keys,
-      // not the whole table: a source key present anywhere in the table
-      // is by definition in a touched file (that is how touched files
-      // are chosen), so the two sets agree — and the full-table key
-      // scan + distinct this replaces was the one remaining whole-table
-      // pass in the merge (file-granular discipline, applied to inserts)
-      val matchedKeys = wide.filter(col("s.__m").isNotNull)
-        .select(keyCols.map(k => col(s"t.$k").as(k)): _*).distinct()
-      val inserts = graft.Caching.materialize(
-        src.filter(!col("__del")).join(matchedKeys, keyCols, "left_anti")
-          .select(cols.map(col): _*))
-      try {
-        val matchedDel = col("s.__m").isNotNull && coalesce(col("s.__del"), lit(false))
-        val updated = wide
-          .filter(!matchedDel) // WHEN MATCHED AND deleteWhen THEN DELETE
-          .select(cols.map { c =>
-            if (keyCols.contains(c)) col(s"t.$c").as(c)
-            else when(col("s.__m").isNotNull, col(s"s.$c")).otherwise(col(s"t.$c")).as(c)
-          }: _*)
-        val staged = updated.unionByName(inserts)
-        requireConstraintsSatisfied(staged, snap.meta.constraints, table)
-        // change feed (Delta CDF): pre/post images of genuinely matched
-        // rows + deletes + inserts, written as cdc files the snapshot
-        // never sees
-        val matched = wide.filter(col("s.__m").isNotNull)
-        val matchedUpd = matched.filter(!coalesce(col("s.__del"), lit(false)))
-        val cdcFrame = matchedUpd
-          .select(cols.map(c => col(s"t.$c").as(c)): _*)
-          .withColumn("_change_type", lit("update_preimage"))
-          .unionByName(matchedUpd.select(cols.map { c =>
-            if (keyCols.contains(c)) col(s"t.$c").as(c) else col(s"s.$c").as(c)
-          }: _*).withColumn("_change_type", lit("update_postimage")))
-          .unionByName(matched.filter(coalesce(col("s.__del"), lit(false)))
-            .select(cols.map(c => col(s"t.$c").as(c)): _*)
-            .withColumn("_change_type", lit("delete")))
-          .unionByName(inserts.withColumn("_change_type", lit("insert")))
-        // both writes read the cached working set — overlapped (§2.6)
-        val (adds, cdcFiles, _) = stageAll(spark,
-          stage(staged, table, snap.meta.partitionCols,
-            bloomCols = snap.meta.bloomCols, columnMap = snap.meta.columnMap,
-            optimizeLayout = true),
-          stageCdc(cdcFrame, table), ())
-        val metaLine = if (meta2 eq snap.meta) Seq.empty else Seq(metaJson(meta2))
-        val lines = commitInfoJson("merge", commitTag) +: (metaLine ++
-          touched.map(actionJson("remove", _)) ++ adds.map(actionJson("add", _)) ++
-            cdcFiles.map((cdcJson _).tupled))
-        if (tryCommit(hfs, root, snap.version, lines))
-          return MergeStats(touched.size, snap.files.size, adds.size)
-      } finally { wide.unpersist(); inserts.unpersist() }
-      attempts += 1 // lost the race: recompute against the new snapshot
-    }
-    throw new IllegalStateException(
-      s"txlog merge on $table lost $attempts optimistic races; giving up")
+    import MergeClause._
+    // computed on the caller's frame, so the condition resolves against
+    // source columns only; NULL and an absent clause mean "not a delete"
+    val flagged = source.withColumn("__merge_delete",
+      coalesce(deleteWhen.getOrElse(lit(false)), lit(false)))
+    val flag = "s.__merge_delete"
+    mergeKernel(flagged, table, keyCols, Seq(
+        MatchedDelete(Some(flag)),
+        MatchedUpdate(None, source.columns.toSeq.filterNot(keyCols.contains)
+          .map(c => c -> s"s.`${c.replace("`", "``")}`").toMap),
+        NotMatchedInsert(Some(s"NOT $flag"))),
+      evolveFrom = if (evolveSchema) Some(source.schema) else None, commitTag)
   }
 
   /** Conditional multi-clause MERGE — the full Delta `MERGE INTO` clause
@@ -1158,7 +1089,17 @@ object TxLog {
     * conditions/SET exprs but are not written). One ACID commit with CDF
     * files for every row-level change. */
   def mergeConditional(source: DataFrame, table: String, keyCols: Seq[String],
-                       clauses: Seq[MergeClause]): MergeStats = {
+                       clauses: Seq[MergeClause]): MergeStats =
+    mergeKernel(source, table, keyCols, clauses, evolveFrom = None, commitTag = None)
+
+  /** The one copy-on-write MERGE kernel behind [[merge]] and
+    * [[mergeConditional]]. `evolveFrom` (schema evolution) names the
+    * schema whose extra columns widen the table — the caller's, so a
+    * helper column the wrapper adds never becomes a table column;
+    * `commitTag` rides the commit's tag channel. */
+  private def mergeKernel(source: DataFrame, table: String, keyCols: Seq[String],
+                          clauses: Seq[MergeClause], evolveFrom: Option[StructType],
+                          commitTag: Option[String]): MergeStats = {
     import MergeClause._
     val spark = source.sparkSession
     val (hfs, root) = fs(spark, table)
@@ -1169,130 +1110,123 @@ object TxLog {
     val bySrcCl = clauses.filter {
       case _: NotMatchedBySourceUpdate | _: NotMatchedBySourceDelete => true
       case _ => false }
+    // a clause's condition, and its SET (or INSERT VALUES) expressions
+    def condOf(c: MergeClause): Option[String] = c match {
+      case MatchedUpdate(cd, _) => cd; case MatchedDelete(cd) => cd
+      case NotMatchedInsert(cd, _) => cd
+      case NotMatchedBySourceUpdate(cd, _) => cd; case NotMatchedBySourceDelete(cd) => cd }
     def setOf(cl: MergeClause): Map[String, String] = cl match {
       case MatchedUpdate(_, s) => s
       case NotMatchedBySourceUpdate(_, s) => s
+      case NotMatchedInsert(_, v) => v.getOrElse(Map.empty)
       case _ => Map.empty
     }
-    clauses.foreach(c => require(
+    (matchedCl ++ bySrcCl).foreach(c => require(
       setOf(c).keySet.intersect(keyCols.toSet).isEmpty,
       s"merge clause must not update key column(s) " +
         s"${setOf(c).keySet.intersect(keyCols.toSet).mkString(", ")} — " +
         "re-keying rows mid-merge would change which rows the clauses match"))
-    // duplicate-key gate fused into the touched-file probe action, as
-    // in [[merge]] (optimization r16)
+    // the duplicate-key gate rides the SAME action as the touched-file
+    // probe below (one fused collect per attempt): each was a separate
+    // full action, and for incremental commits the per-action fixed
+    // cost (analyze -> optimize -> AQE stage loop -> schedule) is the
+    // dominant term, not the data (optimization r16)
     val dupProbe = duplicateKeyProbe(source, keyCols)
     var dupsChecked = false
     // SQL MERGE three-valued logic: a NULL condition is "not satisfied"
-    def condExpr(c: Option[String]): org.apache.spark.sql.Column =
-      coalesce(c.map(org.apache.spark.sql.functions.expr)
-        .getOrElse(lit(true)), lit(false))
-    def matchedCond(c: MergeClause): Option[String] = c match {
-      case MatchedUpdate(cd, _) => cd; case MatchedDelete(cd) => cd; case _ => None }
-    def bySrcCond(c: MergeClause): Option[String] = c match {
-      case NotMatchedBySourceUpdate(cd, _) => cd
-      case NotMatchedBySourceDelete(cd) => cd; case _ => None }
-    def inIdx(c: org.apache.spark.sql.Column, idx: Seq[Int]) =
-      if (idx.isEmpty) lit(false) else c.isin(idx: _*)
-    var attempts = 0
-    while (attempts < 10) {
-      val snap = snapshot(spark, table, None).getOrElse(throw new IllegalStateException(
+    def condExpr(c: Option[String]): Column =
+      coalesce(c.map(expr).getOrElse(lit(true)), lit(false))
+    // 1-based index of the first clause whose condition holds; 0 = none
+    def firstHolding(cl: Seq[MergeClause]): Column =
+      cl.zipWithIndex.foldRight(lit(0): Column) {
+        case ((c, i), els) => when(condExpr(condOf(c)), lit(i + 1)).otherwise(els) }
+    // value of column c: the SET expr of the clause `act` selected, else `base`
+    def chosen(cl: Seq[MergeClause], act: String, base: Column, c: String): Column =
+      cl.zipWithIndex.foldRight(base) { case ((k, i), els) =>
+        setOf(k).get(c).fold(els)(e => when(col(act) === (i + 1), expr(e)).otherwise(els)) }
+    def isDelete(c: MergeClause) = c match {
+      case _: MatchedDelete | _: NotMatchedBySourceDelete => true; case _ => false }
+    // rows whose selected matched or by-source clause deletes them (with
+    // delete = false: updates them)
+    def acting(delete: Boolean): Column = {
+      def in(act: String, cl: Seq[MergeClause]) = {
+        val ix = cl.zipWithIndex.collect { case (c, i) if isDelete(c) == delete => i + 1 }
+        if (ix.isEmpty) lit(false) else col(act).isin(ix: _*)
+      }
+      (col("__isM") && in("__mact", matchedCl)) || (!col("__isM") && in("__bact", bySrcCl))
+    }
+    transact(spark, table, "merge") { snapOpt =>
+      val snap = snapOpt.getOrElse(throw new IllegalStateException(
         s"merge into non-existent table $table — overwrite first"))
-      val cols = snap.meta.schema.fieldNames.toSeq
-      requireCompatible(snap.meta.schema,
-        org.apache.spark.sql.types.StructType(
-          cols.map(c => source.schema(source.schema.fieldIndex(c)))), table)
+      requireCompatible(snap.meta.schema, StructType(snap.meta.schema.fieldNames.toSeq
+        .map(c => source.schema(source.schema.fieldIndex(c)))), table)
+      // schema evolution: extra columns append to the table schema
+      // (nullable — old rows have no value); partition columns can never
+      // arrive this way (they'd re-layout the table, which MERGE is not)
+      val extras = evolveFrom.toSeq.flatMap(_.fields.filterNot(f =>
+        snap.meta.schema.fieldNames.contains(f.name)))
+      extras.foreach(f => requireEvolvable(snap.meta, f.name, table))
+      val meta = if (extras.isEmpty) snap.meta
+        else snap.meta.copy(schema = StructType(
+          snap.meta.schema.fields ++ extras.map(_.copy(nullable = true))))
+      val cols = meta.schema.fieldNames.toSeq
       val srcKeys = source.select(keyCols.map(col): _*).distinct()
       // file-granular candidates: matched keys always; by-source clauses
       // add files holding an UNMATCHED row satisfying some condition
       // (their conditions reference t only, so they evaluate target-side).
       // Both probes AND the duplicate-key gate ride one fused action.
-      val matchedProbe = relationFor(spark, table, snap.meta, snap.files)._1
+      val withPath = relationFor(spark, table, meta, snap.files)._1
         .withColumn("__path", col("_metadata.file_path"))
-        .join(srcKeys, keyCols, "left_semi")
-        .select(lit("path").as("__kind"), col("__path").as("__val")).distinct()
-      val bySrcProbe =
-        if (bySrcCl.isEmpty) None
-        else Some(relationFor(spark, table, snap.meta, snap.files)._1
-          .withColumn("__path", col("_metadata.file_path"))
-          .alias("t") // metadata cols resolve pre-alias; t.* post-alias
-          .join(srcKeys, keyCols, "left_anti")
-          .filter(bySrcCl.map(c => condExpr(bySrcCond(c))).reduce(_ || _))
-          .select(lit("path").as("__kind"), col("__path").as("__val")).distinct())
-      val fused = (Seq(matchedProbe) ++ bySrcProbe.toSeq ++
-        (if (dupsChecked) Nil else Seq(dupProbe))).reduce(_ unionAll _)
-      val probeRows = fused.collect()
+      def paths(rows: DataFrame) =
+        rows.select(lit("path").as("__kind"), col("__path").as("__val")).distinct()
+      val bySrcProbe = if (bySrcCl.isEmpty) Nil else Seq(paths(withPath
+        .alias("t") // metadata cols resolve pre-alias; t.* post-alias
+        .join(srcKeys, keyCols, "left_anti")
+        .filter(bySrcCl.map(c => condExpr(condOf(c))).reduce(_ || _))))
+      val probeRows = ((paths(withPath.join(srcKeys, keyCols, "left_semi")) +: bySrcProbe) ++
+        (if (dupsChecked) Nil else Seq(dupProbe))).reduce(_ unionAll _).collect()
       requireUniqueKeys(probeRows, keyCols)
       dupsChecked = true
       val touched = filesAt(hfs, root, snap.files, probedPaths(probeRows))
-      val touchedRows = relationFor(spark, table, snap.meta, touched)._1
+      // widened meta: rewritten files materialize the new columns; the
+      // old rows they carry surface typed NULLs through the parquet read
+      val touchedRows = relationFor(spark, table, meta, touched)._1
       val joinCond = keyCols.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
-      val wide = touchedRows.alias("t")
-        .join(source.withColumn("__m", lit(true)).alias("s"), joinCond, "left")
       val isM = col("s.__m").isNotNull
-      // 1-based index of the first clause whose condition holds; 0 = none
-      val mAct = matchedCl.zipWithIndex.foldRight(lit(0): org.apache.spark.sql.Column) {
-        case ((c, i), els) => when(condExpr(matchedCond(c)), lit(i + 1)).otherwise(els) }
-      val bAct = bySrcCl.zipWithIndex.foldRight(lit(0): org.apache.spark.sql.Column) {
-        case ((c, i), els) => when(condExpr(bySrcCond(c)), lit(i + 1)).otherwise(els) }
-      // one materialization feeds the data write AND the cdc write (the
-      // same double-pass fold as [[merge]]); clause indices are cheap
-      // projections on top
-      val acted = graft.Caching.materialize(wide
+      // the change join and the insert anti-join each feed BOTH staged
+      // writes (data files, then cdc files) — materialized once, the
+      // touched files are read and joined once per commit instead of
+      // twice (the working set is the rewrite set, which copy-on-write
+      // materializes as new files anyway; MEMORY_AND_DISK spills);
+      // clause indices are cheap projections on top
+      val acted = graft.Caching.materialize(touchedRows.alias("t")
+        .join(source.withColumn("__m", lit(true)).alias("s"), joinCond, "left")
         .withColumn("__isM", isM)
-        .withColumn("__mact", when(isM, mAct).otherwise(lit(0)))
-        .withColumn("__bact", when(!isM, bAct).otherwise(lit(0))))
-      val mDelIdx = matchedCl.zipWithIndex.collect { case (MatchedDelete(_), i) => i + 1 }
-      val bDelIdx = bySrcCl.zipWithIndex.collect {
-        case (NotMatchedBySourceDelete(_), i) => i + 1 }
-      val mUpdIdx = matchedCl.zipWithIndex.collect { case (MatchedUpdate(_, _), i) => i + 1 }
-      val bUpdIdx = bySrcCl.zipWithIndex.collect {
-        case (NotMatchedBySourceUpdate(_, _), i) => i + 1 }
-      val isDeleted = (col("__isM") && inIdx(col("__mact"), mDelIdx)) ||
-        (!col("__isM") && inIdx(col("__bact"), bDelIdx))
-      // final value of column c: the selected clause's SET expr, else t.c
-      def outCol(c: String): org.apache.spark.sql.Column = {
-        val mVal = matchedCl.zipWithIndex.foldRight(col(s"t.$c")) {
-          case ((MatchedUpdate(_, set), i), els) if set.contains(c) =>
-            when(col("__mact") === (i + 1),
-              org.apache.spark.sql.functions.expr(set(c))).otherwise(els)
-          case (_, els) => els }
-        val bVal = bySrcCl.zipWithIndex.foldRight(col(s"t.$c")) {
-          case ((NotMatchedBySourceUpdate(_, set), i), els) if set.contains(c) =>
-            when(col("__bact") === (i + 1),
-              org.apache.spark.sql.functions.expr(set(c))).otherwise(els)
-          case (_, els) => els }
-        when(col("__isM"), mVal).otherwise(bVal).as(c)
-      }
-      val survivors = acted.filter(!isDeleted).select(cols.map(outCol): _*)
+        .withColumn("__mact", when(isM, firstHolding(matchedCl)).otherwise(lit(0)))
+        .withColumn("__bact", when(!isM, firstHolding(bySrcCl)).otherwise(lit(0))))
+      def outCol(c: String): Column =
+        when(col("__isM"), chosen(matchedCl, "__mact", col(s"t.$c"), c))
+          .otherwise(chosen(bySrcCl, "__bact", col(s"t.$c"), c)).as(c)
+      val survivors = acted.filter(!acting(delete = true)).select(cols.map(outCol): _*)
       // inserts: unmatched source rows through the not-matched chain —
-      // anti-joined against the touched files' MATCHED keys (same
-      // file-granular argument as [[merge]]: a table-present source key
-      // is in a touched file by construction), never a full-table scan
+      // anti-joined against the TOUCHED files' matched keys, not the
+      // whole table: a source key present anywhere in the table is by
+      // definition in a touched file (that is how touched files are
+      // chosen), so the two sets agree without a full-table key scan
       val unmatched = source
         .join(acted.filter(col("__isM"))
           .select(keyCols.map(k => col(s"t.$k").as(k)): _*).distinct(),
           keyCols, "left_anti")
         .alias("s")
-      val iAct = insertCl.zipWithIndex.foldRight(lit(0): org.apache.spark.sql.Column) {
-        case ((c, i), els) => when(condExpr(c.condition), lit(i + 1)).otherwise(els) }
-      def insCol(c: String): org.apache.spark.sql.Column =
-        insertCl.zipWithIndex.foldRight(col(s"s.$c")) {
-          case ((NotMatchedInsert(_, Some(values)), i), els) if values.contains(c) =>
-            when(col("__iact") === (i + 1),
-              org.apache.spark.sql.functions.expr(values(c))).otherwise(els)
-          case (_, els) => els }
       val inserts = graft.Caching.materialize(
-        unmatched.withColumn("__iact", iAct)
+        unmatched.withColumn("__iact", firstHolding(insertCl))
           .filter(col("__iact") > 0)
-          .select(cols.map(c => insCol(c).as(c)): _*))
+          .select(cols.map(c => chosen(insertCl, "__iact", col(s"s.$c"), c).as(c)): _*))
       try {
-        val staged = survivors.unionByName(inserts)
-        requireConstraintsSatisfied(staged, snap.meta.constraints, table)
-        val updatedRows = acted.filter(
-          (col("__isM") && inIdx(col("__mact"), mUpdIdx)) ||
-          (!col("__isM") && inIdx(col("__bact"), bUpdIdx)))
-        val deletedRows = acted.filter(isDeleted)
+        // change feed (Delta CDF): pre/post images of updated rows +
+        // deletes + inserts, written as cdc files the snapshot never sees
+        val updatedRows = acted.filter(acting(delete = false))
+        val deletedRows = acted.filter(acting(delete = true))
         val cdcFrame = updatedRows
           .select(cols.map(c => col(s"t.$c").as(c)): _*)
           .withColumn("_change_type", lit("update_preimage"))
@@ -1301,22 +1235,12 @@ object TxLog {
           .unionByName(deletedRows.select(cols.map(c => col(s"t.$c").as(c)): _*)
             .withColumn("_change_type", lit("delete")))
           .unionByName(inserts.withColumn("_change_type", lit("insert")))
-        // both writes read the cached working set — overlapped (§2.6)
-        val (adds, cdcFiles, _) = stageAll(spark,
-          stage(staged, table, snap.meta.partitionCols,
-            bloomCols = snap.meta.bloomCols, columnMap = snap.meta.columnMap,
-            optimizeLayout = true),
-          stageCdc(cdcFrame, table), ())
-        val lines = commitInfoJson("merge") +:
-          (touched.map(actionJson("remove", _)) ++ adds.map(actionJson("add", _)) ++
-            cdcFiles.map((cdcJson _).tupled))
-        if (tryCommit(hfs, root, snap.version, lines))
-          return MergeStats(touched.size, snap.files.size, adds.size)
+        // both writes read the cached working set
+        copyOnWrite(snap, table, touched, survivors.unionByName(inserts), cdcFrame,
+          commitInfoJson("merge", commitTag) +:
+            (if (meta eq snap.meta) Nil else Seq(metaJson(meta))))
       } finally { acted.unpersist(); inserts.unpersist() }
-      attempts += 1 // lost the race: recompute against the new snapshot
-    }
-    throw new IllegalStateException(
-      s"txlog mergeConditional on $table lost $attempts optimistic races; giving up")
+    }._2
   }
 
   /** Copy-on-write DELETE: drop rows matching `condition`. File-granular
@@ -1471,9 +1395,8 @@ object TxLog {
       java.security.MessageDigest.getInstance("MD5")
         .digest(stored.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         .map("%02x".format(_)).mkString
-    var attempts = 0
-    while (attempts < 10) {
-      val snap = snapshot(spark, table, None).getOrElse(throw new IllegalStateException(
+    transact(spark, table, s"merge-on-read $op") { snapOpt =>
+      val snap = snapOpt.getOrElse(throw new IllegalStateException(
         s"merge-on-read op on non-existent table $table — overwrite first"))
       val cols = snap.meta.schema.fieldNames.toSeq
       val rel = relationFor(spark, table, snap.meta, snap.files)._1
@@ -1500,62 +1423,54 @@ object TxLog {
         // no matched rows: DELETE/UPDATE are pure no-ops; a MERGE may
         // still carry inserts, which flow through the post-image path
         if (touched.isEmpty && post.forall(_.isEmpty))
-          return MergeStats(0, snap.files.size, 0)
-        // a legacy add with unknown numRecords gets one footer read —
-        // otherwise a fully-deleted legacy file would survive as a
-        // zero-logical-row husk, violating the no-empty-husk contract
-        def physicalRows(f: AddFile): Long =
-          if (f.numRecords >= 0) f.numRecords
-          else ParquetStats.readFooter(spark.sparkContext.hadoopConfiguration,
-            new Path(root, f.path))._1
-        val (gone, kept) = touched.partition { case (f, n) => f.dvRows + n >= physicalRows(f) }
-        // one sidecar per kept file: its outstanding DV rows ∪ its new
-        // hits, hash-partitioned on the file key so each key's rows land
-        // in one task and one file; returns key -> table-relative path
-        def writeSidecars(): Map[String, String] = if (kept.isEmpty) Map.empty else {
-          val stagingName = s"dv-${java.util.UUID.randomUUID()}"
-          val staging = new Path(root, stagingName)
-          val keyOf = broadcast(kept.map { case (f, _) =>
-            (metadataPath(hfs, root, f.path), dvKey(f.path)) }.toDF("__fp", "__f"))
-          val newDel = hits.select(col("__path").as("__fp"), col("__ri").as("__dri"))
-          dvDeletedRows(spark, hfs, root, kept.map(_._1)).fold(newDel)(newDel.unionByName)
-            .join(keyOf, Seq("__fp"))
-            .select(col("__f"), col("__dri").as("row_index"))
-            .repartition(col("__f"))
-            .sortWithinPartitions("row_index")
-            .write.partitionBy("__f").mode("overwrite").parquet(staging.toString)
-          parquetFilesUnder(hfs, staging).map { s =>
-            val dir = s.getPath.getParent.getName
-            dir.stripPrefix("__f=") -> s"$stagingName/$dir/${s.getPath.getName}"
-          }.toMap
+          (Seq.empty, MergeStats(0, snap.files.size, 0))
+        else {
+          val (gone, kept) = touched.partition { case (f, n) =>
+            f.dvRows + n >= physicalRows(spark, root, f) }
+          // one sidecar per kept file: its outstanding DV rows ∪ its new
+          // hits, hash-partitioned on the file key so each key's rows land
+          // in one task and one file; returns key -> table-relative path
+          def writeSidecars(): Map[String, String] = if (kept.isEmpty) Map.empty else {
+            val stagingName = s"dv-${java.util.UUID.randomUUID()}"
+            val staging = new Path(root, stagingName)
+            val keyOf = broadcast(kept.map { case (f, _) =>
+              (metadataPath(hfs, root, f.path), dvKey(f.path)) }.toDF("__fp", "__f"))
+            val newDel = hits.select(col("__path").as("__fp"), col("__ri").as("__dri"))
+            dvDeletedRows(spark, hfs, root, kept.map(_._1)).fold(newDel)(newDel.unionByName)
+              .join(keyOf, Seq("__fp"))
+              .select(col("__f"), col("__dri").as("row_index"))
+              .repartition(col("__f"))
+              .sortWithinPartitions("row_index")
+              .write.partitionBy("__f").mode("overwrite").parquet(staging.toString)
+            parquetFilesUnder(hfs, staging).map { s =>
+              val dir = s.getPath.getParent.getName
+              dir.stripPrefix("__f=") -> s"$stagingName/$dir/${s.getPath.getName}"
+            }.toMap
+          }
+          // post-images (UPDATE/MERGE) are ordinary staged data files:
+          // they pass the CHECK constraints, record stats/blooms, and
+          // write under the table's column mapping like any other add
+          post.foreach(p =>
+            requireConstraintsSatisfied(p, snap.meta.constraints, table))
+          val (newAdds, cdcFiles, sidecars) = stageAll(spark,
+            post.map(p => stage(p, table, snap.meta.partitionCols,
+                bloomCols = snap.meta.bloomCols, columnMap = snap.meta.columnMap,
+                optimizeLayout = true))
+              .getOrElse(Seq.empty),
+            stageCdc(cdcOf(rows), table),
+            writeSidecars())
+          // kept files re-add with their new DV (adds overwrite by path on
+          // replay — no remove needed); fully-deleted ones are removed
+          val dvAdds = kept.map { case (f, n) =>
+            f.copy(dvPath = Some(sidecars(dvKey(f.path))), dvRows = f.dvRows + n) }
+          (commitInfoJson(op) +:
+            (gone.map(g => actionJson("remove", g._1)) ++
+              (dvAdds ++ newAdds).map(actionJson("add", _)) ++
+              cdcFiles.map((cdcJson _).tupled)),
+            MergeStats(touched.size, snap.files.size, newAdds.size))
         }
-        // post-images (UPDATE/MERGE) are ordinary staged data files:
-        // they pass the CHECK constraints, record stats/blooms, and
-        // write under the table's column mapping like any other add
-        post.foreach(p =>
-          requireConstraintsSatisfied(p, snap.meta.constraints, table))
-        val (newAdds, cdcFiles, sidecars) = stageAll(spark,
-          post.map(p => stage(p, table, snap.meta.partitionCols,
-              bloomCols = snap.meta.bloomCols, columnMap = snap.meta.columnMap,
-              optimizeLayout = true))
-            .getOrElse(Seq.empty),
-          stageCdc(cdcOf(rows), table),
-          writeSidecars())
-        // kept files re-add with their new DV (adds overwrite by path on
-        // replay — no remove needed); fully-deleted ones are removed
-        val dvAdds = kept.map { case (f, n) =>
-          f.copy(dvPath = Some(sidecars(dvKey(f.path))), dvRows = f.dvRows + n) }
-        val lines = commitInfoJson(op) +:
-          (gone.map(g => actionJson("remove", g._1)) ++
-            (dvAdds ++ newAdds).map(actionJson("add", _)) ++
-            cdcFiles.map((cdcJson _).tupled))
-        if (tryCommit(hfs, root, snap.version, lines))
-          return MergeStats(touched.size, snap.files.size, newAdds.size)
       } finally hits.unpersist()
-      attempts += 1
-    }
-    throw new IllegalStateException(
-      s"txlog merge-on-read $op on $table lost $attempts optimistic races; giving up")
+    }._2
   }
 
   /** Copy-on-write UPDATE: `SET col = expr` on rows matching `condition`.
@@ -1587,9 +1502,8 @@ object TxLog {
       transform: (DataFrame, org.apache.spark.sql.Column) => DataFrame)(
       cdcOf: (DataFrame, org.apache.spark.sql.Column) => DataFrame): MergeStats = {
     val (hfs, root) = fs(spark, table)
-    var attempts = 0
-    while (attempts < 10) {
-      val snap = snapshot(spark, table, None).getOrElse(throw new IllegalStateException(
+    transact(spark, table, "row-level op") { snapOpt =>
+      val snap = snapOpt.getOrElse(throw new IllegalStateException(
         s"row-level op on non-existent table $table — overwrite first"))
       // file-granular candidates: which files may hold a matching row
       val touchedPaths = relationFor(spark, table, snap.meta, snap.files)._1
@@ -1598,26 +1512,30 @@ object TxLog {
         .select("__path").distinct().collect()
         .map(_.getString(0)).toSet
       val touched = filesAt(hfs, root, snap.files, touchedPaths)
-      if (touched.isEmpty) return MergeStats(0, snap.files.size, 0)
-      val rows = relationFor(spark, table, snap.meta, touched)._1
-      val rewritten = transform(rows, condition)
-      requireConstraintsSatisfied(rewritten, snap.meta.constraints, table)
-      // rewrite + cdc both derive from the candidate-file rows —
-      // overlapped (§2.6)
-      val (adds, cdcFiles, _) = stageAll(spark,
-        stage(rewritten, table, snap.meta.partitionCols,
-          bloomCols = snap.meta.bloomCols, columnMap = snap.meta.columnMap,
-          optimizeLayout = true),
-        stageCdc(cdcOf(rows, condition), table), ())
-      val lines = commitInfoJson(op) +:
-        (touched.map(actionJson("remove", _)) ++ adds.map(actionJson("add", _)) ++
-          cdcFiles.map((cdcJson _).tupled))
-      if (tryCommit(hfs, root, snap.version, lines))
-        return MergeStats(touched.size, snap.files.size, adds.size)
-      attempts += 1
-    }
-    throw new IllegalStateException(
-      s"txlog row-level op on $table lost $attempts optimistic races; giving up")
+      if (touched.isEmpty) (Seq.empty, MergeStats(0, snap.files.size, 0))
+      else {
+        // rewrite + cdc both derive from the candidate-file rows
+        val rows = relationFor(spark, table, snap.meta, touched)._1
+        copyOnWrite(snap, table, touched, transform(rows, condition),
+          cdcOf(rows, condition), Seq(commitInfoJson(op)))
+      }
+    }._2
+  }
+
+  /** The commit of the copy-on-write verbs ([[mergeKernel]],
+    * [[rewriteWhere]]): `rewritten` must pass the CHECK constraints; it
+    * and its change feed `cdc` stage in one overlapped round (§2.6);
+    * the actions are `head`, removes of `touched`, adds, and cdc files. */
+  private def copyOnWrite(snap: Snapshot, table: String, touched: Seq[AddFile],
+      rewritten: DataFrame, cdc: DataFrame, head: Seq[String]): (Seq[String], MergeStats) = {
+    requireConstraintsSatisfied(rewritten, snap.meta.constraints, table)
+    val (adds, cdcFiles, _) = stageAll(rewritten.sparkSession,
+      stage(rewritten, table, snap.meta.partitionCols,
+        bloomCols = snap.meta.bloomCols, columnMap = snap.meta.columnMap,
+        optimizeLayout = true),
+      stageCdc(cdc, table), ())
+    (head ++ touched.map(actionJson("remove", _)) ++ adds.map(actionJson("add", _)) ++
+      cdcFiles.map((cdcJson _).tupled), MergeStats(touched.size, snap.files.size, adds.size))
   }
 
   /** CHECK-constraint enforcement (Delta `ALTER TABLE ADD CONSTRAINT`):
@@ -1639,8 +1557,7 @@ object TxLog {
                          name: String, predicateSql: String): Unit = {
     val (hfs, root) = fs(spark, table)
     retryCommit(spark, table) { snapOpt =>
-      val snap = snapOpt.getOrElse(throw new IllegalStateException(
-        s"no txlog table at $table"))
+      val snap = existing(snapOpt, table)
       requireConstraintsSatisfied(
         relationFor(spark, table, snap.meta, snap.files)._1,
         Map(name -> predicateSql), table)
@@ -1659,8 +1576,7 @@ object TxLog {
     * `optimize` to index them. One metadata commit. */
   def setBloomFilter(spark: SparkSession, table: String, cols: Seq[String]): Unit =
     retryCommit(spark, table) { snapOpt =>
-      val snap = snapOpt.getOrElse(throw new IllegalStateException(
-        s"no txlog table at $table"))
+      val snap = existing(snapOpt, table)
       cols.foreach(c => require(snap.meta.schema.fieldNames.contains(c),
         s"bloom column $c is not a column of $table"))
       Seq(commitInfoJson("setBloomFilter"),
@@ -1669,8 +1585,7 @@ object TxLog {
 
   def dropCheckConstraint(spark: SparkSession, table: String, name: String): Unit =
     retryCommit(spark, table) { snapOpt =>
-      val snap = snapOpt.getOrElse(throw new IllegalStateException(
-        s"no txlog table at $table"))
+      val snap = existing(snapOpt, table)
       Seq(commitInfoJson("dropConstraint"),
         metaJson(snap.meta.copy(constraints = snap.meta.constraints - name)))
     }
@@ -1686,8 +1601,7 @@ object TxLog {
   def renameColumn(spark: SparkSession, table: String,
                    oldName: String, newName: String): Unit =
     retryCommit(spark, table) { snapOpt =>
-      val snap = snapOpt.getOrElse(throw new IllegalStateException(
-        s"no txlog table at $table"))
+      val snap = existing(snapOpt, table)
       val m = snap.meta
       require(m.schema.fieldNames.contains(oldName),
         s"no column `$oldName` in $table")
@@ -1730,8 +1644,7 @@ object TxLog {
   def addColumn(spark: SparkSession, table: String, name: String,
                 dataType: org.apache.spark.sql.types.DataType): Unit =
     retryCommit(spark, table) { snapOpt =>
-      val snap = snapOpt.getOrElse(throw new IllegalStateException(
-        s"no txlog table at $table"))
+      val snap = existing(snapOpt, table)
       val m = snap.meta
       require(!m.schema.fieldNames.exists(_.equalsIgnoreCase(name)),
         s"column `$name` already exists in $table")
@@ -1747,8 +1660,7 @@ object TxLog {
     * later schema evolution cannot resurrect stale values under it. */
   def dropColumn(spark: SparkSession, table: String, name: String): Unit =
     retryCommit(spark, table) { snapOpt =>
-      val snap = snapOpt.getOrElse(throw new IllegalStateException(
-        s"no txlog table at $table"))
+      val snap = existing(snapOpt, table)
       val m = snap.meta
       require(m.schema.fieldNames.contains(name), s"no column `$name` in $table")
       require(!m.partitionCols.contains(name),
@@ -1775,9 +1687,7 @@ object TxLog {
   // ------------------------------------------------------------- readers
 
   def currentVersion(spark: SparkSession, table: String): Long =
-    snapshot(spark, table, None)
-      .getOrElse(throw new IllegalStateException(s"no txlog table at $table"))
-      .version
+    existing(snapshot(spark, table, None), table).version
 
   /** Whether a txlog table exists at `table` (any committed version). */
   def exists(spark: SparkSession, table: String): Boolean =
@@ -1849,8 +1759,7 @@ object TxLog {
     * data-skipping observability hook. */
   private[graft] def readWithSkipInfo(spark: SparkSession, table: String,
       versionAsOf: Option[Long] = None): (DataFrame, TxLogFileIndex) = {
-    val snap = snapshot(spark, table, versionAsOf)
-      .getOrElse(throw new IllegalStateException(s"no txlog table at $table"))
+    val snap = existing(snapshot(spark, table, versionAsOf), table)
     relationFor(spark, table, snap.meta, snap.files)
   }
 
@@ -1934,8 +1843,7 @@ object TxLog {
     * horizon fails at read time: vacuum physically deleted those files. */
   def restore(spark: SparkSession, table: String, version: Long): Unit =
     retryCommit(spark, table) { snapOpt =>
-      val snap = snapOpt.getOrElse(throw new IllegalStateException(
-        s"no txlog table at $table"))
+      val snap = existing(snapOpt, table)
       val target = snapshot(spark, table, Some(version)).getOrElse(
         throw new IllegalStateException(s"version $version not found in $table"))
       val tgt = target.files.map(_.path).toSet
@@ -2051,13 +1959,11 @@ object TxLog {
     // of a table with no min/max-eligible columns keeps empty minValues
     // forever, and testing emptiness would re-analyze (and re-commit) it
     // on every call — the exact churn this guard exists to prevent.
-    val pre = snapshot(spark, table, None).getOrElse(
-      throw new IllegalStateException(s"no txlog table at $table"))
+    val pre = existing(snapshot(spark, table, None), table)
     if (!pre.files.exists(_.numRecords < 0)) return 0
     var updated = 0
     retryCommit(spark, table) { snapOpt =>
-      val snap = snapOpt.getOrElse(throw new IllegalStateException(
-        s"no txlog table at $table"))
+      val snap = existing(snapOpt, table)
       val (hfs, root) = fs(spark, table)
       val qualRoot = hfs.makeQualified(root).toString
       val stale = snap.files.filter(_.numRecords < 0)
@@ -2178,8 +2084,7 @@ object TxLog {
     }
     frames.reduceOption(_.unionByName(_, allowMissingColumns = true)).getOrElse {
       import org.apache.spark.sql.types.{LongType, StringType, StructField}
-      val cur = snapshot(spark, table, None).getOrElse(
-        throw new IllegalStateException(s"no txlog table at $table")).meta.schema
+      val cur = existing(snapshot(spark, table, None), table).meta.schema
       spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
         StructType(cur.fields :+ StructField("_change_type", StringType) :+
           StructField("_commit_version", LongType)))
@@ -2354,8 +2259,7 @@ object TxLog {
                zorderBy: Seq[String] = Seq.empty): Unit = {
     require(clusterBy.isEmpty || zorderBy.isEmpty,
       "clusterBy and zorderBy are mutually exclusive")
-    val snap = snapshot(spark, table, None)
-      .getOrElse(throw new IllegalStateException(s"no txlog table at $table"))
+    val snap = existing(snapshot(spark, table, None), table)
     val current = read(spark, table)
     val pcols = snap.meta.partitionCols
     if (zorderBy.nonEmpty) {
@@ -2403,39 +2307,25 @@ object TxLog {
                          spec: Map[String, String],
                          zorderBy: Seq[String] = Seq.empty): MergeStats = {
     require(spec.nonEmpty, "optimizePartitions needs a partition predicate")
-    val (hfs, root) = fs(spark, table)
-    var attempts = 0
-    while (attempts < 10) {
-      val snap = snapshot(spark, table, None).getOrElse(
-        throw new IllegalStateException(s"no txlog table at $table"))
+    rewriteFiles(spark, table, "optimizePartitions") { snap =>
       val pcols = snap.meta.partitionCols
       require(pcols.nonEmpty, s"$table is not partitioned")
       spec.keys.foreach(k => require(pcols.contains(k),
         s"OPTIMIZE WHERE column `$k` is not a partition column of $table " +
           s"(${pcols.mkString(", ")}) — a data-column predicate cannot " +
           "bound a rewrite to whole partitions"))
-      val matched = snap.files.filter(f =>
+      snap.files.filter(f =>
         spec.forall { case (k, v) => f.partitionValues.get(k).contains(v) })
-      if (matched.isEmpty) return MergeStats(0, snap.files.size, 0)
-      val rows = relationFor(spark, table, snap.meta, matched)._1
-      val shaped =
+    } { (rows, _, pcols) =>
+      Some(
         if (zorderBy.nonEmpty)
           // same layout contract as table-wide optimize: one file per
           // partition dir, Morton-ordered rows inside it
           ZOrder.withZValue(rows, zorderBy)
             .repartition(pcols.map(col): _*)
             .sortWithinPartitions((pcols :+ "__z").map(col): _*).drop("__z")
-        else rows.repartition(pcols.map(col): _*)
-      val adds = stage(shaped, table, pcols, rearrange = false,
-        bloomCols = snap.meta.bloomCols, columnMap = snap.meta.columnMap)
-      val lines = commitInfoJson("optimize") +:
-        (matched.map(actionJson("remove", _)) ++ adds.map(actionJson("add", _)))
-      if (tryCommit(hfs, root, snap.version, lines))
-        return MergeStats(matched.size, snap.files.size, adds.size)
-      attempts += 1
+        else rows.repartition(pcols.map(col): _*))
     }
-    throw new IllegalStateException(
-      s"txlog optimizePartitions on $table lost $attempts optimistic races; giving up")
   }
 
   /** DV-aware OPTIMIZE: rewrite ONLY the files whose outstanding
@@ -2454,33 +2344,13 @@ object TxLog {
                  maxDvRatio: Double): MergeStats = {
     require(maxDvRatio >= 0.0 && maxDvRatio < 1.0,
       s"maxDvRatio must be in [0, 1), got $maxDvRatio")
-    val (hfs, root) = fs(spark, table)
-    var attempts = 0
-    while (attempts < 10) {
-      val snap = snapshot(spark, table, None).getOrElse(
-        throw new IllegalStateException(s"no txlog table at $table"))
-      def physicalRows(f: AddFile): Long =
-        if (f.numRecords >= 0) f.numRecords
-        else ParquetStats.readFooter(spark.sparkContext.hadoopConfiguration,
-          new Path(root, f.path))._1
-      val heavy = snap.files.filter(f => f.dvPath.isDefined && {
-        val phys = physicalRows(f)
-        phys > 0 && f.dvRows.toDouble / phys > maxDvRatio
-      })
-      if (heavy.isEmpty) return MergeStats(0, snap.files.size, 0)
-      // read the heavy files THROUGH their DV subtraction and re-stage
-      // them DV-free — the live rows are identical before and after
-      val rows = relationFor(spark, table, snap.meta, heavy)._1
-      val adds = stage(rows, table, snap.meta.partitionCols,
-        bloomCols = snap.meta.bloomCols, columnMap = snap.meta.columnMap)
-      val lines = commitInfoJson("optimize") +:
-        (heavy.map(actionJson("remove", _)) ++ adds.map(actionJson("add", _)))
-      if (tryCommit(hfs, root, snap.version, lines))
-        return MergeStats(heavy.size, snap.files.size, adds.size)
-      attempts += 1
-    }
-    throw new IllegalStateException(
-      s"txlog optimizeDv on $table lost $attempts optimistic races; giving up")
+    val root = fs(spark, table)._2
+    // the heavy files read THROUGH their DV subtraction and re-stage
+    // DV-free — the live rows are identical before and after
+    rewriteFiles(spark, table, "optimizeDv")(_.files.filter(f => f.dvPath.isDefined && {
+      val phys = physicalRows(spark, root, f)
+      phys > 0 && f.dvRows.toDouble / phys > maxDvRatio
+    }))((_, _, _) => None)
   }
 
   /** AUTO-COMPACTION unit (round 13 — the Delta auto-compaction shape a
@@ -2504,35 +2374,46 @@ object TxLog {
                         maxFileBytes: Long = 32L * 1024 * 1024,
                         minSmallFiles: Int = 4): MergeStats = {
     require(maxFileBytes > 0, s"maxFileBytes must be > 0, got $maxFileBytes")
-    val (hfs, root) = fs(spark, table)
-    var attempts = 0
-    while (attempts < 10) {
-      val snap = snapshot(spark, table, None).getOrElse(
-        throw new IllegalStateException(s"no txlog table at $table"))
+    rewriteFiles(spark, table, "compactSmallFiles") { snap =>
       val small = snap.files.filter(f => f.size >= 0 && f.size < maxFileBytes)
-      if (small.size < math.max(minSmallFiles, 2))
-        return MergeStats(0, snap.files.size, 0)
-      val rows = relationFor(spark, table, snap.meta, small)._1
-      val adds =
-        if (snap.meta.partitionCols.nonEmpty)
-          stage(rows, table, snap.meta.partitionCols,
-            bloomCols = snap.meta.bloomCols, columnMap = snap.meta.columnMap)
-        else {
-          val totalBytes = small.map(f => math.max(f.size, 0L)).sum
-          val nOut = math.max(1L,
-            (totalBytes + 4 * maxFileBytes - 1) / (4 * maxFileBytes)).toInt
-          stage(rows.coalesce(nOut), table, Seq.empty, rearrange = false,
-            bloomCols = snap.meta.bloomCols, columnMap = snap.meta.columnMap)
-        }
-      val lines = commitInfoJson("optimize") +:
-        (small.map(actionJson("remove", _)) ++ adds.map(actionJson("add", _)))
-      if (tryCommit(hfs, root, snap.version, lines))
-        return MergeStats(small.size, snap.files.size, adds.size)
-      attempts += 1
+      if (small.size < math.max(minSmallFiles, 2)) Seq.empty else small
+    } { (rows, small, pcols) =>
+      if (pcols.nonEmpty) None
+      else {
+        val totalBytes = small.map(f => math.max(f.size, 0L)).sum
+        Some(rows.coalesce(math.max(1L,
+          (totalBytes + 4 * maxFileBytes - 1) / (4 * maxFileBytes)).toInt))
+      }
     }
-    throw new IllegalStateException(
-      s"txlog compactSmallFiles on $table lost $attempts optimistic races; giving up")
   }
+
+  /** The one body of the file-set rewrites ([[optimizePartitions]],
+    * [[optimizeDv]], [[compactSmallFiles]]), inside one [[transact]]:
+    * `choose` picks live files from the snapshot (none: nothing
+    * qualifies, so no commit), their rows are read THROUGH any DV
+    * filter, `shape(rows, chosen, partition columns)` lays them out —
+    * None keeps [[stage]]'s own per-partition rebalance, Some is a
+    * caller-arranged frame staged as is — and one `optimize` commit
+    * removes the chosen files and adds their rewrites. `op` names the
+    * verb in the lost-races error. */
+  private def rewriteFiles(spark: SparkSession, table: String, op: String)(
+      choose: Snapshot => Seq[AddFile])(
+      shape: (DataFrame, Seq[AddFile], Seq[String]) => Option[DataFrame]): MergeStats =
+    transact(spark, table, op) { snapOpt =>
+      val snap = existing(snapOpt, table)
+      val chosen = choose(snap)
+      if (chosen.isEmpty) (Seq.empty, MergeStats(0, snap.files.size, 0))
+      else {
+        val rows = relationFor(spark, table, snap.meta, chosen)._1
+        val shaped = shape(rows, chosen, snap.meta.partitionCols)
+        val adds = stage(shaped.getOrElse(rows), table, snap.meta.partitionCols,
+          rearrange = shaped.isEmpty,
+          bloomCols = snap.meta.bloomCols, columnMap = snap.meta.columnMap)
+        (commitInfoJson("optimize") +:
+          (chosen.map(actionJson("remove", _)) ++ adds.map(actionJson("add", _))),
+          MergeStats(chosen.size, snap.files.size, adds.size))
+      }
+    }._2
 
   /** The table's declared partition columns (SQL front-door overwrite
     * needs them to re-stage with the existing layout). */
@@ -2556,8 +2437,7 @@ object TxLog {
     * PARTITIONS shape: O(partitions) driver rows, zero data I/O). */
   private[graft] def partitionInventory(spark: SparkSession, table: String)
       : (Seq[String], Seq[Seq[String]]) = {
-    val snap = snapshot(spark, table, None).getOrElse(
-      throw new IllegalStateException(s"no txlog table at $table"))
+    val snap = existing(snapshot(spark, table, None), table)
     val pcols = snap.meta.partitionCols
     require(pcols.nonEmpty, s"$table is not partitioned")
     (pcols, snap.files.map(f => pcols.map(c => f.partitionValues.getOrElse(c, "")))
@@ -2568,8 +2448,7 @@ object TxLog {
     * (version, numFiles, sizeInBytes, partitionColumns, numDvRows). */
   private[graft] def detail(spark: SparkSession, table: String)
       : (Long, Long, Long, Seq[String], Long) = {
-    val snap = snapshot(spark, table, None).getOrElse(
-      throw new IllegalStateException(s"no txlog table at $table"))
+    val snap = existing(snapshot(spark, table, None), table)
     (snap.version, snap.files.size.toLong,
       snap.files.map(f => math.max(0L, f.size)).sum,
       snap.meta.partitionCols, snap.files.map(_.dvRows).sum)
@@ -2634,8 +2513,7 @@ object TxLog {
     * version; concurrent checkpointers race benignly (same content).
     * Returns the checkpointed version. */
   def checkpoint(spark: SparkSession, table: String): Long = {
-    val snap = snapshot(spark, table, None)
-      .getOrElse(throw new IllegalStateException(s"no txlog table at $table"))
+    val snap = existing(snapshot(spark, table, None), table)
     val (hfs, root) = fs(spark, table)
     val target = new Path(new Path(root, LogDir),
       f"${snap.version}%020d$CheckpointSuffix")
@@ -2654,13 +2532,10 @@ object TxLog {
 
   /** Fold the whole log into one equivalent commit (checkpoint analogue):
     * replay cost returns to O(live files) after many small commits. */
-  def compactLog(spark: SparkSession, table: String): Unit = {
-    val snap = snapshot(spark, table, None)
-      .getOrElse(throw new IllegalStateException(s"no txlog table at $table"))
-    val (hfs, root) = fs(spark, table)
-    val lines = commitInfoJson("compactLog") +: metaJson(snap.meta) +:
-      snap.files.map(actionJson("add", _))
-    if (!tryCommit(hfs, root, snap.version, lines))
-      throw new IllegalStateException(s"compactLog lost a race on $table")
-  }
+  def compactLog(spark: SparkSession, table: String): Unit =
+    transact(spark, table, "compactLog") { snapOpt =>
+      val snap = existing(snapOpt, table)
+      (commitInfoJson("compactLog") +: metaJson(snap.meta) +:
+        snap.files.map(actionJson("add", _)), ())
+    }
 }

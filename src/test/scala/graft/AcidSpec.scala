@@ -280,6 +280,31 @@ class AcidSpec extends SparkSpec {
     TxLog.merge(source, t2, Seq("id"))
     assert(TxLog.read(spark, t2).schema.fieldNames.toSeq ==
       Seq("fleet", "id", "amt"))
+    // with deleteWhen in the same commit: a delete-marked matched row is
+    // deleted, a delete-marked unmatched row is not inserted, and the
+    // table gains only the source's new column — no internal helper
+    val t3 = tmp()
+    TxLog.overwrite(base, t3, Seq("fleet"))
+    val marked = source.unionByName(Seq(
+      ("a", 1L, 0.0, "purge"),  // matched and marked: deleted
+      ("b", 8L, 0.0, "purge"))  // unmatched and marked: not inserted
+      .toDF("fleet", "id", "amt", "reason"))
+    val st3 = TxLog.merge(marked, t3, Seq("id"),
+      deleteWhen = Some(col("reason") === "purge"), evolveSchema = true)
+    assert(st3.filesRewritten == 1 && st3.filesTotalBefore == 2)
+    val cur3 = TxLog.read(spark, t3)
+    assert(cur3.schema.fieldNames.toSeq == Seq("fleet", "id", "amt", "reason"))
+    assert(rows(cur3) == Set(
+      Seq("a", 2L, 99.0, "audit"), Seq("b", 3L, 30.0, null),
+      Seq("b", 4L, 40.0, null), Seq("b", 9L, 90.0, "late")))
+    val feed = TxLog.readChangeFeed(spark, t3, 2L)
+      .select("fleet", "id", "amt", "reason", "_change_type", "_commit_version")
+      .collect().map(_.toSeq).toSeq
+    assert(feed.sortBy(_.mkString("|")) == Seq(
+      Seq("a", 1L, 10.0, null, "delete", 2L),
+      Seq("a", 2L, 20.0, null, "update_preimage", 2L),
+      Seq("a", 2L, 99.0, "audit", "update_postimage", 2L),
+      Seq("b", 9L, 90.0, "late", "insert", 2L)))
   }
 
   test("delete/update rewrite only files that hold matching rows") {
@@ -408,6 +433,51 @@ class AcidSpec extends SparkSpec {
     assert(TxLog.currentVersion(spark, t) == 5L, "one commit per writer")
     assert(rows(TxLog.read(spark, t).select("id")).flatten.toSet ==
       Set(0L, 1L, 2L, 3L, 4L))
+
+    // row-level writers racing on ONE file: every one of them rewrites
+    // or re-adds it, so all but the first claim lose and must recompute
+    // against the winner's snapshot. Disjoint keys make the serial
+    // outcome independent of the order the retries land in.
+    import graft.acid.MergeClause._
+    val r = tmp()
+    TxLog.overwrite((1L to 8L).map(i => (i, i.toDouble)).toDF("id", "amt").coalesce(1), r)
+    assert(TxLog.fileCount(spark, r) == 1)
+    // staging scopes a session conf per write; concurrent commits in one
+    // session can leave it set, so restore it for the specs that follow
+    val sizingKey = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
+    val sizingPrior = spark.conf.getOption(sizingKey)
+    val rowLevel: Seq[() => Unit] = Seq(
+      () => TxLog.merge(Seq((1L, 100.0), (11L, 11.0)).toDF("id", "amt"), r, Seq("id")),
+      () => TxLog.mergeConditional(Seq((2L, 200.0), (12L, 12.0)).toDF("id", "amt"), r,
+        Seq("id"), Seq(MatchedUpdate(None, Map("amt" -> "s.amt")), NotMatchedInsert(None))),
+      () => TxLog.update(spark, r, col("id") === 3L, Map("amt" -> lit(300.0))),
+      () => TxLog.deleteWithDv(spark, r, col("id") === 4L))
+    // three log compactions race each other as well: each claim is
+    // a few milliseconds after its snapshot read, so they collide
+    val writers = rowLevel ++ Seq.fill(3)(() => TxLog.compactLog(spark, r))
+    // one thread per writer, released together
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(writers.size)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val racing = writers.map(w => Future { start.await(); w() }(
+      scala.concurrent.ExecutionContext.fromExecutor(pool)))
+    start.countDown()
+    try Await.result(Future.sequence(racing), 300.seconds)
+    finally {
+      pool.shutdown()
+      sizingPrior match {
+        case Some(v) => spark.conf.set(sizingKey, v)
+        case None => spark.conf.unset(sizingKey)
+      }
+    }
+    assert(TxLog.currentVersion(spark, r) == 1L + writers.size, "one commit per writer")
+    val model = (1L to 8L).map(i => i -> i.toDouble).toMap - 4L ++
+      Map(1L -> 100.0, 11L -> 11.0, 2L -> 200.0, 12L -> 12.0, 3L -> 300.0)
+    val got = TxLog.read(spark, r).collect().map(x => x.getLong(0) -> x.getDouble(1))
+    assert(got.length == model.size && got.toMap == model)
+    // each row-level attempt stages one change-feed dir before it
+    // claims; more dirs than row-level commits means some retried
+    assert(new java.io.File(r).list().count(_.startsWith("cdc-")) > rowLevel.size,
+      "no row-level writer lost a race")
   }
 
   test("crashed staging writes are invisible to readers") {
