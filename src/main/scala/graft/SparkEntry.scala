@@ -2621,7 +2621,7 @@ object SparkEntry {
     * backlog — at 100 TB, an unbounded batch). `bounded_catchup` pins
     * the batch count; `resume_no_replay` still pins exact row counts. */
   def streamTable(s: SparkSession, dir: String): DataFrame = {
-    val path = tempDir("gstbl"); val ckpt = tempDir("gstblck")
+    val path = tempDir("gstbl")
     val consumer = consumerSlim(s, dir)
     val parts = Seq("trip_type", "trip_year", "trip_month")
     graft.acid.TxLog.overwrite(consumer, path, parts)            // v1
@@ -2635,44 +2635,34 @@ object SparkEntry {
     graft.acid.TxLog.merge(
       corrections.unionByName(arrivals), path, Seq("event_id"))  // v2
     val name = s"graft_gstbl_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    // StateSizing like the stateful runners in graft.streaming
+    // data-sized state like the stateful runners in graft.streaming
     // (optimization r16): the complete-mode aggregate commits every
     // state partition on every micro-batch; the aggregate content and
     // both probe booleans (row counts, checkpoint batch ids) are
     // independent of the shuffle partition count. Both runs share one
     // checkpoint, so both wrap identically (the restored run re-reads
     // the pinned count from the offset log either way).
-    def run(): Long = graft.streaming.StateSizing.withStatePartitions(s, 10000L) {
-      val q = s.readStream.format("graft-table")
+    val stream = new graft.streaming.ScratchStream(s, "gstblck")
+    def run(): Long = stream.run(
+      s.readStream.format("graft-table")
         .option("path", path).option("startVersion", "2")
         .option("maxCommitsPerTrigger", "1").load()
         .groupBy("_commit_version", "_change_type")
         .agg(count(lit(1)).as("n_rows"),
              round(sum(col("total_amount")), 2).as("total"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName(name).option("checkpointLocation", ckpt).start()
-      try { q.processAllAvailable(); q.recentProgress.map(_.numInputRows).sum }
-      finally q.stop()
-    }
+        .writeStream.outputMode("complete").format("memory").queryName(name),
+      stateRows = Some(10000L)).recentProgress.map(_.numInputRows).sum
+    val rowsRun1 = run()
     // batch counts come from the checkpoint's COMMITS log, not
     // recentProgress (round 13, ADVICE: a progress event for a batch
     // committing while stop() is in flight can be dropped — observed
-    // once in CI — and would spuriously fail the pinned boolean; the
-    // checkpoint is the engine's own durable record)
-    def committedThrough(): Long = {
-      val d = new java.io.File(ckpt, "commits")
-      val ids = Option(d.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-        .map(_.getName).filter(n => n.nonEmpty && n.forall(_.isDigit))
-        .map(_.toLong)
-      ids.foldLeft(-1L)(math.max)
-    }
-    val rowsRun1 = run()
-    val committedRun1 = committedThrough()
+    // once in CI — and would spuriously fail the pinned boolean)
+    val committedRun1 = stream.lastCommittedBatch
     // crash window: v3 AND v4 land while the query is DOWN — a backlog
     graft.acid.TxLog.delete(s, path, col("total_amount") < 20)   // v3
     graft.acid.TxLog.delete(s, path, col("total_amount") < 30)   // v4
     val rowsRun2 = run()
-    val batchesRun2 = committedThrough() - committedRun1
+    val batchesRun2 = stream.lastCommittedBatch - committedRun1
     val v2Rows = graft.acid.TxLog.readChangeFeed(s, path, 2L, Some(2L)).count()
     val v34Rows = graft.acid.TxLog.readChangeFeed(s, path, 3L, Some(4L)).count()
     s.table(name)
@@ -2707,27 +2697,24 @@ object SparkEntry {
     * were without maintenance (an optimize commit contributes no
     * changes). */
   def streamTableSink(s: SparkSession, dir: String): DataFrame = {
-    val tbl = tempDir("gsink"); val ckpt = tempDir("gsinkck")
-    val srcDir = s"${tempDir("gsinkin")}/in"
-    Tables.events(s, dir).select("event_id", "event_type", "value")
-      .repartition(4).write.mode("overwrite").parquet(srcDir)
-    val schema = s.read.parquet(srcDir).schema
-    def run(): Unit = graft.streaming.StateSizing.withScratchCheckpoint(s) {
-      val q = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
+    val tbl = tempDir("gsink")
+    val stream = new graft.streaming.ScratchStream(s, "gsinkck")
+    stream.stage(Seq("in" -> Tables.events(s, dir).select("event_id", "event_type", "value")
+      .repartition(4)))
+    def run(): Unit = stream.run(
+      stream.source("in", "maxFilesPerTrigger" -> "1")
         .writeStream.format("graft-table").option("path", tbl)
         .option("queryId", "gsink") // the (txnAppId)-style idempotency scope
         .option("maintenanceEvery", "2") // auto-compaction every 2 batches
-        .option("checkpointLocation", ckpt).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-    }
+        .outputMode("append"))
     run()
     val v1 = graft.acid.TxLog.currentVersion(s, tbl)
     val applied = graft.streaming.TxLogSink.appliedThrough(s, tbl, "gsink")
     run() // restart, same checkpoint, no new files: nothing re-delivers
     val v2 = graft.acid.TxLog.currentVersion(s, tbl)
-    val ckptFiles = Option(new java.io.File(tbl, "_txlog").listFiles())
-      .map(_.count(_.getName.endsWith(".checkpoint.json"))).getOrElse(0)
+    val txlog = new org.apache.hadoop.fs.Path(tbl, "_txlog")
+    val ckptFiles = txlog.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .listStatus(txlog).count(_.getPath.getName.endsWith(".checkpoint.json"))
     // the lifecycle invariant, scale-independent: a log checkpoint was
     // written by the cycle, and SMALL files never accumulated past the
     // compaction trigger (at small SFs every batch file is small and

@@ -48,48 +48,24 @@ object EventsStream {
     * `dim` must carry `user_id` plus the enrichment columns. */
   def runStreamStaticJoin(spark: SparkSession, events: DataFrame,
                           dim: DataFrame): DataFrame = {
-    val base = graft.TempDirs.create("ssj")
-    val dir = s"$base/src"
+    val stream = new ScratchStream(spark, "ssj")
     // normalize BEFORE staging: an NTZ `ts` would re-read as NTZ and
     // `withWatermark` requires strict TimestampType
-    val ev = graft.Tables.normalizeTs(
-      events.select("user_id", "ts", "value"), "ts")
-    ev.write.mode("overwrite").parquet(dir)
-    val schema = spark.read.parquet(dir).schema
+    stream.stage(Seq("src" -> graft.Tables.normalizeTs(
+      events.select("user_id", "ts", "value"), "ts")))
     val name = s"graft_ssj_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val dimCols = dim.columns.filterNot(_ == "user_id").map(col).toSeq
-    StateSizing.withStatePartitions(spark, 10000L) {
-      val out = spark.readStream.schema(schema).parquet(dir)
-        .withWatermark("ts", "1 hour")
-        .join(broadcast(dim), "user_id") // stream-static: re-read per batch
-        .groupBy(window(col("ts"), "1 hour") +: dimCols: _*)
-        .agg(count(lit(1)).as("n_events"),
-             round(sum(col("value")), 2).as("total_value"))
-        .select(col("window.start").as("window_start") +: dimCols :+
-                col("n_events") :+ col("total_value"): _*)
-      val q = out.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    val out = stream.source("src")
+      .withWatermark("ts", "1 hour")
+      .join(broadcast(dim), "user_id") // stream-static: re-read per batch
+      .groupBy(window(col("ts"), "1 hour") +: dimCols: _*)
+      .agg(count(lit(1)).as("n_events"),
+           round(sum(col("value")), 2).as("total_value"))
+      .select(col("window.start").as("window_start") +: dimCols :+
+              col("n_events") :+ col("total_value"): _*)
+    stream.run(out.writeStream.outputMode("complete").format("memory").queryName(name),
+      stateRows = Some(10000L))
     spark.table(name)
-  }
-
-  /** Oracle-parity guard for the stream-stream joins: both rely on the
-    * file source ingesting ALL staged parquet in ONE micro-batch (the
-    * default when `maxFilesPerTrigger` is unset). If batching ever
-    * splits — config drift, a future default change — the 1-hour
-    * watermarks could silently drop out-of-order rows relative to the
-    * batch oracle, so divergence fails loudly here instead. Sentinel
-    * watermark-advancing batches (which carry only far-future rows) are
-    * exempt via `maxDataBatches`. */
-  private def assertSingleIngestBatch(
-      q: org.apache.spark.sql.streaming.StreamingQuery,
-      label: String, maxDataBatches: Int = 1): Unit = {
-    val n = q.recentProgress.count(_.numInputRows > 0)
-    require(n <= maxDataBatches,
-      s"$label: staged files must ingest in <= $maxDataBatches micro-batch(es), " +
-        s"got $n — single-batch ingestion is what makes the watermarked " +
-        "stream equal to the batch oracle")
   }
 
   /** Stream–STREAM join, run as a real streaming query: the click
@@ -104,36 +80,10 @@ object EventsStream {
     * keeps emitted pairs on executors/disk. The returned frame is the
     * bounded aggregate over the sink. */
   def runStreamStreamJoin(spark: SparkSession, events: DataFrame): DataFrame = {
-    val base = graft.TempDirs.create("ss2")
-    val ev = graft.Tables.normalizeTs(
-      events.select("user_id", "ts", "event_type", "value"), "ts")
-    stagePair(
-      ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("click_ts"))
-        .write.mode("overwrite").parquet(s"$base/clicks"),
-      ev.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"), col("value"))
-        .write.mode("overwrite").parquet(s"$base/purch"))
-    val cSchema = spark.read.parquet(s"$base/clicks").schema
-    val pSchema = spark.read.parquet(s"$base/purch").schema
-    StateSizing.withStatePartitions(spark, 10000L) {
-      val cs = spark.readStream.schema(cSchema).parquet(s"$base/clicks")
-        .withWatermark("click_ts", "1 hour")
-      val ps = spark.readStream.schema(pSchema).parquet(s"$base/purch")
-        .withWatermark("purchase_ts", "1 hour")
-      val joined = cs.join(ps, expr(
-        "user_id = p_user AND purchase_ts >= click_ts AND " +
-          "purchase_ts <= click_ts + interval 1 hour"))
-      val q = joined.writeStream.outputMode("append")
-        .option("checkpointLocation", s"$base/ckpt")
-        .format("parquet").option("path", s"$base/out")
-        .start()
-      try {
-        q.processAllAvailable()
-        assertSingleIngestBatch(q, "stream_stream_join")
-      } finally q.stop()
-    }
-    spark.read.parquet(s"$base/out").agg(
+    val stream = stageFeeds(spark, "ss2", events)
+    stream.run(joinFeeds(stream, "inner"), stateRows = Some(10000L),
+      singleIngest = Some("stream_stream_join"))
+    spark.read.parquet(stream.dir("out")).agg(
       count(lit(1)).as("n_pairs"),
       count_distinct(col("user_id")).as("n_users"),
       round(sum(col("value").cast("decimal(18,2)")), 2).cast("double")
@@ -146,13 +96,11 @@ object EventsStream {
     * state-eviction emit path the inner join never touches. An outer
     * stream-stream join can only emit an unmatched row once the
     * watermark proves no future match can arrive (click state evicts at
-    * `click_ts + 1h` past the joint watermark), so the stream's end is
-    * modeled the way production streams experience it: two sentinel
-    * batches of far-future rows (user `Long.MinValue`, exact-match
-    * filtered afterward) written to BOTH feeds advance the joint
-    * watermark — min across inputs — past every real click's eviction
-    * horizon; two because eviction uses the watermark committed by the
-    * PREVIOUS batch. State stays O(events inside the watermark window)
+    * `click_ts + 1h` past the joint watermark), so the stream ends with
+    * the [[ScratchStream.sentinelRounds]] (user `Long.MinValue`,
+    * exact-match filtered afterward) written to BOTH feeds: they advance
+    * the joint watermark — min across inputs — past every real click's
+    * eviction horizon. State stays O(events inside the watermark window)
     * exactly as in the inner join, and each unmatched click emits
     * EXACTLY once (eviction removes it from the buffer — the second
     * sentinel batch cannot re-emit it; spec-pinned). Returns the
@@ -169,86 +117,46 @@ object EventsStream {
   def runStreamStreamFullOuterJoin(spark: SparkSession, events: DataFrame): DataFrame =
     runStreamStreamOuterTyped(spark, events, "full_outer")
 
-  /** Run two independent staging writes as overlapping Spark jobs
-    * (guide §2.6 — the TxLog.stageAll discipline): each feed's staging
-    * is a full events scan + filtered write; sequentially the cluster
-    * idles through each write's task tail twice. */
-  private def stagePair(a: => Unit, b: => Unit): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fa = Future(a); val fb = Future(b)
-    Await.result(fa, Duration.Inf); Await.result(fb, Duration.Inf)
+  /** Stage the two feeds of the stream-stream joins — each a full
+    * events scan + filtered write, run as overlapping jobs. */
+  private def stageFeeds(spark: SparkSession, tag: String,
+                         events: DataFrame): ScratchStream = {
+    val stream = new ScratchStream(spark, tag)
+    val ev = graft.Tables.normalizeTs(
+      events.select("user_id", "ts", "event_type", "value"), "ts")
+    stream.stage(Seq(
+      "clicks" -> ev.filter(col("event_type") === "click")
+        .select(col("user_id"), col("ts").as("click_ts")),
+      "purch" -> ev.filter(col("event_type") === "purchase")
+        .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"), col("value"))))
+    stream
   }
 
-  /** Write 1-row sentinel frames to scratch dirs FIRST, then MOVE every
-    * parquet into its watched source dir with back-to-back same-fs
-    * renames — one file-source discovery poll almost always picks up
-    * the whole round, so it costs one micro-batch instead of one per
-    * feed. Semantics do not depend on it (the joint watermark is the
-    * min across inputs, so a split round advances nothing until all
-    * files process) — this is purely a fixed-cost trim. */
-  private def stageSentinels(frames: Seq[(DataFrame, String, String)]): Unit = {
-    val moves = frames.map { case (df, scratch, dstDir) =>
-      df.coalesce(1).write.mode("overwrite").parquet(scratch)
-      val part = new java.io.File(scratch).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      (part.toPath, java.nio.file.Paths.get(dstDir, part.getName))
-    }
-    moves.foreach { case (from, to) => java.nio.file.Files.move(from, to) }
-  }
+  /** Clicks joined to purchases within one hour of event time, both
+    * sides watermarked, into a parquet sink at `out`. */
+  private def joinFeeds(stream: ScratchStream, joinType: String) =
+    stream.source("clicks").withWatermark("click_ts", "1 hour")
+      .join(stream.source("purch").withWatermark("purchase_ts", "1 hour"), expr(
+        "user_id = p_user AND purchase_ts >= click_ts AND " +
+          "purchase_ts <= click_ts + interval 1 hour"), joinType)
+      .writeStream.outputMode("append")
+      .format("parquet").option("path", stream.dir("out"))
 
   private def runStreamStreamOuterTyped(spark: SparkSession, events: DataFrame,
                                         joinType: String): DataFrame = {
-    val base = graft.TempDirs.create("ss2o")
-    val ev = graft.Tables.normalizeTs(
-      events.select("user_id", "ts", "event_type", "value"), "ts")
-    stagePair(
-      ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("click_ts"))
-        .write.mode("overwrite").parquet(s"$base/clicks"),
-      ev.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"), col("value"))
-        .write.mode("overwrite").parquet(s"$base/purch"))
-    val clicksStaged = spark.read.parquet(s"$base/clicks")
-    val cSchema = clicksStaged.schema
-    val pSchema = spark.read.parquet(s"$base/purch").schema
-    // one metadata+agg pass for the sentinel horizon (max real ts)
-    val maxTs = clicksStaged.agg(max(col("click_ts"))).collect()(0).getTimestamp(0)
     import spark.implicits._
-    StateSizing.withStatePartitions(spark, 10000L) {
-      val cs = spark.readStream.schema(cSchema).parquet(s"$base/clicks")
-        .withWatermark("click_ts", "1 hour")
-      val ps = spark.readStream.schema(pSchema).parquet(s"$base/purch")
-        .withWatermark("purchase_ts", "1 hour")
-      val joined = cs.join(ps, expr(
-        "user_id = p_user AND purchase_ts >= click_ts AND " +
-          "purchase_ts <= click_ts + interval 1 hour"), joinType)
-      val q = joined.writeStream.outputMode("append")
-        .option("checkpointLocation", s"$base/ckpt")
-        .format("parquet").option("path", s"$base/out")
-        .start()
-      try {
-        q.processAllAvailable()
-        assertSingleIngestBatch(q, s"stream_stream_$joinType")
-        Seq(30, 60).foreach { days =>
-          val ts = new java.sql.Timestamp(maxTs.getTime + days * 86400000L)
-          // both feeds' sentinel files land via back-to-back renames so
-          // the round usually ingests as ONE micro-batch (see
-          // stageSentinels — output is identical either way)
-          stageSentinels(Seq(
-            (Seq((Long.MinValue, ts)).toDF("user_id", "click_ts"),
-              s"$base/sc_$days", s"$base/clicks"),
-            (Seq((Long.MinValue, ts, 0.0)).toDF("p_user", "purchase_ts", "value"),
-              s"$base/sp_$days", s"$base/purch")))
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    }
+    val stream = stageFeeds(spark, "ss2o", events)
+    // one metadata+agg pass for the sentinel horizon (max real ts)
+    val maxTs = stream.staged("clicks").agg(max(col("click_ts"))).collect()(0).getTimestamp(0)
+    stream.run(joinFeeds(stream, joinType), stateRows = Some(10000L),
+      singleIngest = Some(s"stream_stream_$joinType"),
+      drops = stream.sentinelRounds(maxTs)(ts => Seq(
+        "clicks" -> Seq((Long.MinValue, ts)).toDF("user_id", "click_ts"),
+        "purch" -> Seq((Long.MinValue, ts, 0.0)).toDF("p_user", "purchase_ts", "value"))))
     // sentinel rows can surface null-extended on EITHER side under full
     // outer, so both key columns are screened (left outer never emits a
     // null user_id — the generalized filter degenerates to the original)
-    val out = spark.read.parquet(s"$base/out")
+    val out = spark.read.parquet(stream.dir("out"))
       .filter((col("user_id").isNull || col("user_id") =!= Long.MinValue) &&
               (col("p_user").isNull || col("p_user") =!= Long.MinValue))
     if (joinType == "left_outer")
@@ -343,56 +251,37 @@ object EventsStream {
 
   /** End-to-end stateful sessionization as an actual STREAMING query:
     * stage the events as a file-source directory, run
-    * [[sessionizeStateful]] over `readStream` into a memory sink, and
+    * [[sessionizeStateful]] over `readStream` into a file sink, and
     * return ALL emitted sessions — gap-closed ones and, via the
     * event-time state timeout, each user's final session once the
-    * watermark passes its gap horizon. The stream's end is modeled the
-    * way production streams experience it: later data advances the
-    * watermark. Two sentinel batches (a far-future tick from
+    * [[ScratchStream.sentinelRounds]] (a far-future tick from
     * `Long.MinValue` — outside any realistic id domain, removed by an
     * EXACT match so genuinely negative user ids still sessionize) push
-    * the watermark past every real session's horizon — two because a
-    * batch's timeout processing uses the watermark committed by the
-    * PREVIOUS batch. */
+    * the watermark past its gap horizon. */
   def runSessionizeStream(spark: SparkSession, events: DataFrame): DataFrame = {
     import spark.implicits._
-    val base = graft.TempDirs.create("sess")
-    val dir = s"$base/src"
+    val stream = new ScratchStream(spark, "sess")
     // normalize BEFORE staging: the typed SessionEvent encoder and the
     // `getTimestamp` accessor below require strict TimestampType, and the
     // staged parquet inherits whatever type is written here
-    val ev = graft.Tables.normalizeTs(events.select("user_id", "ts"), "ts")
-    ev.write.mode("overwrite").parquet(dir)
+    stream.stage(Seq("src" -> graft.Tables.normalizeTs(events.select("user_id", "ts"), "ts")))
     // ONE metadata+agg pass over the staged files for everything the
     // runner needs: schema comes from footers (no job), max ts and row
     // count share one aggregate job over the staged data — round 4 ran
     // a schema-infer, a max() over the UPSTREAM plan, and a separate
     // count: two extra jobs per invocation
-    val staged = spark.read.parquet(dir)
-    val schema = staged.schema
-    val statsRow = staged.agg(max(col("ts")), count(lit(1))).collect()(0)
-    val maxTs = statsRow.getTimestamp(0)
-    val nRows = statsRow.getLong(1)
+    val statsRow = stream.staged("src").agg(max(col("ts")), count(lit(1))).collect()(0)
     // durable FILE sink, not a memory sink: emitted sessions are O(corpus)
     // rows and belong on executors/disk, never on the driver heap (the
     // round-2 lesson from stream_dedup, applied here)
-    StateSizing.withStatePartitions(spark, nRows) {
-      val q = sessionizeStateful(
-          spark.readStream.schema(schema).parquet(dir).as[SessionEvent])
+    stream.run(
+      sessionizeStateful(stream.source("src").as[SessionEvent])
         .writeStream.outputMode("append")
-        .option("checkpointLocation", s"$base/ckpt")
-        .format("parquet").option("path", s"$base/out")
-        .start()
-      try {
-        q.processAllAvailable()
-        Seq(30, 60).foreach { days =>
-          Seq((Long.MinValue, new java.sql.Timestamp(maxTs.getTime + days * 86400000L)))
-            .toDF("user_id", "ts").write.mode("append").parquet(dir)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    }
-    spark.read.parquet(s"$base/out").filter(col("user_id") =!= Long.MinValue)
+        .format("parquet").option("path", stream.dir("out")),
+      stateRows = Some(statsRow.getLong(1)),
+      drops = stream.sentinelRounds(statsRow.getTimestamp(0))(ts =>
+        Seq("src" -> Seq((Long.MinValue, ts)).toDF("user_id", "ts"))))
+    spark.read.parquet(stream.dir("out")).filter(col("user_id") =!= Long.MinValue)
   }
 
   /** Watermark late-data ACCOUNTING, run as a real streaming query — the
@@ -429,10 +318,7 @@ object EventsStream {
     * would split, double-counting shared hours, so staging asserts the
     * bound loudly instead of letting the counter drift at scale. */
   def runLateDataAccounting(spark: SparkSession, events: DataFrame): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val base = graft.TempDirs.create("late")
-    val src = s"$base/src"
-    Files.createDirectories(Paths.get(src))
+    val stream = new ScratchStream(spark, "late")
     val ev = graft.Tables.normalizeTs(events.select("ts", "value"), "ts")
     // parse via the same byte-string grammar the conf accepts — a
     // unit-suffixed setting ("128m", "128MB") is valid Spark config and
@@ -440,18 +326,12 @@ object EventsStream {
     val maxSplitBytes = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
     def stageFile(df: DataFrame, name: String, mtime: Long): Unit = {
-      val tmp = s"$base/stage_$name"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      require(part.length() <= maxSplitBytes,
-        s"late-data staging: $name is ${part.length()} bytes > " +
+      val Seq(bytes) = stream.stage(Seq("src" -> df.coalesce(1)), mtime)
+      require(bytes <= maxSplitBytes,
+        s"late-data staging: $name is $bytes bytes > " +
           s"maxPartitionBytes=$maxSplitBytes — it would ingest as multiple " +
           "splits and numRowsDroppedByWatermark would count each late hour " +
           "once PER SPLIT, diverging from the distinct-late-hour oracle")
-      val dst = Paths.get(src, s"$name.parquet")
-      Files.move(part.toPath, dst, StandardCopyOption.REPLACE_EXISTING)
-      dst.toFile.setLastModified(mtime)
     }
     // boundary timestamps derived from the observed max event time
     val maxTs = ev.agg(max(col("ts"))).collect()(0).getTimestamp(0)
@@ -462,7 +342,7 @@ object EventsStream {
     // starts <= trunc_hour(max), the mid window starts trunc_hour(max)+1h,
     // and the sentinel's (max + 30 d) is the only window above the guard
     val guardUs = (maxTs.getTime / 3600000L + 3L) * 3600000000L
-    // the file source orders by (modification time, path): both agree here
+    // the file source orders the backlog by modification time
     val t0 = System.currentTimeMillis()
     stageFile(ev.filter(dayofmonth(col("ts")) >= 16), "b1_ontime", t0 - 180000)
     stageFile(spark.range(1).select(
@@ -470,26 +350,22 @@ object EventsStream {
     stageFile(ev.filter(dayofmonth(col("ts")) <= 15), "b3_late", t0 - 60000)
     stageFile(spark.range(1).select(
       lit(sentinelTs).as("ts"), lit(0.0).as("value")), "b4_sentinel", t0)
-    val schema = spark.read.parquet(src).schema
     val name = s"graft_late_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    // StateSizing like every other stateful runner here (optimization
-    // r16 — this one predated the helper): the windowed aggregate
-    // commits every state partition on every micro-batch, and neither
-    // the kept aggregate nor the drop counter depends on the shuffle
-    // partition count (partials are per input SPLIT — the single-split
-    // staging assertion above — not per shuffle partition)
-    val q = StateSizing.withStatePartitions(spark, 10000L) {
-      val query = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
+    // data-sized state like every other stateful runner here
+    // (optimization r16): the windowed aggregate commits every state
+    // partition on every micro-batch, and neither the kept aggregate nor
+    // the drop counter depends on the shuffle partition count (partials
+    // are per input SPLIT — the single-split staging assertion above —
+    // not per shuffle partition)
+    val q = stream.run(
+      stream.source("src", "maxFilesPerTrigger" -> "1")
         .withWatermark("ts", "30 minutes")
         .groupBy(window(col("ts"), "1 hour"))
         .agg(count(lit(1)).as("n"),
              sum(col("value").cast("decimal(18,2)")).as("tv"))
         .select(unix_micros(col("window.start")).as("ws"), col("n"), col("tv"))
-        .writeStream.outputMode("append").format("memory").queryName(name).start()
-      try query.processAllAvailable() finally query.stop()
-      query
-    }
+        .writeStream.outputMode("append").format("memory").queryName(name),
+      stateRows = Some(10000L))
     val dropped = q.recentProgress
       .flatMap(p => Option(p.stateOperators).toSeq.flatMap(_.toSeq))
       .map(_.numRowsDroppedByWatermark).sum

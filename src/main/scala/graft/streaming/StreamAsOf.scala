@@ -102,42 +102,27 @@ object StreamAsOf {
 
   /** End-to-end STREAMING as-of as a real query: stage (left=purchases,
     * right=signups) as one file-source union, run [[asofStateful]] into
-    * a file sink, advance the watermark past every real row with two
-    * far-future sentinel batches (two because a batch's timeout pass
-    * uses the watermark committed by the PREVIOUS batch — the
-    * established harness shape), and return every emitted match. The
-    * result must equal the batch as-of row-for-row, which is exactly
+    * a file sink, advance the watermark past every real row with the
+    * [[ScratchStream.sentinelRounds]], and return every emitted match.
+    * The result must equal the batch as-of row-for-row, which is exactly
     * what the registry oracle (DuckDB ASOF LEFT JOIN) checks. */
   def runAsOfStream(spark: SparkSession, left: DataFrame,
                     right: DataFrame): DataFrame = {
     import spark.implicits._
-    val base = graft.TempDirs.create("sasof")
-    val dir = s"$base/src"
-    left.select(col("user_id"), col("ts"), col("event_id"),
+    val stream = new ScratchStream(spark, "sasof")
+    stream.stage(Seq("src" -> left.select(col("user_id"), col("ts"), col("event_id"),
         lit(true).as("is_left"))
       .unionByName(right.select(col("user_id"), col("ts"),
-        lit(-1L).as("event_id"), lit(false).as("is_left")))
-      .write.mode("overwrite").parquet(dir)
-    val staged = spark.read.parquet(dir)
-    val maxTs = staged.agg(max(col("ts"))).collect()(0).getTimestamp(0)
-    StateSizing.withStatePartitions(spark, 10000L) {
-      val stream = spark.readStream.schema(staged.schema).parquet(dir)
-        .as[AsOfEvent]
-      val q = asofStateful(stream).toDF().writeStream.outputMode("append")
-        .option("checkpointLocation", s"$base/ckpt")
-        .format("parquet").option("path", s"$base/out")
-        .start()
-      try {
-        q.processAllAvailable()
-        Seq(30, 60).foreach { days =>
-          val ts = new java.sql.Timestamp(maxTs.getTime + days * 86400000L)
-          Seq(AsOfEvent(Long.MinValue, ts, -99L, true)).toDF()
-            .write.mode("append").parquet(dir)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    }
-    spark.read.parquet(s"$base/out")
+        lit(-1L).as("event_id"), lit(false).as("is_left")))))
+    val maxTs = stream.staged("src").agg(max(col("ts"))).collect()(0).getTimestamp(0)
+    stream.run(
+      asofStateful(stream.source("src").as[AsOfEvent]).toDF()
+        .writeStream.outputMode("append")
+        .format("parquet").option("path", stream.dir("out")),
+      stateRows = Some(10000L),
+      drops = stream.sentinelRounds(maxTs)(ts =>
+        Seq("src" -> Seq(AsOfEvent(Long.MinValue, ts, -99L, true)).toDF())))
+    spark.read.parquet(stream.dir("out"))
       .filter(col("user_id") =!= Long.MinValue)
       .select("event_id", "user_id", "ts", "signup_ts")
   }

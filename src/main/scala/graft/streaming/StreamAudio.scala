@@ -32,38 +32,27 @@ import org.apache.spark.sql.functions._
 object StreamAudio {
 
   /** Stage `batches` as file-source drops processed IN ORDER (one
-    * `processAllAvailable` per drop pins micro-batch boundaries), run
+    * micro-batch per drop, [[ScratchStream.run]]), run
     * the #100 audio feature extraction on each micro-batch, and return
     * the durable sink's contents: one feature row per document. */
   def run(spark: SparkSession, batches: Seq[DataFrame]): DataFrame = {
-    val base = graft.TempDirs.create("saud")
-    val srcDir = s"$base/src"
-    val outDir = s"$base/out"
+    val stream = new ScratchStream(spark, "saud")
+    val outDir = stream.dir("out")
     val empty = batches.head.limit(0)
-    empty.write.mode("overwrite").parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
+    // an empty first drop: the stream needs the schema up front
+    stream.stage(Seq("src" -> empty))
     // schema-stable empty marker (the StreamIncrementalDedup discipline):
     // the sink exists with the feature schema even if no drop arrives
     graft.multimodal.BinaryColumns.audioMeta(empty).toDF()
       .repartition(1).write.mode("overwrite").parquet(s"$outDir/batch=-1")
-    // scratch checkpoint (never restored): checksum sidecars off
-    StateSizing.withScratchCheckpoint(spark) {
-      val q = spark.readStream.schema(schema).parquet(srcDir)
-        .writeStream
-        .option("checkpointLocation", s"$base/ckpt")
+    stream.run(
+      stream.source("src").writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           if (!batch.isEmpty)
             graft.multimodal.BinaryColumns.audioMeta(batch).toDF()
               .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }
-        .start()
-      try {
-        batches.foreach { b =>
-          b.write.mode("append").parquet(srcDir)
-          q.processAllAvailable() // one staged drop = one micro-batch
-        }
-      } finally q.stop()
-    }
+        },
+      drops = batches.map(b => Seq("src" -> b)))
     spark.read.parquet(outDir)
       .select("doc_id", "sample_rate", "n_samples", "duration_ms",
         "rms", "peak", "zcr", "header_ok")

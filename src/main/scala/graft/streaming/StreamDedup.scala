@@ -14,7 +14,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object StreamDedup {
 
-  /** Run a file-source stream over staged batch dirs (later batches may
+  /** Run a file-source stream over the staged batches (later ones may
     * replay earlier rows), dedup on `keyCols`, apply `agg` INSIDE the
     * stream, and return the memory-sink result.
     *
@@ -25,25 +25,18 @@ object StreamDedup {
   def dedupStream(spark: SparkSession, batches: Seq[DataFrame],
                   keyCols: Seq[String],
                   agg: DataFrame => DataFrame): DataFrame = {
-    val dir = graft.TempDirs.create("sdd_src")
-    batches.zipWithIndex.foreach { case (b, i) =>
-      b.write.mode("overwrite").parquet(s"$dir/batch_$i")
-    }
-    val schema = spark.read.parquet(s"$dir/batch_0").schema
-    val nRows = spark.read.parquet(s"$dir/batch_*").count() // footer count
+    val stream = new ScratchStream(spark, "sdd")
+    // every batch is staged before the start: ONE micro-batch ingests
+    // them all, and the dedup state drops the replays within it
+    stream.stage(batches.map("src" -> _))
+    val nRows = stream.staged("src").count() // footer count
     val name = s"graft_sdd_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    StateSizing.withStatePartitions(spark, nRows) {
-      val deduped = spark.readStream.schema(schema)
-        .parquet(s"$dir/batch_*")
-        .dropDuplicates(keyCols)
-      val out = agg(deduped)
-      val mode = if (out.isStreaming && out.queryExecution.analyzed
-          .collectFirst { case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a }
-          .isDefined) "complete" else "append"
-      val q = out.writeStream.outputMode(mode).format("memory").queryName(name)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    val out = agg(stream.source("src").dropDuplicates(keyCols))
+    val mode = if (out.isStreaming && out.queryExecution.analyzed
+        .collectFirst { case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a }
+        .isDefined) "complete" else "append"
+    stream.run(out.writeStream.outputMode(mode).format("memory").queryName(name),
+      stateRows = Some(nRows))
     spark.table(name)
   }
 

@@ -31,19 +31,17 @@ import graft.dedup.IncrementalDedup
 object StreamIncrementalDedup {
 
   /** Stage `batches` as file-source drops processed IN ORDER (one
-    * `processAllAvailable` per staged drop pins micro-batch
-    * boundaries), dedup each against `indexTable` + the growing doc
-    * store, and return all verified (new_doc, matched_doc, jaccard)
-    * pairs. */
+    * micro-batch per drop, [[ScratchStream.run]]), dedup each against
+    * `indexTable` + the growing doc store, and return all verified
+    * (new_doc, matched_doc, jaccard) pairs. */
   def run(spark: SparkSession, corpusText: DataFrame, batches: Seq[DataFrame],
           indexTable: String, textCol: String = "text"): DataFrame = {
-    val base = graft.TempDirs.create("sid")
-    val srcDir = s"$base/src"
-    val outDir = s"$base/out"
-    // schema from an empty staged marker: the stream needs it up front
-    val empty = batches.head.limit(0)
-    empty.write.mode("overwrite").parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
+    val stream = new ScratchStream(spark, "sid")
+    val srcDir = stream.dir("src")
+    val outDir = stream.dir("out")
+    // an empty first drop: the stream needs the schema up front
+    stream.stage(Seq("src" -> batches.head.limit(0)))
+    val schema = stream.staged("src").schema
     // schema-stable empty marker: the sink dir exists (and carries the
     // pair schema) even if every staged drop turns out empty, so the
     // final read never throws path-does-not-exist
@@ -59,39 +57,29 @@ object StreamIncrementalDedup {
       .repartition(1)
       .write.mode("overwrite").parquet(s"$outDir/batch=-1")
     val corpusSlim = corpusText.select(col("doc_id"), col(textCol))
-    // scratch checkpoint (never restored): checksum sidecars off
-    StateSizing.withScratchCheckpoint(spark) {
-    val q = spark.readStream.schema(schema).parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", s"$base/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          // the growing doc store is the STAGED SOURCE itself (all prior
-          // drops are parquet in srcDir) minus this batch's own docs — a
-          // constant-depth plan per batch, not an N-way union whose
-          // lineage grows with stream age
-          val docStore = corpusSlim.unionByName(
-            s.read.schema(schema).parquet(srcDir)
-              .select(col("doc_id"), col(textCol))
-              .join(broadcast(batch.select("doc_id")), Seq("doc_id"), "left_anti"))
-          // per-batch frames must not accumulate in the cache manager
-          // over a long-running stream: disable the signature cache for
-          // this batch's cloned session (recompute is a per-row codegen
-          // projection — cheap; an unreleased persist per batch is not)
-          s.conf.set(graft.Caching.MaterializeKey, "false")
-          IncrementalDedup.applyBatchExactlyOnce(
-            batch, docStore, indexTable, batchId, outDir, textCol)
-        }
-      }
-      .start()
-    try {
-      batches.foreach { b =>
-        b.write.mode("append").parquet(srcDir)
-        q.processAllAvailable() // one staged drop = one micro-batch
-      }
-    } finally q.stop()
-    }
+    stream.run(
+      stream.source("src").writeStream
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          if (!batch.isEmpty) {
+            val s = batch.sparkSession
+            // the growing doc store is the STAGED SOURCE itself (all prior
+            // drops are parquet in srcDir) minus this batch's own docs — a
+            // constant-depth plan per batch, not an N-way union whose
+            // lineage grows with stream age
+            val docStore = corpusSlim.unionByName(
+              s.read.schema(schema).parquet(srcDir)
+                .select(col("doc_id"), col(textCol))
+                .join(broadcast(batch.select("doc_id")), Seq("doc_id"), "left_anti"))
+            // per-batch frames must not accumulate in the cache manager
+            // over a long-running stream: disable the signature cache for
+            // this batch's cloned session (recompute is a per-row codegen
+            // projection — cheap; an unreleased persist per batch is not)
+            s.conf.set(graft.Caching.MaterializeKey, "false")
+            IncrementalDedup.applyBatchExactlyOnce(
+              batch, docStore, indexTable, batchId, outDir, textCol)
+          }
+        },
+      drops = batches.map(b => Seq("src" -> b)))
     // partition discovery adds the batch key; drop it — callers see the
     // pure (new_doc, matched_doc, jaccard) pair set
     spark.read.parquet(outDir)

@@ -49,17 +49,11 @@ object StreamMerge {
                    table: String, keyCols: Seq[String],
                    seqCol: Option[String] = None): Unit = {
     require(cdcBatches.nonEmpty, "need at least one CDC batch")
-    val base = graft.TempDirs.create("cdc")
-    val dir = s"$base/src"
-    cdcBatches.head.write.mode("overwrite").parquet(dir)
-    val schema = spark.read.parquet(dir).schema
-    // scratch checkpoint: per-invocation, never restored — skip the
-    // per-file checksum sidecars (StateSizing doc; the merge itself
-    // keeps the session's shuffle parallelism, hence no state sizing)
-    StateSizing.withScratchCheckpoint(spark) {
-      val q = spark.readStream.schema(schema).parquet(dir)
-        .writeStream
-        .option("checkpointLocation", s"$base/ckpt")
+    val stream = new ScratchStream(spark, "cdc")
+    stream.stage(Seq("src" -> cdcBatches.head))
+    // the merge keeps the session's shuffle parallelism: no state sizing
+    stream.run(
+      stream.source("src").writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           if (!batch.isEmpty) {
             val collapsed = seqCol match {
@@ -69,15 +63,7 @@ object StreamMerge {
             graft.acid.TxLog.merge(collapsed, table, keyCols)
             ()
           }
-        }
-        .start()
-      try {
-        q.processAllAvailable()
-        cdcBatches.tail.foreach { b =>
-          b.write.mode("append").parquet(dir)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    }
+        },
+      drops = cdcBatches.tail.map(b => Seq("src" -> b)))
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
@@ -135,16 +137,16 @@ class DvCommitSpec extends SparkSpec {
 
   // ------------------------------------------ actions per DV commit
 
-  /** (SQL executions, Spark jobs outside any SQL execution) that `body`
-    * runs. Listener events arrive asynchronously, so a marker job in
-    * its own group is run and awaited before and after the body: the
-    * shared listener queue delivers in order, so once a marker's job
-    * start arrives every earlier event has arrived too. */
-  private def actionsOf(body: => Unit): (Int, Int) = {
+  /** The SQL executions `body` runs, and the local properties of each
+    * Spark job it runs. Listener events arrive asynchronously, so a
+    * marker job in its own group is run and awaited before and after
+    * the body: the shared listener queue delivers in order, so once a
+    * marker's job start arrives every earlier event has arrived too. */
+  private def observe(body: => Unit): (Int, Seq[java.util.Properties]) = {
     val sc = spark.sparkContext
     val markerGroup = s"dvspec-marker-${java.util.UUID.randomUUID()}"
     val executions = new AtomicInteger
-    val strayJobs = new AtomicInteger
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
     val markers = new AtomicInteger
     val queries = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -152,13 +154,11 @@ class DvCommitSpec extends SparkSpec {
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
         executions.incrementAndGet()
     }
-    val jobs = new SparkListener {
+    val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val props = Option(j.properties)
-        if (props.exists(p => p.getProperty("spark.jobGroup.id") == markerGroup))
-          markers.incrementAndGet()
-        else if (props.forall(_.getProperty("spark.sql.execution.id") == null))
-          strayJobs.incrementAndGet() // e.g. a parquet schema inference
+        val props = Option(j.properties).getOrElse(new java.util.Properties)
+        if (props.getProperty("spark.jobGroup.id") == markerGroup) markers.incrementAndGet()
+        else jobs.add(props)
         ()
       }
     }
@@ -171,17 +171,26 @@ class DvCommitSpec extends SparkSpec {
       assert(markers.get() >= expect, "marker job event never delivered")
     }
     spark.listenerManager.register(queries)
-    sc.addSparkListener(jobs)
+    sc.addSparkListener(listener)
     try {
       marker(1)
-      val (e0, s0) = (executions.get(), strayJobs.get())
+      val e0 = executions.get()
+      jobs.clear()
       body
       marker(2)
-      (executions.get() - e0, strayJobs.get() - s0)
+      (executions.get() - e0, jobs.asScala.toSeq)
     } finally {
       spark.listenerManager.unregister(queries)
-      sc.removeSparkListener(jobs)
+      sc.removeSparkListener(listener)
     }
+  }
+
+  /** (SQL executions, Spark jobs outside any SQL execution) that `body`
+    * runs. */
+  private def actionsOf(body: => Unit): (Int, Int) = {
+    val (executions, jobs) = observe(body)
+    // a stray job is e.g. a parquet schema inference
+    (executions, jobs.count(_.getProperty("spark.sql.execution.id") == null))
   }
 
   test("deletion vectors: a commit is one probe plus one round of writes") {
@@ -208,6 +217,47 @@ class DvCommitSpec extends SparkSpec {
     val (_, stray) = actionsOf(TxLog.read(spark, t).count())
     assert(stray === 0, s"a DV read ran $stray job(s) outside a SQL execution")
     assert(TxLog.read(spark, t).count() === 1000L - 10 - 10 + 1)
+  }
+
+  // ------------------------------------------ caller context on staging jobs
+
+  test("staging jobs carry the caller's local properties and job tags") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val key = "graft.test.caller"
+    val t = tmp("dvctx")
+    TxLog.overwrite(spark.range(0, 400)
+      .select(col("id"), (col("id") % 10).cast("double").as("v")).repartition(2), t)
+    val src = Seq((3L, 7.0), (103L, 7.0), (5000L, 7.0)).toDF("id", "v")
+    /** A DV merge and a copy-on-write merge, each staging through the
+      * pool, run on a fresh thread that set `who` as a property and a
+      * job tag; returns the properties of every job they ran. */
+    def mergesAs(who: String): Seq[java.util.Properties] = observe {
+      val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+      val caller = new Thread(() => {
+        sc.setLocalProperty(key, who)
+        sc.addJobTag(s"tag-$who")
+        try {
+          TxLog.mergeWithDv(src, t, Seq("id"))
+          TxLog.merge(src, t, Seq("id"))
+        } catch { case e: Throwable => failure.set(e) }
+        finally { sc.clearJobTags(); sc.setLocalProperty(key, null) }
+      })
+      caller.start(); caller.join()
+      Option(failure.get).foreach(e => throw e)
+    }._2
+    def tags(p: java.util.Properties): Set[String] =
+      Option(p.getProperty("spark.job.tags")).toSet.flatMap((s: String) => s.split(",").toSet)
+    val first = mergesAs("one")
+    val second = mergesAs("two")
+    for ((who, jobs, other) <- Seq(("one", first, "two"), ("two", second, "one"))) {
+      assert(jobs.nonEmpty)
+      jobs.foreach { p =>
+        assert(p.getProperty(key) === who, s"a job of caller $who lost its property")
+        assert(tags(p).contains(s"tag-$who"), s"a job of caller $who lost its job tag")
+        assert(!tags(p).contains(s"tag-$other"), s"a job of caller $who carried $other's tag")
+      }
+    }
   }
 
   // ------------------------------------------ duplicate-key gate

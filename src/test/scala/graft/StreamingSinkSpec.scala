@@ -1,9 +1,14 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.etl.{Compaction, ConsumerPipeline, PartitionedSink}
-import graft.streaming.EventsStream
+import graft.streaming.{EventsStream, ScratchStream}
 
 class StreamingSinkSpec extends SparkSpec {
 
@@ -135,5 +140,78 @@ class StreamingSinkSpec extends SparkSpec {
     assert(compacted.count() == c.count())
     assert(compacted.agg(round(sum("total_amount"), 2)).collect()(0).getDouble(0) ==
       c.agg(round(sum("total_amount"), 2)).collect()(0).getDouble(0))
+  }
+
+  // ------------------------------------------ the scratch-stream driver
+
+  /** A foreachBatch writer over `stream`'s `src` dir that records each
+    * non-empty batch's distinct `tag` values, in batch order. */
+  private def recording(stream: ScratchStream, options: (String, String)*)
+      : (org.apache.spark.sql.streaming.DataStreamWriter[_], ConcurrentLinkedQueue[Seq[String]]) = {
+    val seen = new ConcurrentLinkedQueue[Seq[String]]()
+    val writer = stream.source("src", options: _*).writeStream
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        if (!b.isEmpty)
+          seen.add(b.select("tag").distinct().collect().map(_.getString(0)).toSeq.sorted)
+        ()
+      }
+    (writer, seen)
+  }
+
+  test("scratch stream: N staged drops are N data micro-batches, in order") {
+    val stream = new ScratchStream(spark, "ss_drops")
+    // each drop spans two files, so a drop split across polls would show
+    val drops = (0 until 4).map(i =>
+      Seq("src" -> spark.range(i * 10L, i * 10L + 10L, 1L, 2).select(lit(s"d$i").as("tag"))))
+    stream.stage(drops.head)
+    val (writer, seen) = recording(stream)
+    val q = stream.run(writer, drops = drops.tail)
+    assert(q.recentProgress.count(_.numInputRows > 0) === 4)
+    assert(seen.asScala.toSeq === (0 until 4).map(i => Seq(s"d$i")))
+  }
+
+  test("scratch stream: setTimes orders a maxFilesPerTrigger backlog") {
+    val stream = new ScratchStream(spark, "ss_order")
+    val t0 = System.currentTimeMillis()
+    // staged a, b, c, d; stamped so that the file order is d, b, a, c
+    Seq("a" -> (t0 - 60000L), "b" -> (t0 - 120000L), "c" -> t0, "d" -> (t0 - 180000L))
+      .foreach { case (tag, mtime) =>
+        stream.stage(Seq("src" -> spark.range(1).select(lit(tag).as("tag")).coalesce(1)), mtime)
+      }
+    val (writer, seen) = recording(stream, "maxFilesPerTrigger" -> "1")
+    stream.run(writer)
+    assert(seen.asScala.toSeq === Seq("d", "b", "a", "c").map(Seq(_)))
+  }
+
+  test("scratch stream: a throwing query restores the scratch confs") {
+    val partsKey = "spark.sql.shuffle.partitions"
+    val sumKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+    val prior = Seq(partsKey, sumKey).map(k => k -> spark.conf.getAll.get(k))
+    def throwing(): (String, String) = {
+      val stream = new ScratchStream(spark, "ss_throw")
+      stream.stage(Seq("src" -> spark.range(3).select(lit("x").as("tag"))))
+      val during = new java.util.concurrent.atomic.AtomicReference[(String, String)]()
+      val e = intercept[Exception](stream.run(
+        stream.source("src").writeStream.foreachBatch { (_: DataFrame, _: Long) =>
+          during.set((spark.conf.get(partsKey), spark.conf.get(sumKey)))
+          throw new IllegalStateException("boom")
+        },
+        stateRows = Some(10000L)))
+      assert(e.getMessage.contains("boom"))
+      during.get
+    }
+    try {
+      spark.conf.set(partsKey, "8"); spark.conf.set(sumKey, "true")
+      assert(throwing() === ("4", "false"))
+      assert(spark.conf.getAll.get(partsKey) === Some("8"))
+      assert(spark.conf.getAll.get(sumKey) === Some("true"))
+      spark.conf.unset(partsKey); spark.conf.unset(sumKey)
+      assert(throwing() === ("4", "false"))
+      assert(spark.conf.getAll.get(partsKey) === None)
+      assert(spark.conf.getAll.get(sumKey) === None)
+    } finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 }

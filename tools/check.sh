@@ -1,15 +1,32 @@
 #!/usr/bin/env bash
 # Full local gate: compile, specs, the perfbench self-test, oracle parity
-# (sf0.01), bench (sf0.1).
+# (sf0.01), bench (sf0.1). A failing step names itself and prints the
+# tail of its log; every step's full log stays in the printed log dir.
 set -euo pipefail
 cd "$(dirname "$0")/.."
+LOGS=$(mktemp -d "${TMPDIR:-/tmp}/graft_check.XXXXXX")
+echo "check.sh: step logs in $LOGS"
 
-sbt -batch test 2>&1 | grep -E "^\[info\] Tests: " || exit 1
+# step <name> <command...>: run the command with its output in <name>.log
+step() {
+  local name=$1 rc=0; shift
+  "$@" > "$LOGS/$name.log" 2>&1 || rc=$?
+  if [ "$rc" -ne 0 ]; then
+    echo "check.sh: step '$name' failed (exit $rc); last lines of $LOGS/$name.log:" >&2
+    tail -n 40 "$LOGS/$name.log" >&2
+    exit 1
+  fi
+}
+
+step specs sbt -batch test
+grep -E "^\[info\] Tests: " "$LOGS/specs.log"
 # pins the benchmark's metric contract, including the replay and
 # checkpoint counts the TxLog checkpoint policy produces
-(cd perfbench && sbt -batch test) 2>&1 | grep -E "^\[info\] Tests: " || exit 1
+step perfbench-selftest bash -c 'cd perfbench && sbt -batch test'
+grep -E "^\[info\] Tests: " "$LOGS/perfbench-selftest.log"
 rm -rf /tmp/graft_verify
-sbt -batch 'runMain graft.Verify /root/testdata/sf0.01 /tmp/graft_verify' >/dev/null 2>&1
-python3 tools/parity.py /root/testdata/sf0.01 /tmp/graft_verify
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-16} \
-  sbt -batch 'runMain graft.Bench' 2>/dev/null | grep '"metric"'
+step verify sbt -batch "runMain graft.Verify $HOME/testdata/sf0.01 /tmp/graft_verify"
+python3 tools/parity.py "$HOME/testdata/sf0.01" /tmp/graft_verify
+step bench env SPARK_GRAFT_SF_DIR="$HOME/testdata/sf0.1" \
+  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" sbt -batch 'runMain graft.Bench'
+grep '"metric"' "$LOGS/bench.log"

@@ -5,6 +5,9 @@ Usage:  python3 tools/parity.py [sfDir] [verifyOutDir]
 
 Assumes `sbt "runMain graft.Verify <sfDir> <verifyOutDir>"` has already
 produced <verifyOutDir>/<query>/ parquet dumps + oracle_sql.json.
+oracle_sql.json always holds every query; when SPARK_GRAFT_VERIFY_ONLY
+(comma-separated keys) limited the Verify run, set it here too and only
+those queries are compared.
 Registers each test table as a DuckDB view, runs every oracle SQL, and
 compares against the Spark dump (columns sorted by name, rows sorted,
 exact value equality; float tolerance reported separately).
@@ -12,6 +15,7 @@ exact value equality; float tolerance reported separately).
 Dev tool only — the shipped Scala library does not depend on this.
 """
 import json
+import os
 import sys
 
 import duckdb
@@ -39,6 +43,13 @@ def main():
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
     oracle = json.load(open(f"{out}/oracle_sql.json"))
+    only = os.environ.get("SPARK_GRAFT_VERIFY_ONLY")
+    if only is not None:
+        want = {k.strip() for k in only.split(",") if k.strip()}
+        missing = sorted(want - oracle.keys())
+        if missing:
+            sys.exit(f"SPARK_GRAFT_VERIFY_ONLY names unknown queries: {', '.join(missing)}")
+        oracle = {k: v for k, v in oracle.items() if k in want}
     ok = fail = 0
     for name, sql in sorted(oracle.items()):
         try:
