@@ -605,11 +605,6 @@ object TxLog {
   private def metadataPath(hfs: FileSystem, root: Path, rel: String): String =
     new Path(hfs.makeQualified(root), rel).toUri.toString
 
-  /** The live files whose `_metadata.file_path` a probe collected. */
-  private def filesAt(hfs: FileSystem, root: Path, files: Seq[AddFile],
-      probed: Set[String]): Seq[AddFile] =
-    files.filter(f => probed.contains(metadataPath(hfs, root, f.path)))
-
   /** A file's physical row count. A legacy add with unknown numRecords
     * gets one footer read — otherwise a fully-deleted legacy file would
     * survive as a zero-logical-row husk, and a DV ratio would divide by
@@ -640,32 +635,49 @@ object TxLog {
     * For a write, file sizing IS the goal (Spark's own docs recommend
     * parallelismFirst=false for efficient sizing; guide §2.2/§6), so
     * staging scopes it off and restores after. Session conf is global,
-    * not thread-local: the only concurrent writers inside one commit
-    * are a commit's overlapped STAGING writes, which both want the same
-    * value and captured the same prior, so the restore race is benign. */
+    * not thread-local, and a commit's overlapped staging writes (like
+    * racing commits in one session) hold the scope at once: if each
+    * saved and restored the value it found, a late restore would re-set
+    * the `false` an earlier scope wrote and leave it set for every later
+    * query of the session. So the scopes of one session share one count:
+    * the first to enter records the prior value, set or unset, and the
+    * last to leave restores it. */
   private def withFileSizedCoalescing[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try body finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    sizingScopes.synchronized {
+      // getAll holds the explicitly set keys only: None = unset
+      val (n, prior) = sizingScopes.getOrElse(spark, (0, spark.conf.getAll.get(key)))
+      sizingScopes(spark) = (n + 1, prior)
+      spark.conf.set(key, "false")
+    }
+    try body finally sizingScopes.synchronized {
+      sizingScopes(spark) match {
+        case (1, prior) =>
+          sizingScopes.remove(spark)
+          prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+        case (n, prior) => sizingScopes(spark) = (n - 1, prior)
+      }
     }
   }
+
+  /** Per session: (open [[withFileSizedCoalescing]] scopes, the value
+    * they will restore). */
+  private val sizingScopes = mutable.HashMap.empty[SparkSession, (Int, Option[String])]
 
   /** Stage `df` as immutable parquet files under a fresh per-commit dir;
     * returns add actions with table-root-relative paths and parsed
     * partition values. `rearrange=false` keeps the caller's physical
     * layout (clustered optimize arranges its own range partitioning).
     * With `bloomCols`, each add action additionally records a per-file
-    * bloom filter per column ([[computeBlooms]]). */
+    * bloom filter per column ([[computeBlooms]]). `dir` prefixes the
+    * staging dir's name (`cdc` for change files). */
   private def stage(df: DataFrame, table: String, partitionCols: Seq[String],
                     rearrange: Boolean = true,
                     bloomCols: Seq[String] = Seq.empty,
                     columnMap: Map[String, String] = Map.empty,
-                    optimizeLayout: Boolean = false): Seq[AddFile] = {
+                    optimizeLayout: Boolean = false, dir: String = "data"): Seq[AddFile] = {
     val (hfs, root) = fs(df.sparkSession, table)
-    val stagingName = s"data-${java.util.UUID.randomUUID()}"
+    val stagingName = s"$dir-${java.util.UUID.randomUUID()}"
     val staging = new Path(root, stagingName)
     // column mapping: files are written under PHYSICAL names so every
     // file of the table — pre- and post-rename — shares one layout;
@@ -685,8 +697,8 @@ object TxLog {
     //    every partitioned write an N-task serial bottleneck at any
     //    cluster size (hash-by-partition-cols is definitionally
     //    skewed, guide §2.5);
-    //  - engine-made rewrite frames (merge/update/delete copy-on-write
-    //    unions — `optimizeLayout`) REBALANCE before writing: they
+    //  - engine-made frames (row-level rewrites, new rows and change
+    //    feeds — `optimizeLayout`) REBALANCE before writing: they
     //    otherwise inherit the shuffle partitioning of whatever
     //    computed them and spray each commit into dozens of tiny
     //    files, which bloats the snapshot, the commit-time footer
@@ -729,35 +741,6 @@ object TxLog {
       val blooms = computeBlooms(df.sparkSession, staging, physBloomCols, expected)
       files.map(f =>
         f.copy(blooms = blooms.getOrElse(fileName(f.path), Map.empty)))
-    }
-  }
-
-  /** Stage a change-data frame (table columns + `_change_type`) as
-    * immutable parquet under a `cdc-` dir; returns (relative path, row
-    * count, byte size) for cdc actions — the counts come from footer
-    * metadata (no data I/O, like [[stage]]) so streaming admission can
-    * budget the feed's delivered volume from the log alone. Unpartitioned
-    * on purpose: partition columns ride as ordinary columns, so feed
-    * reads are plain parquet scans. */
-  private def stageCdc(df: DataFrame, table: String): Seq[(String, Long, Long)] = {
-    val (hfs, root) = fs(df.sparkSession, table)
-    val stagingName = s"cdc-${java.util.UUID.randomUUID()}"
-    val staging = new Path(root, stagingName)
-    // cdc frames are engine-made unions (pre/post images + deletes +
-    // inserts) carrying the merge join's partitioning — REBALANCE so a
-    // commit's change files are few and advisory-sized, not one tiny
-    // file per upstream task (optimization r16; same rationale as
-    // stage's optimizeLayout)
-    withFileSizedCoalescing(df.sparkSession) {
-      df.hint("rebalance").write.mode("overwrite").parquet(staging.toString)
-    }
-    val qualified = hfs.makeQualified(staging).toString
-    val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    parquetFilesUnder(hfs, staging).map { status =>
-      val f = status.getPath
-      val rows = ParquetStats.readFooter(conf, f)._1
-      (s"$stagingName/${f.toString.stripPrefix(qualified).stripPrefix("/")}",
-        math.max(rows, 0L), status.getLen)
     }
   }
 
@@ -957,59 +940,53 @@ object TxLog {
     stats
   }
 
-  /** Up to three duplicated source keys as probe rows (`__kind` =
-    * "dup", `__val` = the key), shaped to union with a touched-file
-    * probe so the duplicate-key gate costs no action of its own. */
-  private def duplicateKeyProbe(source: DataFrame, keyCols: Seq[String]): DataFrame =
-    source.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).limit(3)
-      .select(lit("dup").as("__kind"),
-        concat_ws(" | ", keyCols.map(c => col(c).cast("string")): _*).as("__val"))
+  /** A [[MergeClause]] as the row-level kernel runs it: its group (`'m'`
+    * matched, `'n'` not matched, `'b'` not matched by source), its
+    * condition, its SET (or INSERT VALUES) expressions, and whether it
+    * deletes. [[delete]] and [[update]] build theirs from Columns: they
+    * are `MatchedDelete(cond)` and `MatchedUpdate(cond, set)` over the
+    * target alone. */
+  private final case class RowClause(group: Char, cond: Column,
+      set: Map[String, Column] = Map.empty, deletes: Boolean = false)
 
-  /** The MERGE duplicate-key error, raised when a fused probe collected
-    * any [[duplicateKeyProbe]] row. */
-  private def requireUniqueKeys(probeRows: Array[Row], keyCols: Seq[String]): Unit = {
-    val dups = probeRows.filter(_.getString(0) == "dup").map(_.getString(1))
-    if (dups.nonEmpty) throw new IllegalArgumentException(
-      s"merge source has duplicate rows for key (${keyCols.mkString(", ")}) — " +
-      s"e.g. ${dups.mkString("; ")}. Collapse the source to one row per key " +
-      "(StreamMerge does this per micro-batch) before merging.")
+  private def rowClause(c: MergeClause): RowClause = {
+    import MergeClause._
+    def holds(cd: Option[String]) = cd.map(expr).getOrElse(lit(true))
+    def exprs(m: Map[String, String]) = m.map { case (k, e) => k -> expr(e) }
+    c match {
+      case MatchedUpdate(cd, s) => RowClause('m', holds(cd), exprs(s))
+      case MatchedDelete(cd) => RowClause('m', holds(cd), deletes = true)
+      case NotMatchedInsert(cd, v) => RowClause('n', holds(cd), exprs(v.getOrElse(Map.empty)))
+      case NotMatchedBySourceUpdate(cd, s) => RowClause('b', holds(cd), exprs(s))
+      case NotMatchedBySourceDelete(cd) => RowClause('b', holds(cd), deletes = true)
+    }
   }
-
-  /** The `_metadata.file_path` values a fused probe collected. */
-  private def probedPaths(probeRows: Array[Row]): Set[String] =
-    probeRows.filter(_.getString(0) == "path").map(_.getString(1)).toSet
 
   /** Copy-on-write MERGE (upsert) keyed on `keyCols` — Delta's
     * `MERGE INTO t USING s ON keys WHEN MATCHED THEN UPDATE SET *
     * WHEN NOT MATCHED THEN INSERT *`:
     *   1. find the files containing rows whose key matches the source
-    *      (file-granular: one semi-join over the snapshot with the
+    *      (file-granular: one join over the snapshot with the
     *      `_metadata.file_path` column the relation exposes);
     *   2. rewrite ONLY those files, replacing matched rows wholesale
     *      with their source row (a key matched by the source updates
     *      every copy) and keeping unmatched neighbors byte-identical;
     *   3. append source rows matching nothing as inserts;
     *   4. one ACID commit: remove touched files, add rewritten ones.
-    * Untouched files are never read past their key column nor
-    * rewritten — at 100 TB a merge touching one partition's files costs
-    * that partition, not the table. Optimistic like every writer here:
-    * a lost commit race recomputes against the new snapshot.
+    * Untouched files are never rewritten — at 100 TB a merge touching
+    * one partition's files costs that partition, not the table.
+    * Optimistic like every writer here: a lost commit race recomputes
+    * against the new snapshot.
     *
-    * A preset clause list on the [[mergeConditional]] kernel: the source
-    * gains a non-null `deleteWhen` flag column, then the kernel runs
-    *   - `MatchedDelete(flag)`,
-    *   - `MatchedUpdate(None, every non-key source column -> s.<col>)`,
-    *   - `NotMatchedInsert(NOT flag)`.
+    * A preset clause list on the row-level kernel ([[mergePreset]]).
     *
     * The source must be key-unique: two source rows with the same key
     * would each claim the same target row, so the result would depend on
     * join order — like Delta's MERGE, that is an error here, detected
     * up-front (one groupBy-count of the source keys), never silent row
-    * multiplication. All three key joins (touched-file semi, update,
-    * insert anti) use plain `=` SQL-MERGE equality: a NULL-keyed source
-    * row matches nothing and inserts; a NULL-keyed target row is never
-    * updated.
+    * multiplication. All key joins (matched rows, insert anti) use plain
+    * `=` SQL-MERGE equality: a NULL-keyed source row matches nothing and
+    * inserts; a NULL-keyed target row is never updated.
     *
     * `deleteWhen` is Delta's `WHEN MATCHED AND cond THEN DELETE` clause,
     * evaluated against the SOURCE row: a matched pair whose source
@@ -1037,18 +1014,31 @@ object TxLog {
             deleteWhen: Option[org.apache.spark.sql.Column] = None,
             evolveSchema: Boolean = false,
             commitTag: Option[String] = None): MergeStats = {
+    val (flagged, clauses) = mergePreset(source, keyCols, deleteWhen)
+    rowLevel(source.sparkSession, table, "merge", Some((flagged, keyCols)), clauses,
+      dv = false, evolveFrom = if (evolveSchema) Some(source.schema) else None, commitTag)
+  }
+
+  /** MERGE's one preset clause list, behind [[merge]] and
+    * [[mergeWithDv]]: the source gains a non-null `deleteWhen` flag
+    * column, then the kernel runs
+    *   - `MatchedDelete(flag)`,
+    *   - `MatchedUpdate(None, every non-key source column -> s.<col>)`,
+    *   - `NotMatchedInsert(NOT flag)`.
+    * Returns the flagged source and the clauses. */
+  private def mergePreset(source: DataFrame, keyCols: Seq[String],
+      deleteWhen: Option[Column]): (DataFrame, Seq[RowClause]) = {
     import MergeClause._
     // computed on the caller's frame, so the condition resolves against
     // source columns only; NULL and an absent clause mean "not a delete"
     val flagged = source.withColumn("__merge_delete",
       coalesce(deleteWhen.getOrElse(lit(false)), lit(false)))
     val flag = "s.__merge_delete"
-    mergeKernel(flagged, table, keyCols, Seq(
-        MatchedDelete(Some(flag)),
-        MatchedUpdate(None, source.columns.toSeq.filterNot(keyCols.contains)
-          .map(c => c -> s"s.`${c.replace("`", "``")}`").toMap),
-        NotMatchedInsert(Some(s"NOT $flag"))),
-      evolveFrom = if (evolveSchema) Some(source.schema) else None, commitTag)
+    (flagged, Seq(
+      MatchedDelete(Some(flag)),
+      MatchedUpdate(None, source.columns.toSeq.filterNot(keyCols.contains)
+        .map(c => c -> s"s.`${c.replace("`", "``")}`").toMap),
+      NotMatchedInsert(Some(s"NOT $flag"))).map(rowClause))
   }
 
   /** Conditional multi-clause MERGE — the full Delta `MERGE INTO` clause
@@ -1073,170 +1063,16 @@ object TxLog {
     * files for every row-level change. */
   def mergeConditional(source: DataFrame, table: String, keyCols: Seq[String],
                        clauses: Seq[MergeClause]): MergeStats =
-    mergeKernel(source, table, keyCols, clauses, evolveFrom = None, commitTag = None)
-
-  /** The one copy-on-write MERGE kernel behind [[merge]] and
-    * [[mergeConditional]]. `evolveFrom` (schema evolution) names the
-    * schema whose extra columns widen the table — the caller's, so a
-    * helper column the wrapper adds never becomes a table column;
-    * `commitTag` rides the commit's tag channel. */
-  private def mergeKernel(source: DataFrame, table: String, keyCols: Seq[String],
-                          clauses: Seq[MergeClause], evolveFrom: Option[StructType],
-                          commitTag: Option[String]): MergeStats = {
-    import MergeClause._
-    val spark = source.sparkSession
-    val (hfs, root) = fs(spark, table)
-    require(clauses.nonEmpty, "mergeConditional needs at least one WHEN clause")
-    val matchedCl = clauses.filter {
-      case _: MatchedUpdate | _: MatchedDelete => true; case _ => false }
-    val insertCl = clauses.collect { case c: NotMatchedInsert => c }
-    val bySrcCl = clauses.filter {
-      case _: NotMatchedBySourceUpdate | _: NotMatchedBySourceDelete => true
-      case _ => false }
-    // a clause's condition, and its SET (or INSERT VALUES) expressions
-    def condOf(c: MergeClause): Option[String] = c match {
-      case MatchedUpdate(cd, _) => cd; case MatchedDelete(cd) => cd
-      case NotMatchedInsert(cd, _) => cd
-      case NotMatchedBySourceUpdate(cd, _) => cd; case NotMatchedBySourceDelete(cd) => cd }
-    def setOf(cl: MergeClause): Map[String, String] = cl match {
-      case MatchedUpdate(_, s) => s
-      case NotMatchedBySourceUpdate(_, s) => s
-      case NotMatchedInsert(_, v) => v.getOrElse(Map.empty)
-      case _ => Map.empty
-    }
-    (matchedCl ++ bySrcCl).foreach(c => require(
-      setOf(c).keySet.intersect(keyCols.toSet).isEmpty,
-      s"merge clause must not update key column(s) " +
-        s"${setOf(c).keySet.intersect(keyCols.toSet).mkString(", ")} — " +
-        "re-keying rows mid-merge would change which rows the clauses match"))
-    // the duplicate-key gate rides the SAME action as the touched-file
-    // probe below (one fused collect per attempt): each was a separate
-    // full action, and for incremental commits the per-action fixed
-    // cost (analyze -> optimize -> AQE stage loop -> schedule) is the
-    // dominant term, not the data (optimization r16)
-    val dupProbe = duplicateKeyProbe(source, keyCols)
-    var dupsChecked = false
-    // SQL MERGE three-valued logic: a NULL condition is "not satisfied"
-    def condExpr(c: Option[String]): Column =
-      coalesce(c.map(expr).getOrElse(lit(true)), lit(false))
-    // 1-based index of the first clause whose condition holds; 0 = none
-    def firstHolding(cl: Seq[MergeClause]): Column =
-      cl.zipWithIndex.foldRight(lit(0): Column) {
-        case ((c, i), els) => when(condExpr(condOf(c)), lit(i + 1)).otherwise(els) }
-    // value of column c: the SET expr of the clause `act` selected, else `base`
-    def chosen(cl: Seq[MergeClause], act: String, base: Column, c: String): Column =
-      cl.zipWithIndex.foldRight(base) { case ((k, i), els) =>
-        setOf(k).get(c).fold(els)(e => when(col(act) === (i + 1), expr(e)).otherwise(els)) }
-    def isDelete(c: MergeClause) = c match {
-      case _: MatchedDelete | _: NotMatchedBySourceDelete => true; case _ => false }
-    // rows whose selected matched or by-source clause deletes them (with
-    // delete = false: updates them)
-    def acting(delete: Boolean): Column = {
-      def in(act: String, cl: Seq[MergeClause]) = {
-        val ix = cl.zipWithIndex.collect { case (c, i) if isDelete(c) == delete => i + 1 }
-        if (ix.isEmpty) lit(false) else col(act).isin(ix: _*)
-      }
-      (col("__isM") && in("__mact", matchedCl)) || (!col("__isM") && in("__bact", bySrcCl))
-    }
-    transact(spark, table, "merge") { snapOpt =>
-      val snap = snapOpt.getOrElse(throw new IllegalStateException(
-        s"merge into non-existent table $table — overwrite first"))
-      requireCompatible(snap.meta.schema, StructType(snap.meta.schema.fieldNames.toSeq
-        .map(c => source.schema(source.schema.fieldIndex(c)))), table)
-      // schema evolution: extra columns append to the table schema
-      // (nullable — old rows have no value); partition columns can never
-      // arrive this way (they'd re-layout the table, which MERGE is not)
-      val extras = evolveFrom.toSeq.flatMap(_.fields.filterNot(f =>
-        snap.meta.schema.fieldNames.contains(f.name)))
-      extras.foreach(f => requireEvolvable(snap.meta, f.name, table))
-      val meta = if (extras.isEmpty) snap.meta
-        else snap.meta.copy(schema = StructType(
-          snap.meta.schema.fields ++ extras.map(_.copy(nullable = true))))
-      val cols = meta.schema.fieldNames.toSeq
-      val srcKeys = source.select(keyCols.map(col): _*).distinct()
-      // file-granular candidates: matched keys always; by-source clauses
-      // add files holding an UNMATCHED row satisfying some condition
-      // (their conditions reference t only, so they evaluate target-side).
-      // Both probes AND the duplicate-key gate ride one fused action.
-      val withPath = relationFor(spark, table, meta, snap.files)._1
-        .withColumn("__path", col("_metadata.file_path"))
-      def paths(rows: DataFrame) =
-        rows.select(lit("path").as("__kind"), col("__path").as("__val")).distinct()
-      val bySrcProbe = if (bySrcCl.isEmpty) Nil else Seq(paths(withPath
-        .alias("t") // metadata cols resolve pre-alias; t.* post-alias
-        .join(srcKeys, keyCols, "left_anti")
-        .filter(bySrcCl.map(c => condExpr(condOf(c))).reduce(_ || _))))
-      val probeRows = ((paths(withPath.join(srcKeys, keyCols, "left_semi")) +: bySrcProbe) ++
-        (if (dupsChecked) Nil else Seq(dupProbe))).reduce(_ unionAll _).collect()
-      requireUniqueKeys(probeRows, keyCols)
-      dupsChecked = true
-      val touched = filesAt(hfs, root, snap.files, probedPaths(probeRows))
-      // widened meta: rewritten files materialize the new columns; the
-      // old rows they carry surface typed NULLs through the parquet read
-      val touchedRows = relationFor(spark, table, meta, touched)._1
-      val joinCond = keyCols.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
-      val isM = col("s.__m").isNotNull
-      // the change join and the insert anti-join each feed BOTH staged
-      // writes (data files, then cdc files) — materialized once, the
-      // touched files are read and joined once per commit instead of
-      // twice (the working set is the rewrite set, which copy-on-write
-      // materializes as new files anyway; MEMORY_AND_DISK spills);
-      // clause indices are cheap projections on top
-      val acted = graft.Caching.materialize(touchedRows.alias("t")
-        .join(source.withColumn("__m", lit(true)).alias("s"), joinCond, "left")
-        .withColumn("__isM", isM)
-        .withColumn("__mact", when(isM, firstHolding(matchedCl)).otherwise(lit(0)))
-        .withColumn("__bact", when(!isM, firstHolding(bySrcCl)).otherwise(lit(0))))
-      def outCol(c: String): Column =
-        when(col("__isM"), chosen(matchedCl, "__mact", col(s"t.$c"), c))
-          .otherwise(chosen(bySrcCl, "__bact", col(s"t.$c"), c)).as(c)
-      val survivors = acted.filter(!acting(delete = true)).select(cols.map(outCol): _*)
-      // inserts: unmatched source rows through the not-matched chain —
-      // anti-joined against the TOUCHED files' matched keys, not the
-      // whole table: a source key present anywhere in the table is by
-      // definition in a touched file (that is how touched files are
-      // chosen), so the two sets agree without a full-table key scan
-      val unmatched = source
-        .join(acted.filter(col("__isM"))
-          .select(keyCols.map(k => col(s"t.$k").as(k)): _*).distinct(),
-          keyCols, "left_anti")
-        .alias("s")
-      val inserts = graft.Caching.materialize(
-        unmatched.withColumn("__iact", firstHolding(insertCl))
-          .filter(col("__iact") > 0)
-          .select(cols.map(c => chosen(insertCl, "__iact", col(s"s.$c"), c).as(c)): _*))
-      try {
-        // change feed (Delta CDF): pre/post images of updated rows +
-        // deletes + inserts, written as cdc files the snapshot never sees
-        val updatedRows = acted.filter(acting(delete = false))
-        val deletedRows = acted.filter(acting(delete = true))
-        val cdcFrame = updatedRows
-          .select(cols.map(c => col(s"t.$c").as(c)): _*)
-          .withColumn("_change_type", lit("update_preimage"))
-          .unionByName(updatedRows.select(cols.map(outCol): _*)
-            .withColumn("_change_type", lit("update_postimage")))
-          .unionByName(deletedRows.select(cols.map(c => col(s"t.$c").as(c)): _*)
-            .withColumn("_change_type", lit("delete")))
-          .unionByName(inserts.withColumn("_change_type", lit("insert")))
-        // both writes read the cached working set
-        copyOnWrite(snap, table, touched, survivors.unionByName(inserts), cdcFrame,
-          commitInfoJson("merge", commitTag) +:
-            (if (meta eq snap.meta) Nil else Seq(metaJson(meta))))
-      } finally { acted.unpersist(); inserts.unpersist() }
-    }._2
-  }
+    rowLevel(source.sparkSession, table, "merge", Some((source, keyCols)),
+      clauses.map(rowClause), dv = false)
 
   /** Copy-on-write DELETE: drop rows matching `condition`. File-granular
-    * like [[merge]] — only files that MAY hold a matching row (decided
-    * by partition pruning + min/max skipping against log metadata, zero
-    * data I/O) are read and rewritten without their matching rows; a
-    * file whose survivors are unchanged in count is re-added as written.
-    * One ACID commit. */
+    * like [[merge]] — only files holding a matching row are read and
+    * rewritten without their matching rows. One ACID commit. */
   def delete(spark: SparkSession, table: String,
              condition: org.apache.spark.sql.Column): MergeStats =
-    rewriteWhere(spark, table, condition, op = "delete")(
-      (rows, cond) => rows.filter(!cond || cond.isNull))(
-      (rows, cond) => rows.filter(cond).withColumn("_change_type", lit("delete")))
+    rowLevel(spark, table, "delete", None,
+      Seq(RowClause('m', condition, deletes = true)), dv = false)
 
   /** Merge-on-read DELETE via deletion vectors (Delta DVs): instead of
     * rewriting every touched file ([[delete]]'s copy-on-write), commit an
@@ -1247,7 +1083,7 @@ object TxLog {
     * kilobytes: commit cost is O(matched rows), not O(touched bytes).
     * Like every DV verb it runs one probe action and one overlapped
     * round of staging writes (here sidecars and cdc), and takes each
-    * file's new DV size from the log — see [[dvMergeOnRead]].
+    * file's new DV size from the log — see [[rowLevel]].
     *
     * Contract mirrors Delta's:
     *  - readers subtract DV rows via the snapshot path (broadcast
@@ -1265,9 +1101,15 @@ object TxLog {
     * `filesAdded` = 0 — no data file is written, which the spec pins. */
   def deleteWithDv(spark: SparkSession, table: String,
                    condition: org.apache.spark.sql.Column): MergeStats =
-    dvMergeOnRead(spark, table, op = "delete")(_.filter(condition))(
-      _ => None)(
-      _.withColumn("_change_type", lit("delete")))
+    rowLevel(spark, table, "delete", None,
+      Seq(RowClause('m', condition, deletes = true)), dv = true)
+
+  /** Copy-on-write UPDATE: `SET col = expr` on rows matching `condition`.
+    * Same file-granular selection as [[delete]]. */
+  def update(spark: SparkSession, table: String,
+             condition: org.apache.spark.sql.Column,
+             set: Map[String, org.apache.spark.sql.Column]): MergeStats =
+    rowLevel(spark, table, "update", None, Seq(RowClause('m', condition, set)), dv = false)
 
   /** Merge-on-read UPDATE via deletion vectors — [[deleteWithDv]]'s
     * argument applies just as hard to small updates (GDPR corrections,
@@ -1282,95 +1124,106 @@ object TxLog {
     * `filesAdded` = the appended post-image files. */
   def updateWithDv(spark: SparkSession, table: String,
                    condition: org.apache.spark.sql.Column,
-                   set: Map[String, org.apache.spark.sql.Column]): MergeStats = {
-    def applied(rows: DataFrame): DataFrame =
-      rows.select(rows.columns.toSeq.map(c =>
-        set.get(c).map(_.as(c)).getOrElse(col(c))): _*)
-    dvMergeOnRead(spark, table, op = "update")(_.filter(condition))(
-      rows => Some(applied(rows)))(
-      rows => rows.withColumn("_change_type", lit("update_preimage"))
-        .unionByName(applied(rows)
-          .withColumn("_change_type", lit("update_postimage"))))
-  }
+                   set: Map[String, org.apache.spark.sql.Column]): MergeStats =
+    rowLevel(spark, table, "update", None, Seq(RowClause('m', condition, set)), dv = true)
 
   /** Merge-on-read MERGE via deletion vectors — completes the DV family
     * ([[deleteWithDv]], [[updateWithDv]]): the upsert DVs every MATCHED
     * target row out of its file and appends the new images (matched
     * sources' post-images + unmatched sources' inserts) as fresh data
-    * files, in ONE commit. Semantics mirror [[merge]] exactly —
-    * wholesale row replacement per matched key, `deleteWhen` rows
-    * dropped not appended, key-unique source enforced, identical CDF
-    * output — but commit cost is O(matched + inserted rows), never
-    * O(touched files' bytes): the CDC-upsert shape at 100 TB, where a
-    * daily correction batch matching 0.1% of rows must not rewrite the
-    * files holding them. Schema evolution is NOT supported here (a
-    * widened schema must rewrite files to stay uniform — use [[merge]]
-    * with `evolveSchema`).
-    *
-    * Cost: the duplicate-key gate rides the touched-file probe action,
-    * as in [[merge]]; then sidecars, appended images and cdc stage in
-    * one overlapped round. Every non-deleted source row is a new image
-    * (matched or not), so the appended files need no join; the change
-    * feed tells inserts from post-images by an anti-join against the
-    * cached matched rows — no scan of the whole table. */
+    * files, in ONE commit. Semantics mirror [[merge]] exactly — the same
+    * preset clause list ([[mergePreset]]): wholesale row replacement per
+    * matched key, `deleteWhen` rows dropped not appended, key-unique
+    * source enforced, identical CDF output — but commit cost is
+    * O(matched + inserted rows), never O(touched files' bytes): the
+    * CDC-upsert shape at 100 TB, where a daily correction batch matching
+    * 0.1% of rows must not rewrite the files holding them. Schema
+    * evolution is NOT supported here (a widened schema must rewrite files
+    * to stay uniform — use [[merge]] with `evolveSchema`). */
   def mergeWithDv(source: DataFrame, table: String, keyCols: Seq[String],
                   deleteWhen: Option[org.apache.spark.sql.Column] = None)
                  : MergeStats = {
-    val spark = source.sparkSession
-    val srcKeys = source.select(keyCols.map(col): _*).distinct()
-    def srcFor(cols: Seq[String]): DataFrame = source.select(
-      cols.map(col) :+
-        coalesce(deleteWhen.getOrElse(lit(false)), lit(false)).as("__del"): _*)
-    dvMergeOnRead(spark, table, op = "merge", uniqueKeys = Some((source, keyCols)))(
-      _.join(srcKeys, keyCols, "left_semi"))(
-      rows => Some(srcFor(rows.columns.toSeq).filter(!col("__del")).drop("__del")))(
-      rows => {
-        val src = srcFor(rows.columns.toSeq)
-        val hitKeys = rows.select(keyCols.map(col): _*).distinct()
-        val matchedSrc = src.join(hitKeys, keyCols, "left_semi")
-        val delKeys = matchedSrc.filter(col("__del"))
-          .select(keyCols.map(col): _*)
-        rows.join(delKeys, keyCols, "left_anti")
-          .withColumn("_change_type", lit("update_preimage"))
-          .unionByName(matchedSrc.filter(!col("__del")).drop("__del")
-            .withColumn("_change_type", lit("update_postimage")))
-          .unionByName(rows.join(delKeys, keyCols, "left_semi")
-            .withColumn("_change_type", lit("delete")))
-          .unionByName(src.join(hitKeys, keyCols, "left_anti")
-            .filter(!col("__del")).drop("__del")
-            .withColumn("_change_type", lit("insert")))
-      })
+    val (flagged, clauses) = mergePreset(source, keyCols, deleteWhen)
+    rowLevel(source.sparkSession, table, "merge", Some((flagged, keyCols)), clauses, dv = true)
   }
 
-  /** Shared merge-on-read kernel: `hitsOf` selects the matched rows
-    * from the metadata-bearing relation (a predicate filter for
-    * DELETE/UPDATE, a key semi-join for MERGE); those rows are DV'd out
-    * of their files, `postImagesOf(matched rows)` optionally appends new
-    * data files (UPDATE/MERGE images; None for DELETE), `cdcOf` stages
-    * the change feed, and everything commits atomically.
-    *
-    * A commit costs what a copy-on-write commit costs:
-    *  - ONE probe action collects each touched file's count of new hits
-    *    (materializing the cached matched set on the way) and, given
-    *    `uniqueKeys`, runs MERGE's duplicate-key gate in the same action;
-    *  - each file's new DV size is its logged `dvRows` plus its new hits
-    *    — disjoint sets, because the hits come from the DV-filtered
-    *    relation — so no sidecar is read back to count it;
-    *  - sidecars, post-images and cdc stage in ONE overlapped round
-    *    ([[overlapped]]), all reading the cached matched set, not the table.
-    * A file whose DV would cover every physical row drops out (removed,
-    * no sidecar written). A commit that matched nothing pays one more
-    * action to learn whether it has anything to append (a MERGE may
-    * still insert). */
-  private def dvMergeOnRead(spark: SparkSession, table: String, op: String,
-      uniqueKeys: Option[(DataFrame, Seq[String])] = None)(
-      hitsOf: DataFrame => DataFrame)(
-      postImagesOf: DataFrame => Option[DataFrame])(
-      cdcOf: DataFrame => DataFrame): MergeStats = {
+  /** The one row-level kernel behind all seven verbs — Spark's
+    * `RowLevelOperation` split: one plan of what changes, written as
+    * `ReplaceData` (copy-on-write, `dv = false`) or as `WriteDelta`
+    * (deletion vectors, `dv = true`). `source` is a MERGE source and its
+    * key columns; without one, the matched clauses run over the target
+    * alone (DELETE, UPDATE). `evolveFrom` (schema evolution) names the
+    * schema whose extra columns widen the table — the caller's, so a
+    * helper column a wrapper adds never becomes a table column;
+    * `commitTag` rides the commit's tag channel. One commit, four steps:
+    *  1. ONE probe action collects each touched file's
+    *     `_metadata.file_path` and its count of acted rows, filling the
+    *     cached acted set; a keyed op's duplicate-key gate rides the same
+    *     action (each was a separate full action, and for incremental
+    *     commits the per-action fixed cost — analyze -> optimize -> AQE
+    *     stage loop -> schedule — is the dominant term, not the data;
+    *     optimization r16). A file is touched if it holds a matched row
+    *     or a row a by-source (or, without a source, a matched) clause
+    *     acts on.
+    *  2. The acted set, cached once, holds those rows, each with its
+    *     pre-image, the kind of its chosen clause (`__act`: update,
+    *     delete, or NULL when none acts) and its post-image. A matched row
+    *     no clause acts on is neither changed nor DV'd, but stays in the
+    *     set: it still blocks its key's insert. Inserts are the unmatched
+    *     source rows through the not-matched clauses — anti-joined against
+    *     the set's matched keys, not the whole table: a source key present
+    *     anywhere in the table is by definition a matched row of the set.
+    *  3. ONE change feed (Delta CDF): pre/post images of updated rows,
+    *     deletes and inserts, as cdc files the snapshot never sees.
+    *  4. The write strategy, every write in ONE overlapped round
+    *     ([[overlapped]]) reading the cached set, not the table:
+    *     copy-on-write stages the touched files' surviving rows (read
+    *     through any DV filter, minus the acted rows by (file, row
+    *     index)), the post-images and the inserts, and removes the
+    *     touched files; deletion vectors stage one sidecar per kept file
+    *     plus the post-images and inserts. A file's new DV size is its
+    *     logged `dvRows` plus its acted rows — disjoint, because those
+    *     come from the DV-filtered relation — so no sidecar is read back
+    *     to count it; a file whose DV would cover every physical row is
+    *     removed, no sidecar written.
+    * A commit that touches nothing writes nothing, except that a keyed
+    * copy-on-write one still stages its inserts and a keyed DV one pays
+    * one more action to learn whether it has any. The DV strategy serves
+    * only the DV verbs' clause lists: by-source clauses and schema
+    * evolution stay copy-on-write. */
+  private def rowLevel(spark: SparkSession, table: String, op: String,
+      source: Option[(DataFrame, Seq[String])], clauses: Seq[RowClause], dv: Boolean,
+      evolveFrom: Option[StructType] = None, commitTag: Option[String] = None): MergeStats = {
     import spark.implicits._
     val (hfs, root) = fs(spark, table)
-    val dupProbe = uniqueKeys.map { case (src, keys) => duplicateKeyProbe(src, keys) }
+    require(clauses.nonEmpty, "mergeConditional needs at least one WHEN clause")
+    // matched and by-source clauses act on target rows: the chosen one
+    // is its 1-based index in `acting`; inserts index into `inserting`
+    val (inserting, acting) = clauses.partition(_.group == 'n')
+    val keyCols = source.toSeq.flatMap(_._2)
+    acting.foreach(c => require(c.set.keySet.intersect(keyCols.toSet).isEmpty,
+      s"merge clause must not update key column(s) " +
+        s"${c.set.keySet.intersect(keyCols.toSet).mkString(", ")} — " +
+        "re-keying rows mid-merge would change which rows the clauses match"))
+    require(!dv || evolveFrom.isEmpty && !acting.exists(_.group == 'b'),
+      "deletion vectors serve matched clauses only, without schema evolution")
+    // up to three duplicated source keys, as probe rows that union with
+    // the touched-file probe
+    val dupProbe = source.map { case (s, keys) => s.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).limit(3)
+      .select(lit("dup").as("__kind"),
+        concat_ws(" | ", keys.map(c => col(c).cast("string")): _*).as("__val")) }
     var dupsChecked = false
+    // SQL MERGE three-valued logic: a NULL condition is "not satisfied";
+    // 1-based index of the first clause of `group` whose condition holds
+    def firstHolding(cl: Seq[RowClause], group: Char): Column =
+      cl.zipWithIndex.foldRight(lit(0): Column) { case ((c, i), els) =>
+        if (c.group != group) els
+        else when(coalesce(c.cond, lit(false)), lit(i + 1)).otherwise(els) }
+    // value of column c: the SET expr of the clause `ix` selected, else `base`
+    def chosen(cl: Seq[RowClause], ix: Column, base: Column, c: String): Column =
+      cl.zipWithIndex.foldRight(base) { case ((k, i), els) =>
+        k.set.get(c).fold(els)(e => when(ix === (i + 1), e).otherwise(els)) }
     // sidecars are keyed by an md5 of the file's STORED path: not the
     // name (one write job reuses part-00000-<uuid> across every
     // partition dir it touches), and a hex key needs no path escaping
@@ -1378,38 +1231,94 @@ object TxLog {
       java.security.MessageDigest.getInstance("MD5")
         .digest(stored.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         .map("%02x".format(_)).mkString
-    transact(spark, table, s"merge-on-read $op") { snapOpt =>
-      val snap = snapOpt.getOrElse(throw new IllegalStateException(
-        s"merge-on-read op on non-existent table $table — overwrite first"))
-      val cols = snap.meta.schema.fieldNames.toSeq
-      val rel = relationFor(spark, table, snap.meta, snap.files)._1
-      val hits = graft.Caching.materialize(hitsOf(rel
+    transact(spark, table, op) { snapOpt =>
+      val snap = existing(snapOpt, table)
+      source.foreach { case (s, _) => requireCompatible(snap.meta.schema,
+        StructType(snap.meta.schema.fieldNames.toSeq.map(c => s.schema(s.schema.fieldIndex(c)))),
+        table) }
+      // schema evolution: extra columns append to the table schema
+      // (nullable — old rows have no value); partition columns can never
+      // arrive this way (they'd re-layout the table, which MERGE is not)
+      val extras = evolveFrom.toSeq.flatMap(_.fields.filterNot(f =>
+        snap.meta.schema.fieldNames.contains(f.name)))
+      extras.foreach(f => requireEvolvable(snap.meta, f.name, table))
+      val meta = if (extras.isEmpty) snap.meta
+        else snap.meta.copy(schema = StructType(
+          snap.meta.schema.fields ++ extras.map(_.copy(nullable = true))))
+      val cols = meta.schema.fieldNames.toSeq
+      // widened meta: rewritten files materialize the new columns; the
+      // old rows they carry surface typed NULLs through the parquet read
+      def located(files: Seq[AddFile]): DataFrame = relationFor(spark, table, meta, files)._1
         .withColumn("__path", col("_metadata.file_path"))
-        .withColumn("__ri", col("_metadata.row_index"))))
+        .withColumn("__ri", col("_metadata.row_index"))
+      val target = located(snap.files).alias("t") // metadata cols resolve pre-alias
+      val (joined, isM) = source match {
+        case None => (target, lit(true))
+        case Some((s, keys)) => (target.join(s.withColumn("__m", lit(true)).alias("s"),
+          keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _), "left"),
+          col("s.__m").isNotNull)
+      }
+      val ix = col("__ix")
+      val acted = graft.Caching.materialize(joined
+        .withColumn("__isM", isM)
+        .withColumn("__ix", when(isM, firstHolding(acting, 'm'))
+          .otherwise(firstHolding(acting, 'b')))
+        .filter(if (source.isEmpty) ix > 0 else ix > 0 || col("__isM"))
+        .select(cols.map(c => col(s"t.$c").as(c)) ++
+          cols.indices.map(i => chosen(acting, ix, col(s"t.${cols(i)}"), cols(i)).as(s"__new$i")) ++
+          Seq(col("__path"), col("__ri"), col("__isM"),
+            acting.zipWithIndex.foldRight(lit(null).cast("string")) { case ((c, i), els) =>
+              when(ix === (i + 1), lit(if (c.deletes) "delete" else "update")).otherwise(els)
+            }.as("__act")): _*))
       try {
-        val pathProbe = hits.groupBy("__path").agg(count(lit(1)).as("__n"))
+        val pathProbe = acted.groupBy("__path").agg(count(col("__act")).as("__n"))
           .select(lit("path").as("__kind"), col("__path").as("__val"), col("__n"))
         val probeRows = (if (dupsChecked) None else dupProbe)
           .fold(pathProbe)(pathProbe.unionByName(_, allowMissingColumns = true))
           .collect()
-        uniqueKeys.foreach { case (_, keys) => requireUniqueKeys(probeRows, keys) }
+        val dups = probeRows.filter(_.getString(0) == "dup").map(_.getString(1))
+        if (dups.nonEmpty) throw new IllegalArgumentException(
+          s"merge source has duplicate rows for key (${keyCols.mkString(", ")}) — " +
+          s"e.g. ${dups.mkString("; ")}. Collapse the source to one row per key " +
+          "(StreamMerge does this per micro-batch) before merging.")
         dupsChecked = true
-        val newHits = probeRows.filter(_.getString(0) == "path")
+        val hits = probeRows.filter(_.getString(0) == "path")
           .map(r => r.getString(1) -> r.getLong(2)).toMap
-        // (touched file, its count of new hits)
+        // (touched file, its count of acted rows)
         val touched = snap.files.flatMap(f =>
-          newHits.get(metadataPath(hfs, root, f.path)).map(f -> _))
-        require(touched.size == newHits.size,
-          s"merge-on-read probe on $table hit files missing from its snapshot")
-        val rows = hits.select(cols.map(col): _*)
-        val post = postImagesOf(rows)
-        // no matched rows: DELETE/UPDATE are pure no-ops; a MERGE may
-        // still carry inserts, which flow through the post-image path
-        if (touched.isEmpty && post.forall(_.isEmpty))
+          hits.get(metadataPath(hfs, root, f.path)).map(f -> _))
+        require(touched.size == hits.size,
+          s"$op probe on $table hit files missing from its snapshot")
+        val inserts = source.map { case (s, keys) =>
+          val unmatched = s.join(acted.filter(col("__isM")).select(keys.map(col): _*),
+            keys, "left_anti").alias("s")
+          unmatched.withColumn("__iact", firstHolding(inserting, 'n'))
+            .filter(col("__iact") > 0)
+            .select(cols.map(c => chosen(inserting, col("__iact"), col(s"s.$c"), c).as(c)): _*)
+        }
+        if (touched.isEmpty && (source.isEmpty || dv && inserts.forall(_.isEmpty)))
           (Seq.empty, MergeStats(0, snap.files.size, 0))
         else {
-          val (gone, kept) = touched.partition { case (f, n) =>
+          val changed = acted.filter(col("__act").isNotNull)
+          val updated = acted.filter(col("__act") === "update")
+            .select(cols.indices.map(i => col(s"__new$i").as(cols(i))): _*)
+          val images = inserts.fold(updated)(updated.unionByName)
+          val cdc = changed.select(cols.map(col) :+ when(col("__act") === "delete",
+              lit("delete")).otherwise(lit("update_preimage")).as("_change_type"): _*)
+            .unionByName(updated.withColumn("_change_type", lit("update_postimage")))
+          val cdcFrame = inserts.fold(cdc)(i =>
+            cdc.unionByName(i.withColumn("_change_type", lit("insert"))))
+          val dvTouched = if (dv) touched.filter(_._2 > 0) else Nil
+          val (gone, kept) = dvTouched.partition { case (f, n) =>
             f.dvRows + n >= physicalRows(spark, root, f) }
+          // copy-on-write rewrites whole files; deletion vectors write new
+          // rows only, and nothing for a DELETE
+          val written =
+            if (!dv) Some(located(touched.map(_._1))
+              .join(changed.select("__path", "__ri"), Seq("__path", "__ri"), "left_anti")
+              .select(cols.map(col): _*).unionByName(images))
+            else if (source.nonEmpty || acting.exists(!_.deletes)) Some(images)
+            else None
           // one sidecar per kept file: its outstanding DV rows ∪ its new
           // hits, hash-partitioned on the file key so each key's rows land
           // in one task and one file; returns key -> table-relative path
@@ -1418,7 +1327,7 @@ object TxLog {
             val staging = new Path(root, stagingName)
             val keyOf = broadcast(kept.map { case (f, _) =>
               (metadataPath(hfs, root, f.path), dvKey(f.path)) }.toDF("__fp", "__f"))
-            val newDel = hits.select(col("__path").as("__fp"), col("__ri").as("__dri"))
+            val newDel = changed.select(col("__path").as("__fp"), col("__ri").as("__dri"))
             dvDeletedRows(spark, hfs, root, kept.map(_._1)).fold(newDel)(newDel.unionByName)
               .join(keyOf, Seq("__fp"))
               .select(col("__f"), col("__dri").as("row_index"))
@@ -1430,94 +1339,34 @@ object TxLog {
               dir.stripPrefix("__f=") -> s"$stagingName/$dir/${s.getPath.getName}"
             }.toMap
           }
-          // post-images (UPDATE/MERGE) are ordinary staged data files:
-          // they pass the CHECK constraints, record stats/blooms, and
-          // write under the table's column mapping like any other add
-          post.foreach(p =>
-            requireConstraintsSatisfied(p, snap.meta.constraints, table))
-          val (newAdds, (cdcFiles, sidecars)) = overlapped(spark,
-            post.map(p => stage(p, table, snap.meta.partitionCols,
+          // new rows are ordinary staged data files: they pass the CHECK
+          // constraints, record stats/blooms, and write under the table's
+          // column mapping like any other add
+          written.foreach(requireConstraintsSatisfied(_, snap.meta.constraints, table))
+          // the change feed stages unpartitioned, so feed reads are plain
+          // parquet scans, with each file's footer row count and size in
+          // its cdc action, so streaming admission can budget the feed's
+          // delivered volume from the log alone
+          val (adds, (cdcFiles, sidecars)) = overlapped(spark,
+            written.map(stage(_, table, snap.meta.partitionCols,
                 bloomCols = snap.meta.bloomCols, columnMap = snap.meta.columnMap,
                 optimizeLayout = true))
               .getOrElse(Seq.empty))(
-            overlapped(spark, stageCdc(cdcOf(rows), table))(writeSidecars()))
+            overlapped(spark, stage(cdcFrame, table, Nil, optimizeLayout = true, dir = "cdc")
+              .map(f => (f.path, math.max(f.numRecords, 0L), f.size)))(writeSidecars()))
           // kept files re-add with their new DV (adds overwrite by path on
           // replay — no remove needed); fully-deleted ones are removed
           val dvAdds = kept.map { case (f, n) =>
             f.copy(dvPath = Some(sidecars(dvKey(f.path))), dvRows = f.dvRows + n) }
-          (commitInfoJson(op) +:
-            (gone.map(g => actionJson("remove", g._1)) ++
-              (dvAdds ++ newAdds).map(actionJson("add", _)) ++
-              cdcFiles.map((cdcJson _).tupled)),
-            MergeStats(touched.size, snap.files.size, newAdds.size))
+          ((commitInfoJson(op, commitTag) +:
+            (if (meta eq snap.meta) Nil else Seq(metaJson(meta)))) ++
+            (if (dv) gone.map(_._1) else touched.map(_._1)).map(actionJson("remove", _)) ++
+            (dvAdds ++ adds).map(actionJson("add", _)) ++
+            cdcFiles.map((cdcJson _).tupled),
+            MergeStats(if (dv) dvTouched.size else touched.size, snap.files.size, adds.size))
         }
-      } finally hits.unpersist()
+      } finally acted.unpersist()
     }._2
-  }
-
-  /** Copy-on-write UPDATE: `SET col = expr` on rows matching `condition`.
-    * Same file-granular selection as [[delete]]. */
-  def update(spark: SparkSession, table: String,
-             condition: org.apache.spark.sql.Column,
-             set: Map[String, org.apache.spark.sql.Column]): MergeStats =
-    rewriteWhere(spark, table, condition, op = "update") { (rows, cond) =>
-      rows.select(rows.columns.toSeq.map { c =>
-        set.get(c) match {
-          case Some(e) => when(cond, e).otherwise(col(c)).as(c)
-          case None => col(c)
-        }
-      }: _*)
-    } { (rows, cond) =>
-      val pre = rows.filter(cond)
-      pre.withColumn("_change_type", lit("update_preimage"))
-        .unionByName(pre.select(pre.columns.toSeq.map { c =>
-          set.get(c).map(_.as(c)).getOrElse(col(c))
-        }: _*).withColumn("_change_type", lit("update_postimage")))
-    }
-
-  /** Shared copy-on-write kernel for predicate-addressed row operations:
-    * candidate files via the [[TxLogFileIndex]] pruning path (the same
-    * skipping reads get), rewrite = `transform(candidateRows, cond)`,
-    * commit removes candidates and adds rewrites. */
-  private def rewriteWhere(spark: SparkSession, table: String,
-      condition: org.apache.spark.sql.Column, op: String)(
-      transform: (DataFrame, org.apache.spark.sql.Column) => DataFrame)(
-      cdcOf: (DataFrame, org.apache.spark.sql.Column) => DataFrame): MergeStats = {
-    val (hfs, root) = fs(spark, table)
-    transact(spark, table, "row-level op") { snapOpt =>
-      val snap = snapOpt.getOrElse(throw new IllegalStateException(
-        s"row-level op on non-existent table $table — overwrite first"))
-      // file-granular candidates: which files may hold a matching row
-      val touchedPaths = relationFor(spark, table, snap.meta, snap.files)._1
-        .withColumn("__path", col("_metadata.file_path"))
-        .filter(condition)
-        .select("__path").distinct().collect()
-        .map(_.getString(0)).toSet
-      val touched = filesAt(hfs, root, snap.files, touchedPaths)
-      if (touched.isEmpty) (Seq.empty, MergeStats(0, snap.files.size, 0))
-      else {
-        // rewrite + cdc both derive from the candidate-file rows
-        val rows = relationFor(spark, table, snap.meta, touched)._1
-        copyOnWrite(snap, table, touched, transform(rows, condition),
-          cdcOf(rows, condition), Seq(commitInfoJson(op)))
-      }
-    }._2
-  }
-
-  /** The commit of the copy-on-write verbs ([[mergeKernel]],
-    * [[rewriteWhere]]): `rewritten` must pass the CHECK constraints; it
-    * and its change feed `cdc` stage in one overlapped round (§2.6);
-    * the actions are `head`, removes of `touched`, adds, and cdc files. */
-  private def copyOnWrite(snap: Snapshot, table: String, touched: Seq[AddFile],
-      rewritten: DataFrame, cdc: DataFrame, head: Seq[String]): (Seq[String], MergeStats) = {
-    requireConstraintsSatisfied(rewritten, snap.meta.constraints, table)
-    val (adds, cdcFiles) = overlapped(rewritten.sparkSession,
-      stage(rewritten, table, snap.meta.partitionCols,
-        bloomCols = snap.meta.bloomCols, columnMap = snap.meta.columnMap,
-        optimizeLayout = true))(
-      stageCdc(cdc, table))
-    (head ++ touched.map(actionJson("remove", _)) ++ adds.map(actionJson("add", _)) ++
-      cdcFiles.map((cdcJson _).tupled), MergeStats(touched.size, snap.files.size, adds.size))
   }
 
   /** CHECK-constraint enforcement (Delta `ALTER TABLE ADD CONSTRAINT`):

@@ -2,6 +2,9 @@
 # Fast runner for graft mains: uses the sbt-compiled classes directly
 # (compile with `sbt -batch compile` first). Mirrors build.sbt javaOptions.
 # usage: tools/run.sh <mainClass> [args...]
+# The classpath is this script's own checkout, so a second checkout (a
+# parent copy for a comparison) runs its own classes.
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 MAIN="$1"; shift
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
@@ -20,5 +23,5 @@ exec java \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -cp "/root/repo/target/scala-2.13/classes:/root/repo/src/main/resources:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:$ROOT/src/main/resources:/opt/spark/jars/*" \
   "$MAIN" "$@"
