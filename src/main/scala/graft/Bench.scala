@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
+import graft.Verify.jsonStr
+
 /** Benchmark main: one compact JSON line with per-query wall seconds.
   *
   * Methodology: every query is materialized through the `noop` datasource
@@ -51,15 +53,6 @@ object Bench {
   /** Ceiling for the emitted line, chosen with margin inside the
     * consumer's 2000-char tail window minus sbt's trailing success line. */
   val MaxLineChars = 1800
-
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
   /** 3-significant-digit seconds, trailing zeros trimmed: 0.504, 1.23,
     * 12.4, 123. Keeps every entry ≤5 chars for the size budget. */
@@ -147,6 +140,60 @@ object Bench {
     out
   }
 
+  /** The selftest query: reads a table that does not exist. */
+  private[graft] val SelfTestQuery = "_selftest_broken"
+
+  /** The queries one run times: the registry — plus, with
+    * SPARK_GRAFT_BENCH_SELFTEST set, [[SelfTestQuery]], which proves the
+    * failure path end to end: it MUST surface in errors / failed:1 —
+    * cut to the spot-run subset SPARK_GRAFT_BENCH_ONLY names, if set. */
+  private[graft] def selected(env: Map[String, String]): Map[String, SparkEntry.Runner] = {
+    val full = SparkEntry.queries ++
+      (if (env.contains("SPARK_GRAFT_BENCH_SELFTEST"))
+        Map(SelfTestQuery -> ((s: SparkSession, _: String) =>
+          s.sql("SELECT * FROM graft_nonexistent_selftest_table")))
+      else Map.empty)
+    val only = "SPARK_GRAFT_BENCH_ONLY"
+    SparkEntry.select(env.get(only), only, full)
+  }
+
+  /** One timed invocation: BUILD = the eager scenario work inside the
+    * registry function (ACID table writes, MERGEs, index training —
+    * zero for lazy queries), PROBE = materializing the returned frame
+    * through the noop sink. */
+  private[graft] case class Timing(build: Double, probe: Double, err: Option[String]) {
+    def total: Double = build + probe
+  }
+
+  /** One pass over `registry`. Scratch dirs the scenario created are
+    * deleted AFTER the probe so the next pass (and the next query)
+    * measures the query, not /tmp contention from prior passes; its
+    * cached frames are dropped with them ([[SparkEntry.afterQuery]]). */
+  private[graft] def pass(spark: SparkSession, sfDir: String,
+      registry: Map[String, SparkEntry.Runner]): Map[String, Timing] =
+    registry.map { case (name, fn) =>
+      val t0 = System.nanoTime()
+      val timing =
+        try {
+          val df = fn(spark, sfDir)
+          val t1 = System.nanoTime()
+          df.write.format("noop").mode("overwrite").save()
+          val t2 = System.nanoTime()
+          Timing((t1 - t0) / 1e9, (t2 - t1) / 1e9, None)
+        } catch { case e: Throwable =>
+          Timing((System.nanoTime() - t0) / 1e9, 0.0,
+            Some(e.getClass.getSimpleName + ": " +
+              Option(e.getMessage).getOrElse("").linesIterator.take(1)
+                .mkString.take(200)))
+        }
+      SparkEntry.afterQuery(spark)
+      name -> timing
+    }
+
+  /** Each failing query's first error across `passes`. */
+  private[graft] def firstErrors(passes: Seq[Map[String, Timing]]): Map[String, String] =
+    passes.head.keys.flatMap { n => passes.flatMap(_(n).err).headOption.map(n -> _) }.toMap
+
   /** Cap for the stderr sidecar — enough for several full stack traces,
     * bounded so a log storm can't fill the disk. */
   private val MaxErrBytes = 4L * 1024 * 1024
@@ -185,96 +232,26 @@ object Bench {
         try { sink.flush(); sink.close() } catch { case _: Throwable => () }))
     } catch { case _: Throwable => () }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.driver("graft-bench", 4)
     val t0setup = System.nanoTime()
     SparkEntry.ensureBucketedTables(spark, sfDir)
     val setupSec = (System.nanoTime() - t0setup) / 1e9
-    // bucketed-table dirs are session-lifetime and created OUTSIDE the
-    // TempDirs registry (ensureBucketedTables); this drain only resets
-    // the queue for whatever else setup may have registered
-    SparkEntry.drainTempDirs()
-
-    // self-test hook: prove the failure path end-to-end — with
-    // SPARK_GRAFT_BENCH_SELFTEST set, one deliberately broken query runs
-    // and MUST surface in errors / failed:1 in the JSON
-    val full = SparkEntry.queries ++
-      (if (sys.env.contains("SPARK_GRAFT_BENCH_SELFTEST"))
-        Map("_selftest_broken" -> ((s: SparkSession, _: String) =>
-          s.sql("SELECT * FROM graft_nonexistent_selftest_table")))
-      else Map.empty)
-    // spot-run subset (comma-separated keys) for targeted scale stress —
-    // unknown keys fail loudly rather than silently benching nothing
-    val registry = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
-      case None => full
-      case Some(list) =>
-        val want = list.split(',').map(_.trim).filter(_.nonEmpty)
-        val missing = want.filterNot(full.contains)
-        require(missing.isEmpty,
-          s"SPARK_GRAFT_BENCH_ONLY names unknown queries: ${missing.mkString(", ")}")
-        full.view.filterKeys(want.toSet).toMap
-    }
-
-    /** One timed invocation: BUILD = the eager scenario work inside the
-      * registry function (ACID table writes, MERGEs, index training —
-      * zero for lazy queries), PROBE = materializing the returned frame
-      * through the noop sink. Scratch dirs the scenario created are
-      * deleted AFTER the probe so the next pass (and the next query)
-      * measures the query, not /tmp contention from prior passes.
-      * Cached frames are dropped with the scratch dirs: a query's
-      * `Caching.materialize` layers are dead the moment its probe
-      * finishes, but persist() pins them until explicitly released — at
-      * 100× data the leaked blocks from earlier queries starved a later
-      * query's broadcast build (sf10: dedup_incremental OOMed in the
-      * full five-query run yet passed standalone in the same heap). */
-    case class Timing(build: Double, probe: Double, err: Option[String]) {
-      def total: Double = build + probe
-    }
-    def pass(): Map[String, Timing] =
-      registry.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val timing =
-          try {
-            val df = fn(spark, sfDir)
-            val t1 = System.nanoTime()
-            df.write.format("noop").mode("overwrite").save()
-            val t2 = System.nanoTime()
-            Timing((t1 - t0) / 1e9, (t2 - t1) / 1e9, None)
-          } catch { case e: Throwable =>
-            Timing((System.nanoTime() - t0) / 1e9, 0.0,
-              Some(e.getClass.getSimpleName + ": " +
-                Option(e.getMessage).getOrElse("").linesIterator.take(1)
-                  .mkString.take(200)))
-          }
-        SparkEntry.cleanupTempDirs()
-        spark.catalog.clearCache()
-        name -> timing
-      }
+    val registry = selected(sys.env)
 
     // calibration brackets the measured window: 3 samples before the
     // cold pass, 3 after the last warm pass (median of each side; the
     // run's `cal` = their mean). Cross-round comparisons divide
     // per-query times by the runs' cal values — host drift divides out.
     val calBefore = Seq.fill(3)(calibration(spark))
-    val cold = pass()
-    val warm = Seq(pass(), pass(), pass())
+    val cold = pass(spark, sfDir, registry)
+    val warm = Seq.fill(3)(pass(spark, sfDir, registry))
     val calAfter = Seq.fill(3)(calibration(spark))
     val calSec = (calBefore.sorted.apply(1) + calAfter.sorted.apply(1)) / 2
     val names = registry.keys.toSeq
     // median of 3: robust to one contaminated pass (min-of-2 flip-flopped
     // across rounds; see the aggregation note in the header)
     val best = names.map { n => n -> warm.map(_(n).total).sorted.apply(1) }.toMap
-    val errs = names.flatMap { n =>
-      (cold(n).err.toSeq ++ warm.flatMap(_(n).err)).headOption.map(n -> _)
-    }.toMap
+    val errs = firstErrors(cold +: warm)
     val coldTotal = cold.values.map(_.total).sum
     val buildTotal = names.filterNot(errs.contains)
       .map(n => warm.map(_(n).build).sorted.apply(1)).sum

@@ -11,12 +11,12 @@ import graft.functions._
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
-  * (or `SparkSession.builder().withExtensions(new GraftExtensions()(_))`)
+  * (or `GraftSession.builder().withExtensions(new GraftExtensions()(_))`)
   * exposes `cosine_sim`, `minhash_sig`, `simhash64`, `sig_agreement`,
   * `hyperplane_sig`, `rolling_hash`, `token_min_hash` to plain SQL users
-  * — the same surface the Column API helpers bind per-session. The
-  * per-session `createOrReplaceTempFunction` path (GraftFunctions etc.)
-  * remains for programmatic use; this is the deployment-grade route.
+  * — the same expressions the Column API helpers (GraftFunctions etc.)
+  * build directly. Their `register(spark)` methods bind the SQL names
+  * per session as temp functions; this is the deployment-grade route.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

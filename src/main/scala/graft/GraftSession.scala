@@ -34,4 +34,15 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** The session of a driver program (Verify, Bench, the tools):
+    * `local[n]` with `n` shuffle partitions, `n` from `SPARK_GRAFT_CPUS`
+    * (else `defaultCpus`). */
+  def driver(appName: String, defaultCpus: Int,
+      logLevel: String = "WARN"): SparkSession = {
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(defaultCpus)(_.toInt)
+    val spark = builder(appName, s"local[$cpus]", cpus).getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
 }

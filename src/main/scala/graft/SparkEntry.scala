@@ -32,8 +32,6 @@ object SparkEntry {
     * sources/checkpoints go through the same registry. */
   private def tempDir(tag: String): String = TempDirs.create(tag)
 
-  private[graft] def drainTempDirs(): Seq[String] = TempDirs.drain()
-
   /** Delete every drained scratch dir. Call only AFTER the scenario's
     * result has been fully materialized (saved/collected) — the returned
     * frame reads lazily from these dirs. */
@@ -3756,8 +3754,9 @@ object SparkEntry {
     // floors ABOVE the unfiltered family's (0.5/0.75): the selectivity-
     // widened probe is near-exhaustive over the filtered subset —
     // measured 1.00 on every query at sf0.001/0.01/0.1 across 0.1–0.5
-    // selectivities (tools/ProbeFiltered); deterministic training makes
-    // the margin safety, not noise allowance
+    // selectivities (graft.tools.ProbeFiltered, last held in commit
+    // 52ef7a0); deterministic training makes the margin safety, not
+    // noise allowance
     recall.crossJoin(simErr).crossJoin(violations)
       .select(col("n_queries"),
               (col("minr") >= 0.7).as("min_recall_ok"),
@@ -3768,204 +3767,48 @@ object SparkEntry {
 
   // ------------------------------------------------------------ registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_avg_monthly"      -> (q1AvgMonthly _),
-    "q2_avg_hourly"       -> (q2AvgHourly _),
-    "etl_dq_clean"        -> (etlDqClean _),
-    "etl_schema_unify"    -> (etlSchemaUnify _),
-    "etl_union_fleet"     -> (etlUnionFleet _),
-    "etl_features"        -> (etlFeatures _),
-    "etl_partitioned_sink"-> (etlPartitionedSink _),
-    "ingest_batch"        -> (ingestBatch _),
-    "ingest_resilient"    -> (ingestResilient _),
-    "report_consume"      -> (reportConsume _),
-    "agg_pricing_summary" -> (Queries.aggPricingSummary _),
-    "join_top_customers"  -> (Queries.joinTopCustomers _),
-    "join_revenue_nation" -> (Queries.joinRevenueNation _),
-    "join_semi_anti"      -> (Queries.joinSemiAnti _),
-    "window_running"      -> (Queries.windowRunning _),
-    "window_topk_group"   -> (Queries.windowTopkGroup _),
-    "window_sessionize"   -> (Queries.windowSessionize _),
-    "rollup_priority"     -> (Queries.rollupPriority _),
-    "distinct_count"      -> (Queries.distinctCount _),
-    "distinct_approx"     -> (Queries.distinctApprox _),
-    "distinct_sketch_merge" -> (Queries.distinctSketchMerge _),
-    "etl_profile"         -> (Queries.etlProfile _),
-    "events_funnel"       -> (Queries.eventsFunnel _),
-    "events_attribution"  -> (Queries.eventsAttribution _),
-    "events_retention"    -> (Queries.eventsRetention _),
-    "events_anomaly"      -> (Queries.eventsAnomaly _),
-    "stream_asof"         -> (streamAsof _),
-    "stream_stream_join"  -> ((s: SparkSession, dir: String) =>
-      EventsStream.runStreamStreamJoin(s, Tables.events(s, dir))),
-    "stream_stream_outer" -> ((s: SparkSession, dir: String) =>
-      EventsStream.runStreamStreamOuterJoin(s, Tables.events(s, dir))),
-    "stream_stream_full_outer" -> ((s: SparkSession, dir: String) =>
-      EventsStream.runStreamStreamFullOuterJoin(s, Tables.events(s, dir))),
-    "stream_late_data"    -> ((s: SparkSession, dir: String) =>
-      EventsStream.runLateDataAccounting(s, Tables.events(s, dir))),
-    "agg_histogram"       -> (Queries.aggHistogram _),
-    "window_rolling_range" -> (Queries.windowRollingRange _),
-    "text_tfidf"          -> (Queries.textTfidf _),
-    "agg_grouping_sets"   -> (Queries.aggGroupingSets _),
-    "events_sliding_window" -> (Queries.eventsSlidingWindow _),
-    "events_sliding_window_approx" -> (Queries.eventsSlidingWindowApprox _),
-    "text_phrase_search"  -> (Queries.textPhraseSearch _),
-    "text_span_dedup"     -> ((s: SparkSession, dir: String) =>
-                               Queries.textSpanDedup(s, dir)),
-    "corpus_overlap"      -> ((s: SparkSession, dir: String) =>
-                               Queries.corpusOverlap(s, dir)),
-    "span_index_incremental" -> (spanIndexIncremental _),
-    "corpus_overlap_incremental" -> (corpusOverlapIncremental _),
-    "corpus_overlap_topk" -> ((s: SparkSession, dir: String) =>
-                               Queries.corpusOverlapTopk(s, dir)),
-    "events_transitions"  -> ((s: SparkSession, dir: String) =>
-                               Queries.eventsTransitions(s, dir)),
-    "join_interval_overlap" -> ((s: SparkSession, dir: String) =>
-                               Queries.joinIntervalOverlap(s, dir)),
-    "join_interval_overlap_approx" -> ((s: SparkSession, dir: String) =>
-                               Queries.joinIntervalOverlapApprox(s, dir)),
-    "join_point_in_interval" -> ((s: SparkSession, dir: String) =>
-                               Queries.joinPointInInterval(s, dir)),
-    "events_path_topk"    -> ((s: SparkSession, dir: String) =>
-                               Queries.eventsPathTopk(s, dir)),
-    "window_distribution" -> ((s: SparkSession, dir: String) =>
-                               Queries.windowDistribution(s, dir)),
-    "agg_corr"            -> ((s: SparkSession, dir: String) =>
-                               Queries.aggCorr(s, dir)),
-    "text_boilerplate_ngrams" -> (textBoilerplateNgrams _),
-    "delta_dynamic_prune" -> (deltaDynamicPrune _),
-    "events_gap_fill"     -> ((s: SparkSession, dir: String) =>
-                               Queries.eventsGapFill(s, dir)),
-    "corpus_curation_funnel" -> (corpusCurationFunnel _),
-    "text_lm_score"       -> (Queries.textLmScore _),
-    "mm_audio_meta"       -> (mmAudioMeta _),
-    "mm_audio_stream"     -> (mmAudioStream _),
-    "stream_window_agg"   -> (streamWindowAgg _),
-    "dedup_exact"         -> (dedupExact _),
-    "dedup_minhash"       -> (dedupMinhash _),
-    "dedup_simhash"       -> (dedupSimhash _),
-    "dedup_ngram"         -> (dedupNgram _),
-    "dedup_embed"         -> (dedupEmbed _),
-    "dedup_embed_ann"     -> (dedupEmbedAnn _),
-    "ann_cosine_topk"     -> (annCosineTopk _),
-    "ann_lsh"             -> (annLsh _),
-    "ann_quantized"       -> (annQuantized _),
-    "ann_pq"              -> (annPq _),
-    "ann_ivf_pq"          -> (annIvfPq _),
-    "sample_stratified"   -> (sampleStratified _),
-    "sample_mixture"      -> (sampleMixture _),
-    "sample_importance"   -> (sampleImportance _),
-    "text_langid"         -> (textLangid _),
-    "text_quality"        -> (textQuality _),
-    "text_tokens"         -> (textTokens _),
-    "text_fingerprint"    -> (textFingerprint _),
-    "text_fingerprint_roll" -> (textFingerprintRoll _),
-    "mm_binary_meta"      -> (mmBinaryMeta _),
-    "events_json_extract" -> (eventsJsonExtract _),
-    "sink_formats"        -> (sinkFormats _),
-    "etl_incremental"     -> (etlIncremental _),
-    "join_salted"         -> (joinSalted _),
-    "sql_interface"       -> (sqlInterface _),
-    "agg_quantiles"       -> (Queries.aggQuantiles _),
-    "agg_quantiles_approx" -> (Queries.aggQuantilesApprox _),
-    "join_outer"          -> (Queries.joinOuter _),
-    "set_ops"             -> (Queries.setOps _),
-    "report_pivot"        -> (reportPivot _),
-    "report_melt"         -> (reportMelt _),
-    "arrays_funcs"        -> (arraysFuncs _),
-    "join_asof"           -> (joinAsof _),
-    "join_asof_native"    -> (joinAsofNative _),
-    "join_asof_fwd"       -> (joinAsofFwd _),
-    "join_asof_nearest"   -> (joinAsofNearest _),
-    "join_range"          -> (joinRange _),
-    "join_bucketed"       -> (joinBucketed _),
-    "ingest_merge_schema" -> (ingestMergeSchema _),
-    "etl_compaction"      -> (etlCompaction _),
-    "dedup_clusters"      -> (dedupClusters _),
-    "text_vocab"          -> (textVocab _),
-    "text_heavy_hitters"  -> (textHeavyHitters _),
-    "sample_split"        -> (sampleSplit _),
-    "text_pii_redact"     -> (textPiiRedact _),
-    "dedup_droplist"      -> (dedupDroplist _),
-    "agg_stats"           -> (Queries.aggStats _),
-    "agg_strings"         -> (Queries.aggStrings _),
-    "window_session_native" -> (Queries.windowSessionNative _),
-    "cube_status"         -> (Queries.cubeStatus _),
-    "dates_arith"         -> (Queries.datesArith _),
-    "strings_funcs"       -> (Queries.stringsFuncs _),
-    "delta_sink"          -> (deltaSink _),
-    "delta_time_travel"   -> (deltaTimeTravel _),
-    "delta_schema_evolution" -> (deltaSchemaEvolution _),
-    "delta_merge"         -> (deltaMerge _),
-    "delta_merge_evolve"  -> (deltaMergeEvolve _),
-    "delta_merge_conditional" -> (deltaMergeConditional _),
-    "delta_scd2"          -> (deltaScd2 _),
-    "stream_scd2"         -> (streamScd2 _),
-    "delta_deletion_vectors" -> (deltaDeletionVectors _),
-    "delta_update_dv"     -> (deltaUpdateDv _),
-    "delta_generated_cols" -> (deltaGeneratedCols _),
-    "delta_convert"       -> (deltaConvert _),
-    "delta_merge_dv"      -> (deltaMergeDv _),
-    "delta_column_mapping" -> (deltaColumnMapping _),
-    "delta_cdf"           -> (deltaCdf _),
-    "delta_restore"       -> (deltaRestore _),
-    "delta_mv_incremental" -> (deltaMvIncremental _),
-    "stream_mv"           -> (streamMv _),
-    "delta_zorder"        -> (deltaZorder _),
-    "delta_bloom_skip"    -> (deltaBloomSkip _),
-    "delta_data_skipping" -> (deltaDataSkipping _),
-    "delta_vacuum"        -> (deltaVacuum _),
-    "delta_clone"         -> (deltaClone _),
-    "delta_concurrent_append" -> (deltaConcurrentAppend _),
-    "delta_constraints"   -> (deltaConstraints _),
-    "delta_checkpoint"    -> (deltaCheckpoint _),
-    "catalog_partitions"  -> (catalogPartitions _),
-    "catalog_persistent"  -> (catalogPersistent _),
-    "stream_sessionize"   -> (streamSessionize _),
-    "report_empty"        -> (reportEmpty _),
-    "ann_ivf"             -> (annIvf _),
-    "stream_dedup"        -> (streamDedup _),
-    "text_repetition"     -> (textRepetition _),
-    "text_contamination"  -> (textContamination _),
-    "corpus_stats"        -> (corpusStats _),
-    "etl_dq_quarantine"   -> (etlDqQuarantine _),
-    "window_lead_lag"     -> (windowLeadLag _),
-    "events_resample"     -> (eventsResample _),
-    "stream_static_join"  -> (streamStaticJoin _),
-    "mm_frame_sample"     -> (mmFrameSample _),
-    "mm_resize"           -> (mmResize _),
-    "mm_phash"            -> (mmPhash _),
-    "mm_phash_dedup"      -> (mmPhashDedup _),
-    "dedup_pipeline"      -> (dedupPipeline _),
-    "dedup_incremental"   -> (dedupIncremental _),
-    "corpus_pack"         -> (corpusPack _),
-    "stream_dedup_incremental" -> (streamDedupIncremental _),
-    "stream_table"        -> (streamTable _),
-    "stream_table_sink"   -> (streamTableSink _),
-    "dedup_paragraph"     -> (dedupParagraph _),
-    "curate_domains"      -> (curateDomains _),
-    "ann_index_persist"   -> (annIndexPersist _),
-    "ann_index_incremental" -> (annIndexIncremental _),
-    "sql_dml"             -> (sqlDml _),
-    "sql_time_travel"     -> (sqlTimeTravel _),
-    "sql_ddl"             -> (sqlDdl _),
-    "sql_dml_dv"          -> (sqlDmlDv _),
-    "dedup_semantic"      -> (dedupSemantic _),
-    "sql_merge_cdf"       -> (sqlMergeCdf _),
-    "sql_lifecycle"       -> (sqlLifecycle _),
-    "sql_generated_cols"  -> (sqlGeneratedCols _),
-    "ann_rebalance"       -> (annRebalance _),
-    "sql_cdf_timestamp"   -> (sqlCdfTimestamp _),
-    "sql_replace_table"   -> (sqlReplaceTable _),
-    "sql_views"           -> (sqlViews _),
-    "sql_optimize_partition" -> (sqlOptimizePartition _),
-    "ann_filtered"        -> (annFiltered _),
-  )
+  /** A registry query: (session, testdata dir) => its result frame. */
+  type Runner = (SparkSession, String) => DataFrame
 
-  /** DuckDB langid oracle generated from the same stopword inventory as
-    * the Spark operator — single source of truth. */
-  private def langidOracle: String = {
+  /** One registry query: its runner and the DuckDB SQL its result must
+    * match (same column names, same row order). */
+  final case class QueryDef(name: String, run: Runner, oracleSql: String)
+
+  /** Runner by name, derived from [[registry]]. Verify and Bench run
+    * the queries in this map's iteration order. */
+  lazy val queries: Map[String, Runner] = registry.map(d => d.name -> d.run).toMap
+
+  /** Oracle SQL by name, derived from [[registry]] (same keys, so the
+    * same iteration order as [[queries]]). */
+  lazy val oracleSql: Map[String, String] =
+    registry.map(d => d.name -> d.oracleSql).toMap
+
+  /** The queries a driver program runs, in the order of `all`: all of
+    * them when `only` is unset, else the comma-separated names it lists. An
+    * unknown name fails loudly, naming `source` (the env var or argument
+    * list it came from), rather than silently running nothing. */
+  def select(only: Option[String], source: String,
+      all: Map[String, Runner] = queries): Map[String, Runner] =
+    only.fold(all) { list =>
+      val want = list.split(',').map(_.trim).filter(_.nonEmpty)
+      val missing = want.filterNot(all.contains)
+      require(missing.isEmpty, s"$source names unknown queries: ${missing.mkString(", ")}")
+      all.filter { case (name, _) => want.contains(name) }
+    }
+
+  /** Per-query cleanup of every driver program, once the query's result
+    * is materialized: delete its scratch dirs and drop its cached frames
+    * (dead once the result is out, yet pinned until released — at sf10
+    * leaked blocks starved a later query's broadcast build). */
+  def afterQuery(spark: SparkSession): Unit = {
+    cleanupTempDirs()
+    spark.catalog.clearCache()
+  }
+
+  /** DuckDB langid score columns (`score_<lang>` over `toks`) and the CASE
+    * chain that picks the language, generated from the same stopword
+    * inventory as the Spark operator — single source of truth. */
+  private def langidSql: (String, String) = {
     val langs = TextOps.stopwords.map(_._1)
     val scoreDefs = TextOps.stopwords.map { case (lang, ws) =>
       val arr = ws.map(w => s"'$w'").mkString("[", ", ", "]")
@@ -3976,9 +3819,15 @@ object SparkEntry {
         :+ s"score_$lang > 0").mkString(" AND ")
       s"WHEN $conds THEN '$lang'"
     }.mkString(" ")
+    (scoreDefs, caseChain)
+  }
+
+  /** DuckDB langid oracle. */
+  private def langidOracle: String = {
+    val (scoreDefs, caseChain) = langidSql
     s"""WITH t AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\\p{L}\\p{N}]+'), t -> t <> '') AS toks FROM documents),
        |s AS (SELECT doc_id, $scoreDefs FROM t)
-       |SELECT doc_id, ${langs.map(l => s"score_$l").mkString(", ")},
+       |SELECT doc_id, ${TextOps.stopwords.map(l => s"score_${l._1}").mkString(", ")},
        |       CASE $caseChain ELSE 'und' END AS lang_pred
        |FROM s ORDER BY doc_id""".stripMargin
   }
@@ -3988,16 +3837,7 @@ object SparkEntry {
     * [[corpusCurationFunnel]] stages them; stopword inventory shared
     * with the Spark operator (single source of truth). */
   private def curationOracle: String = {
-    val langs = TextOps.stopwords.map(_._1)
-    val scoreDefs = TextOps.stopwords.map { case (lang, ws) =>
-      val arr = ws.map(w => s"'$w'").mkString("[", ", ", "]")
-      s"CAST(len(list_filter(toks, t -> list_contains($arr, t))) AS BIGINT) AS score_$lang"
-    }.mkString(", ")
-    val caseChain = langs.map { lang =>
-      val conds = (langs.filter(_ != lang).map(o => s"score_$lang >= score_$o")
-        :+ s"score_$lang > 0").mkString(" AND ")
-      s"WHEN $conds THEN '$lang'"
-    }.mkString(" ")
+    val (scoreDefs, caseChain) = langidSql
     s"""WITH t AS (SELECT doc_id, text, list_filter(regexp_split_to_array(lower(text), '[^\\p{L}\\p{N}]+'), t -> t <> '') AS toks,
        |             -- n_tokens over lower(text), matching the funnel's pw.nt
        |             -- (windowStats runs on the lowered text): Unicode case
@@ -4103,65 +3943,173 @@ object SparkEntry {
        |                            ORDER BY doc_id, idx) AS rn
        |  FROM paras)""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
-    "q1_avg_monthly" ->
-      s"""SELECT strftime(ts, '%Y-%m') AS report_month,
-         |       round(avg(value), 2) AS avg_total_amount
-         |FROM events
-         |WHERE event_type = 'purchase' AND $dqSql
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+  /** Oracle of q1_avg_monthly and report_consume. */
+  private def monthlyAvgOracle: String =
+    s"""SELECT strftime(ts, '%Y-%m') AS report_month,
+       |       round(avg(value), 2) AS avg_total_amount
+       |FROM events
+       |WHERE event_type = 'purchase' AND $dqSql
+       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-    "q2_avg_hourly" ->
+  /** Oracle of join_asof, stream_asof and join_asof_native. */
+  private def asofBackwardOracle: String =
+    """WITH l AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
+      |           FROM events WHERE event_type = 'purchase'),
+      |     r AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts
+      |           FROM events WHERE event_type = 'signup')
+      |SELECT l.event_id, l.user_id, l.ts, r.ts AS signup_ts
+      |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts
+      |ORDER BY event_id""".stripMargin
+
+  /** Oracle of etl_compaction and delta_sink. */
+  private def compactionOracle: String =
+    s"""SELECT event_type AS trip_type, count(*) AS n_rows,
+       |       round(sum(value), 2) AS total
+       |FROM events
+       |WHERE event_type IN ('purchase', 'view') AND $dqSql
+       |GROUP BY 1 ORDER BY 1""".stripMargin
+
+  /** Oracle of corpus_overlap and corpus_overlap_incremental. */
+  private def corpusOverlapOracle: String =
+    """WITH t AS (SELECT source, list_filter(regexp_split_to_array(text, '[^\p{L}\p{N}]+'), t -> t <> '') AS w
+      |           FROM documents),
+      |d AS (SELECT DISTINCT source,
+      |             md5(array_to_string(w[i + 1 : i + 8], ' ')) AS h
+      |      FROM t, unnest(range(len(w) - 8 + 1)) AS u(i)
+      |      WHERE len(w) >= 8),
+      |s AS (SELECT source, count(*) AS n_spans FROM d GROUP BY 1),
+      |p AS (SELECT a.source AS source_a, b.source AS source_b,
+      |             count(*) AS n_shared
+      |      FROM d a JOIN d b ON a.h = b.h AND a.source < b.source
+      |      GROUP BY 1, 2)
+      |SELECT source_a, source_b, n_shared,
+      |       sa.n_spans AS n_a, sb.n_spans AS n_b,
+      |       round(n_shared /
+      |             CAST(sa.n_spans + sb.n_spans - n_shared AS DOUBLE), 4)
+      |         AS jaccard
+      |FROM p JOIN s sa ON p.source_a = sa.source
+      |       JOIN s sb ON p.source_b = sb.source
+      |ORDER BY 1, 2""".stripMargin
+
+  /** Oracle of text_span_dedup and span_index_incremental. */
+  private def spanDedupOracle: String =
+    """WITH t AS (SELECT doc_id, list_filter(regexp_split_to_array(text, '[^\p{L}\p{N}]+'), t -> t <> '') AS w
+      |           FROM documents),
+      |s AS (SELECT doc_id,
+      |             md5(array_to_string(w[i + 1 : i + 8], ' ')) AS span_hash
+      |      FROM t, unnest(range(len(w) - 8 + 1)) AS u(i)
+      |      WHERE len(w) >= 8),
+      |g AS (SELECT span_hash, count(*) AS n_occ,
+      |             count(DISTINCT doc_id) AS n_docs
+      |      FROM s GROUP BY 1)
+      |SELECT count(*) AS n_distinct_spans,
+      |       CAST(sum(n_occ) AS BIGINT) AS n_span_instances,
+      |       CAST(sum(CASE WHEN n_docs >= 2 THEN 1 ELSE 0 END) AS BIGINT)
+      |         AS n_cross_doc_spans,
+      |       CAST(max(n_docs) AS BIGINT) AS max_span_doc_freq
+      |FROM g""".stripMargin
+
+  /** Oracle of mm_audio_meta and mm_audio_stream. */
+  private def audioMetaOracle: String =
+    """WITH d AS (SELECT doc_id, octet_length(encode(text)) AS b
+      |           FROM documents),
+      |p AS (SELECT doc_id,
+      |        CASE b % 3 WHEN 0 THEN 8000 WHEN 1 THEN 16000
+      |                   ELSE 44100 END AS rate,
+      |        256 + (b * 7) % 1024 AS ns,
+      |        (b * 2654435761) % 2147483647 AS seed
+      |      FROM d),
+      |s AS (SELECT doc_id, rate, ns, i,
+      |        ((seed + (i + 1) * 48271) % 65536) - 32768 AS v
+      |      FROM p, unnest(range(ns)) AS u(i)),
+      |z AS (SELECT doc_id, v,
+      |        v * lag(v) OVER (PARTITION BY doc_id ORDER BY i) < 0 AS zc
+      |      FROM s),
+      |a AS (SELECT doc_id,
+      |        sum(CAST(v AS BIGINT) * v) AS sum_sq, count(*) AS n,
+      |        max(abs(v)) AS peak,
+      |        sum(CASE WHEN zc THEN 1 ELSE 0 END) AS n_zc
+      |      FROM z GROUP BY 1)
+      |SELECT p.doc_id, CAST(p.rate AS BIGINT) AS sample_rate,
+      |  CAST(p.ns AS BIGINT) AS n_samples,
+      |  CAST(p.ns * 1000 // p.rate AS BIGINT) AS duration_ms,
+      |  round(sqrt(CAST(a.sum_sq AS DOUBLE) / a.n), 4) AS rms,
+      |  CAST(a.peak AS BIGINT) AS peak,
+      |  round(CAST(a.n_zc AS DOUBLE) / (a.n - 1), 6) AS zcr,
+      |  true AS header_ok
+      |FROM p JOIN a USING (doc_id) ORDER BY doc_id""".stripMargin
+
+  /** Oracle of sql_generated_cols and delta_generated_cols. */
+  private def generatedColsOracle: String =
+    """SELECT count(*) AS n_rows, round(sum(value), 2) AS total,
+      |       true AS pruned_files, true AS partition_filter_derived
+      |FROM events
+      |WHERE ts >= TIMESTAMP '2024-01-08 00:00:00'
+      |  AND ts <  TIMESTAMP '2024-01-12 00:00:00'""".stripMargin
+
+  /** Oracle of catalog_partitions and catalog_persistent. */
+  private def catalogOracle: String =
+    s"""SELECT CAST(month(ts) AS BIGINT) AS trip_month, count(*) AS n_rows,
+       |       round(sum(value), 2) AS total
+       |FROM events
+       |WHERE event_type = 'purchase' AND $dqSql
+       |GROUP BY 1 ORDER BY 1""".stripMargin
+
+  /** Every driver-contract query, each declared once. */
+  lazy val registry: Seq[QueryDef] = Seq(
+    QueryDef("q1_avg_monthly", q1AvgMonthly, monthlyAvgOracle),
+
+    QueryDef("q2_avg_hourly", q2AvgHourly,
       s"""SELECT hour(ts) AS report_hour,
          |       round(avg(user_id), 2) AS avg_passenger_count
          |FROM events
          |WHERE event_type IN ('purchase', 'view') AND $dqSql AND month(ts) = 1
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "etl_dq_clean" ->
+    QueryDef("etl_dq_clean", etlDqClean,
       s"""SELECT event_id, event_type AS trip_type, user_id AS passenger_count,
          |       value AS total_amount, ts AS pickup_datetime
          |FROM events
          |WHERE event_type IN ('purchase', 'view') AND $dqSql
-         |ORDER BY event_id""".stripMargin,
+         |ORDER BY event_id""".stripMargin),
 
-    "etl_schema_unify" ->
+    QueryDef("etl_schema_unify", etlSchemaUnify,
       """SELECT event_id, event_type AS trip_type, ts AS pickup_datetime,
         |       (event_type = 'purchase') AS from_yellow_schema
         |FROM events
         |WHERE event_type IN ('purchase', 'view')
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin),
 
-    "etl_union_fleet" ->
+    QueryDef("etl_union_fleet", etlUnionFleet,
       """SELECT event_type AS trip_type, count(*) AS n_rows,
         |       CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_tpep,
         |       CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS n_lpep
         |FROM events
         |WHERE event_type IN ('purchase', 'view')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "etl_features" ->
+    QueryDef("etl_features", etlFeatures,
       s"""SELECT event_id, year(ts) AS trip_year, month(ts) AS trip_month,
          |       day(ts) AS trip_day, hour(ts) AS trip_hour,
          |       dayofweek(ts) + 1 AS trip_dow
          |FROM events
          |WHERE event_type IN ('purchase', 'view') AND $dqSql
-         |ORDER BY event_id""".stripMargin,
+         |ORDER BY event_id""".stripMargin),
 
-    "etl_partitioned_sink" ->
+    QueryDef("etl_partitioned_sink", etlPartitionedSink,
       s"""SELECT event_type AS trip_type, year(ts) AS trip_year,
          |       month(ts) AS trip_month, count(*) AS n_rows
          |FROM events
          |WHERE event_type IN ('purchase', 'view') AND $dqSql
-         |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
+         |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin),
 
-    "ingest_batch" ->
+    QueryDef("ingest_batch", ingestBatch,
       """SELECT event_id, event_type AS trip_type,
         |       strftime(ts, '%Y%m') AS partition_date
         |FROM events
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin),
 
-    "ingest_resilient" ->
+    QueryDef("ingest_resilient", ingestResilient,
       """WITH p AS (SELECT strftime(ts, '%Y%m%d') AS partition_date, count(*) AS n
         |           FROM events GROUP BY 1),
         |m AS (SELECT min(partition_date) AS first_p FROM p)
@@ -4170,16 +4118,11 @@ object SparkEntry {
         |            THEN 'quarantined' ELSE 'landed' END AS status,
         |       CAST(CASE WHEN partition_date = first_p THEN 0 ELSE n END
         |            AS BIGINT) AS n_rows
-        |FROM p CROSS JOIN m ORDER BY partition_date""".stripMargin,
+        |FROM p CROSS JOIN m ORDER BY partition_date""".stripMargin),
 
-    "report_consume" ->
-      s"""SELECT strftime(ts, '%Y-%m') AS report_month,
-         |       round(avg(value), 2) AS avg_total_amount
-         |FROM events
-         |WHERE event_type = 'purchase' AND $dqSql
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+    QueryDef("report_consume", reportConsume, monthlyAvgOracle),
 
-    "agg_pricing_summary" ->
+    QueryDef("agg_pricing_summary", Queries.aggPricingSummary,
       """SELECT l_returnflag, l_linestatus,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
@@ -4190,18 +4133,18 @@ object SparkEntry {
         |  round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / count(*), 2) AS avg_price,
         |  count(*) AS count_order
         |FROM lineitem
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
-    "join_top_customers" ->
+    QueryDef("join_top_customers", Queries.joinTopCustomers,
       """SELECT c_custkey, c_name,
         |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 2) AS revenue,
         |       count(*) AS n_orders
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |GROUP BY 1, 2
         |ORDER BY revenue DESC, c_custkey
-        |LIMIT 10""".stripMargin,
+        |LIMIT 10""".stripMargin),
 
-    "join_revenue_nation" ->
+    QueryDef("join_revenue_nation", Queries.joinRevenueNation,
       """SELECT r_name, n_name,
         |       round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
         |             (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
@@ -4212,18 +4155,18 @@ object SparkEntry {
         |JOIN customer ON o_custkey = c_custkey
         |JOIN nation   ON c_nationkey = n_nationkey
         |JOIN region   ON n_regionkey = r_regionkey
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
-    "join_semi_anti" ->
+    QueryDef("join_semi_anti", Queries.joinSemiAnti,
       """SELECT
         |  (SELECT count(*) FROM customer WHERE EXISTS
         |    (SELECT 1 FROM orders WHERE o_custkey = c_custkey
         |     AND o_orderstatus = 'O')) AS n_with_open,
         |  (SELECT count(*) FROM customer WHERE NOT EXISTS
         |    (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-        |     AND o_orderstatus = 'O')) AS n_without_open""".stripMargin,
+        |     AND o_orderstatus = 'O')) AS n_without_open""".stripMargin),
 
-    "window_running" ->
+    QueryDef("window_running", Queries.windowRunning,
       """SELECT l_suppkey, l_orderkey, l_linenumber,
         |       row_number() OVER w AS rn,
         |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) OVER
@@ -4233,18 +4176,18 @@ object SparkEntry {
         |FROM lineitem
         |WINDOW w AS (PARTITION BY l_suppkey
         |             ORDER BY l_shipdate, l_orderkey, l_linenumber, l_quantity, l_extendedprice)
-        |ORDER BY l_suppkey, rn""".stripMargin,
+        |ORDER BY l_suppkey, rn""".stripMargin),
 
-    "window_topk_group" ->
+    QueryDef("window_topk_group", Queries.windowTopkGroup,
       """SELECT p_brand, p_partkey, p_retailprice, price_rank FROM (
         |  SELECT p_brand, p_partkey, p_retailprice,
         |         row_number() OVER (PARTITION BY p_brand
         |           ORDER BY p_retailprice DESC, p_partkey) AS price_rank
         |  FROM part)
         |WHERE price_rank <= 3
-        |ORDER BY p_brand, price_rank""".stripMargin,
+        |ORDER BY p_brand, price_rank""".stripMargin),
 
-    "window_sessionize" ->
+    QueryDef("window_sessionize", Queries.windowSessionize,
       """WITH e AS (
         |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
         |flagged AS (
@@ -4261,9 +4204,9 @@ object SparkEntry {
         |  FROM flagged)
         |SELECT user_id, session_id, count(*) AS n_events,
         |       min(ts) AS session_start, max(ts) AS session_end
-        |FROM sess GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |FROM sess GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
-    "rollup_priority" ->
+    QueryDef("rollup_priority", Queries.rollupPriority,
       """SELECT coalesce(o_orderstatus, 'ALL') AS o_orderstatus,
         |       coalesce(o_orderpriority, 'ALL') AS o_orderpriority,
         |       n_orders, total_price
@@ -4272,48 +4215,48 @@ object SparkEntry {
         |         round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 2) AS total_price
         |  FROM orders
         |  GROUP BY ROLLUP(o_orderstatus, o_orderpriority))
-        |ORDER BY 1, 2""".stripMargin,
+        |ORDER BY 1, 2""".stripMargin),
 
-    "distinct_count" ->
+    QueryDef("distinct_count", Queries.distinctCount,
       """SELECT count(DISTINCT l_partkey) AS n_parts,
         |       count(DISTINCT l_suppkey) AS n_supps,
         |       count(DISTINCT l_orderkey) AS n_orders,
         |       count(*) AS n_rows
-        |FROM lineitem""".stripMargin,
+        |FROM lineitem""".stripMargin),
 
-    "stream_static_join" ->
+    QueryDef("stream_static_join", streamStaticJoin,
       """SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS window_start,
         |       'tier_' || CAST(user_id % 3 AS VARCHAR) AS tier,
         |       count(*) AS n_events, round(sum(value), 2) AS total_value
         |FROM events
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
-    "stream_window_agg" ->
+    QueryDef("stream_window_agg", streamWindowAgg,
       """SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS window_start,
         |       event_type, count(*) AS n_events,
         |       round(sum(value), 2) AS total_value
         |FROM events
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
-    "dedup_exact" ->
+    QueryDef("dedup_exact", dedupExact,
       """SELECT md5(lower(trim(text))) AS content_key,
         |       min(doc_id) AS keeper, count(*) AS n_copies
-        |FROM documents GROUP BY 1 ORDER BY keeper""".stripMargin,
+        |FROM documents GROUP BY 1 ORDER BY keeper""".stripMargin),
 
-    "dedup_embed" ->
+    QueryDef("dedup_embed", dedupEmbed,
       """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
         |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
         |       round(list_cosine_similarity(a.v, b.v), 4) AS sim
         |FROM v a JOIN v b ON a.vec_id < b.vec_id
         |WHERE list_cosine_similarity(a.v, b.v) >= 0.4
-        |ORDER BY 1, 2""".stripMargin,
+        |ORDER BY 1, 2""".stripMargin),
 
     // exact census of the 0.9 near-dup answer over the augmented corpus
     // (originals + direction-preserving scaled copies): both engines
     // enumerate the SAME pair set — DuckDB by exact cross join, Spark
     // by LSH candidates + exact verify (recall on sign-identical copies
     // is deterministic 1.0; precision 1.0 by exact verification)
-    "dedup_embed_ann" ->
+    QueryDef("dedup_embed_ann", dedupEmbedAnn,
       """WITH scaled AS (
         |  SELECT vec_id AS orig_id,
         |         list_transform(embedding, x -> CAST(CAST(x AS DOUBLE)
@@ -4339,9 +4282,9 @@ object SparkEntry {
         |       count(*) = CAST(coalesce(sum(CASE WHEN vec_a = -(vec_b + 1)
         |         THEN 1 ELSE 0 END), 0) AS BIGINT) AS no_stray_pairs,
         |       round(min(sim), 4) AS min_sim
-        |FROM pairs""".stripMargin,
+        |FROM pairs""".stripMargin),
 
-    "ann_cosine_topk" ->
+    QueryDef("ann_cosine_topk", annCosineTopk,
       """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |q AS (SELECT * FROM v WHERE vec_id < 8),
         |s AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -4350,11 +4293,11 @@ object SparkEntry {
         |SELECT query_id, rank, neighbor_id, round(rawsim, 4) AS sim FROM (
         |  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
         |    ORDER BY rawsim DESC, neighbor_id) AS BIGINT) AS rank FROM s)
-        |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
+        |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin),
 
-    "text_langid" -> langidOracle,
+    QueryDef("text_langid", textLangid, langidOracle),
 
-    "text_quality" ->
+    QueryDef("text_quality", textQuality,
       """SELECT doc_id,
         |  CAST(length(text) AS BIGINT) AS n_chars,
         |  CAST(len(list_filter(regexp_split_to_array(text, '[^\p{L}\p{N}]+'), t -> t <> '')) AS BIGINT) AS n_tokens,
@@ -4366,21 +4309,21 @@ object SparkEntry {
         |  round(least(CAST(len(list_filter(regexp_split_to_array(text, '[^\p{L}\p{N}]+'), t -> t <> '')) AS DOUBLE) / 50, 1.0) *
         |        (1 - CAST(length(regexp_replace(text, '[\p{L}\p{N}\s]', '', 'g')) AS DOUBLE)
         |             / length(text)), 4) AS quality_score
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "text_tokens" ->
+    QueryDef("text_tokens", textTokens,
       """SELECT doc_id,
         |  CAST(len(list_filter(regexp_split_to_array(text, '[^\p{L}\p{N}]+'), t -> t <> '')) AS BIGINT) AS n_tokens,
         |  CAST(len(regexp_extract_all(lower(text), '[\p{L}]+|[\p{N}]+|[^\p{L}\p{N}\s]'))
         |    AS BIGINT) AS n_re_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "text_fingerprint" ->
+    QueryDef("text_fingerprint", textFingerprint,
       """SELECT doc_id, md5(text) AS content_hash,
         |       CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "mm_binary_meta" ->
+    QueryDef("mm_binary_meta", mmBinaryMeta,
       """WITH g AS (SELECT doc_id,
         |                  octet_length(encode(text)) AS n,
         |                  8 + octet_length(encode(text)) % 64 AS w,
@@ -4392,9 +4335,9 @@ object SparkEntry {
         |  CAST(3 AS BIGINT) AS channels,
         |  CAST(w * h * 3 AS BIGINT) AS raster_bytes,
         |  true AS container_ok
-        |FROM g ORDER BY doc_id""".stripMargin,
+        |FROM g ORDER BY doc_id""".stripMargin),
 
-    "corpus_pack" ->
+    QueryDef("corpus_pack", corpusPack,
       """WITH t AS (SELECT doc_id,
         |                  CAST(len(list_filter(regexp_split_to_array(text, '[^\p{L}\p{N}]+'), t -> t <> '')) AS BIGINT) AS tk
         |           FROM documents),
@@ -4404,19 +4347,19 @@ object SparkEntry {
         |      FROM t)
         |SELECT CAST(prefix_before // 2000 AS BIGINT) AS shard_id,
         |       count(*) AS n_docs, CAST(sum(tk) AS BIGINT) AS shard_tokens
-        |FROM c GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM c GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "mm_phash" ->
+    QueryDef("mm_phash", mmPhash,
       """SELECT count(*) AS n_docs,
         |       count(DISTINCT md5(text)) AS n_content_classes,
         |       true AS dup_covered_ok, true AS classes_coarser_ok
-        |FROM documents""".stripMargin,
+        |FROM documents""".stripMargin),
 
     // exact duplicate-pair census over originals + planted copies: every
     // content-equal pair hashes hamming-0, so the banded search finding
     // ALL of them is a guarantee, and content_pairs_found is a NUMBER
     // both engines compute independently
-    "mm_phash_dedup" ->
+    QueryDef("mm_phash_dedup", mmPhashDedup,
       """WITH corpus AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
@@ -4427,16 +4370,16 @@ object SparkEntry {
         |       CAST(coalesce(sum(n * (n - 1) // 2), 0) AS BIGINT) AS n_content_pairs,
         |       CAST(coalesce(sum(n * (n - 1) // 2), 0) AS BIGINT) AS content_pairs_found,
         |       true AS all_content_dups_found
-        |FROM cls""".stripMargin,
+        |FROM cls""".stripMargin),
 
-    "events_json_extract" ->
+    QueryDef("events_json_extract", eventsJsonExtract,
       """SELECT event_type,
         |  CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
         |  round(avg(CAST(json_extract_string(props, '$.k') AS BIGINT)), 2) AS avg_k,
         |  count(*) AS n
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "sink_formats" ->
+    QueryDef("sink_formats", sinkFormats,
       s"""SELECT f.format, q.report_month, q.avg_total_amount
          |FROM (SELECT 'csv' AS format UNION ALL SELECT 'json') f
          |CROSS JOIN (
@@ -4445,9 +4388,9 @@ object SparkEntry {
          |  FROM events
          |  WHERE event_type = 'purchase' AND $dqSql
          |  GROUP BY 1) q
-         |ORDER BY 1, 2""".stripMargin,
+         |ORDER BY 1, 2""".stripMargin),
 
-    "etl_incremental" ->
+    QueryDef("etl_incremental", etlIncremental,
       s"""SELECT trip_type, count(*) AS n_rows, round(sum(total_amount), 2) AS total
          |FROM (
          |  SELECT event_type AS trip_type, value AS total_amount FROM events
@@ -4455,41 +4398,41 @@ object SparkEntry {
          |  UNION ALL
          |  SELECT event_type, value FROM events
          |  WHERE event_type = 'purchase' AND $dqSql AND value >= 100)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "join_salted" ->
+    QueryDef("join_salted", joinSalted,
       """SELECT s_name, count(*) AS n_items,
         |       round(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_qty
         |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "sql_interface" ->
+    QueryDef("sql_interface", sqlInterface,
       """SELECT c_mktsegment, count(*) AS n_orders,
         |       round(sum(o_totalprice), 2) AS revenue
         |FROM customer JOIN orders ON c_custkey = o_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
 
-    "agg_quantiles" ->
+    QueryDef("agg_quantiles", Queries.aggQuantiles,
       """SELECT event_type,
         |       round(quantile_cont(value, 0.5), 4) AS med_value,
         |       round(quantile_cont(value, 0.9), 4) AS p90_value,
         |       count(*) AS n
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "agg_quantiles_approx" ->
+    QueryDef("agg_quantiles_approx", Queries.aggQuantilesApprox,
       """SELECT event_type,
         |       round(quantile_cont(value, 0.5), 4) AS med_value,
         |       round(quantile_cont(value, 0.9), 4) AS p90_value,
         |       true AS med_approx_ok, true AS p90_approx_ok,
         |       count(*) AS n
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "join_outer" ->
+    QueryDef("join_outer", Queries.joinOuter,
       """SELECT n_name, count(s_suppkey) AS n_suppliers
         |FROM nation LEFT JOIN supplier ON n_nationkey = s_nationkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "set_ops" ->
+    QueryDef("set_ops", Queries.setOps,
       """SELECT
         |  (SELECT count(*) FROM (
         |     SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
@@ -4502,21 +4445,22 @@ object SparkEntry {
         |  (SELECT count(*) FROM (
         |     SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
         |     UNION
-        |     SELECT o_custkey FROM orders WHERE o_totalprice > 150000)) AS n_either""".stripMargin,
+        |     SELECT o_custkey FROM orders WHERE o_totalprice > 150000)) AS n_either""".stripMargin),
 
-    "report_pivot" ->
+    QueryDef("report_pivot", reportPivot,
       s"""SELECT CAST(hour(ts) AS BIGINT) AS report_hour,
          |  round(avg(CASE WHEN event_type = 'purchase' THEN value END), 2) AS purchase,
          |  round(avg(CASE WHEN event_type = 'view' THEN value END), 2) AS "view"
          |FROM events
          |WHERE event_type IN ('purchase', 'view') AND $dqSql
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // n_events_kept/total_kept include the 1-row value-0 mid batch at
     // 2024-01-30 23:59 (its window is already populated, so n_windows
     // is unchanged); n_dropped_late counts PARTIAL-aggregate rows — one
     // per distinct late hour for the single-split staged file
-    "stream_stream_full_outer" ->
+    QueryDef("stream_stream_full_outer", (s, dir) =>
+      EventsStream.runStreamStreamFullOuterJoin(s, Tables.events(s, dir)),
       """WITH c AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS click_ts
         |           FROM events WHERE event_type = 'click'),
         |p AS (SELECT user_id AS p_user, CAST(ts AS TIMESTAMP) AS purchase_ts,
@@ -4537,9 +4481,10 @@ object SparkEntry {
         |  round(CAST(sum(CASE WHEN click_ts IS NOT NULL
         |                      THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE),
         |        2) AS paired_value
-        |FROM j""".stripMargin,
+        |FROM j""".stripMargin),
 
-    "stream_late_data" ->
+    QueryDef("stream_late_data", (s, dir) =>
+      EventsStream.runLateDataAccounting(s, Tables.events(s, dir)),
       """WITH m AS (SELECT max(CAST(ts AS TIMESTAMP)) AS mx FROM events),
         |kept AS (SELECT CAST(ts AS TIMESTAMP) AS ts, value
         |         FROM events WHERE day(ts) >= 16)
@@ -4554,9 +4499,9 @@ object SparkEntry {
         |             AS DOUBLE), 2) AS total_kept,
         |  CAST((SELECT count(DISTINCT date_trunc('hour', CAST(ts AS TIMESTAMP)))
         |        FROM events WHERE day(ts) <= 15) AS BIGINT)
-        |    AS n_dropped_late""".stripMargin,
+        |    AS n_dropped_late""".stripMargin),
 
-    "report_melt" ->
+    QueryDef("report_melt", reportMelt,
       """WITH w AS (SELECT CAST(day(ts) AS BIGINT) AS d,
         |  round(coalesce(sum(CASE WHEN event_type = 'view' THEN value END),
         |                 0), 2) AS view_value,
@@ -4568,9 +4513,9 @@ object SparkEntry {
         |SELECT d, 'view_value' AS metric, view_value AS value FROM w
         |UNION ALL SELECT d, 'click_value', click_value FROM w
         |UNION ALL SELECT d, 'purchase_value', purchase_value FROM w
-        |ORDER BY d, metric""".stripMargin,
+        |ORDER BY d, metric""".stripMargin),
 
-    "arrays_funcs" ->
+    QueryDef("arrays_funcs", arraysFuncs,
       """WITH t AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), t -> t <> '') AS w
         |           FROM documents)
         |SELECT doc_id,
@@ -4583,47 +4528,26 @@ object SparkEntry {
         |    AS max_token_len,
         |  round(CAST(list_sum(list_transform(w, t -> length(t))) AS DOUBLE)
         |        / len(w), 4) AS avg_token_len
-        |FROM t ORDER BY doc_id""".stripMargin,
+        |FROM t ORDER BY doc_id""".stripMargin),
 
-    "join_asof" ->
-      """WITH l AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-        |           FROM events WHERE event_type = 'purchase'),
-        |     r AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts
-        |           FROM events WHERE event_type = 'signup')
-        |SELECT l.event_id, l.user_id, l.ts, r.ts AS signup_ts
-        |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts
-        |ORDER BY event_id""".stripMargin,
+    QueryDef("join_asof", joinAsof, asofBackwardOracle),
 
     // the STREAMED as-of must equal the batch as-of row-for-row — the
     // identical oracle as #41/#104 is the whole point
-    "stream_asof" ->
-      """WITH l AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-        |           FROM events WHERE event_type = 'purchase'),
-        |     r AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts
-        |           FROM events WHERE event_type = 'signup')
-        |SELECT l.event_id, l.user_id, l.ts, r.ts AS signup_ts
-        |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts
-        |ORDER BY event_id""".stripMargin,
+    QueryDef("stream_asof", streamAsof, asofBackwardOracle),
 
-    "join_asof_native" ->
-      """WITH l AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-        |           FROM events WHERE event_type = 'purchase'),
-        |     r AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts
-        |           FROM events WHERE event_type = 'signup')
-        |SELECT l.event_id, l.user_id, l.ts, r.ts AS signup_ts
-        |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts
-        |ORDER BY event_id""".stripMargin,
+    QueryDef("join_asof_native", joinAsofNative, asofBackwardOracle),
 
-    "join_asof_fwd" ->
+    QueryDef("join_asof_fwd", joinAsofFwd,
       """WITH l AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
         |           FROM events WHERE event_type = 'purchase'),
         |     r AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts
         |           FROM events WHERE event_type = 'signup')
         |SELECT l.event_id, l.user_id, l.ts, r.ts AS signup_ts
         |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts <= r.ts
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin),
 
-    "join_asof_nearest" ->
+    QueryDef("join_asof_nearest", joinAsofNearest,
       """WITH l AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
         |           FROM events WHERE event_type = 'purchase'),
         |     r AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts
@@ -4647,41 +4571,36 @@ object SparkEntry {
         |    WHEN fts IS NOT NULL AND epoch_us(fts) - epoch_us(ts) <= 3600000000
         |    THEN fts
         |    ELSE NULL END AS signup_ts
-        |FROM j ORDER BY event_id""".stripMargin,
+        |FROM j ORDER BY event_id""".stripMargin),
 
-    "join_range" ->
+    QueryDef("join_range", joinRange,
       """SELECT band, count(*) AS n_orders,
         |       round(avg(o_totalprice), 2) AS avg_price
         |FROM orders
         |JOIN (VALUES ('lo', 0, 100000), ('mid', 100000, 200000),
         |             ('hi', 200000, 1000000000)) AS b(band, lo, hi)
         |  ON o_totalprice >= lo AND o_totalprice < hi
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "join_bucketed" ->
+    QueryDef("join_bucketed", joinBucketed,
       """SELECT o_orderpriority, count(*) AS n_items,
         |       round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE), 2) AS total_price
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "ingest_merge_schema" ->
+    QueryDef("ingest_merge_schema", ingestMergeSchema,
       """SELECT event_id, user_id, value,
         |       (event_type = 'view') AS has_extra
         |FROM events WHERE event_type IN ('purchase', 'view')
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin),
 
-    "etl_compaction" ->
-      s"""SELECT event_type AS trip_type, count(*) AS n_rows,
-         |       round(sum(value), 2) AS total
-         |FROM events
-         |WHERE event_type IN ('purchase', 'view') AND $dqSql
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+    QueryDef("etl_compaction", etlCompaction, compactionOracle),
 
     // clusters/droplist/pipeline ride the same justification as
     // dedup_ngram: the LSH candidate set equals the exact-Jaccard>=0.2
     // pair set on this corpus, so DuckDB rebuilds the identical graph
     // from exact Jaccard and closes it with a recursive CTE.
-    "dedup_clusters" ->
+    QueryDef("dedup_clusters", dedupClusters,
       """WITH RECURSIVE
         |t AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), t -> t <> '') AS toks FROM documents),
         |sh AS (SELECT doc_id, list_distinct(list_transform(range(len(toks) - 2),
@@ -4697,18 +4616,18 @@ object SparkEntry {
         |nodes AS (SELECT DISTINCT a AS node FROM bidir)
         |SELECT node, least(node, min(b)) AS cluster
         |FROM nodes LEFT JOIN reach ON reach.a = node
-        |GROUP BY node ORDER BY node""".stripMargin,
+        |GROUP BY node ORDER BY node""".stripMargin),
 
-    "text_vocab" ->
+    QueryDef("text_vocab", textVocab,
       """SELECT tok, count(*) AS df FROM (
         |  SELECT DISTINCT doc_id, unnest(list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), t -> t <> '')) AS tok
         |  FROM documents)
-        |GROUP BY tok ORDER BY df DESC, tok LIMIT 100""".stripMargin,
+        |GROUP BY tok ORDER BY df DESC, tok LIMIT 100""".stripMargin),
 
     // full-histogram ground truth for the two-pass MG answer: the Spark
     // side never builds this histogram — that's the point — but must
     // equal it row-for-row on the ≥ N/200 slice
-    "text_heavy_hitters" ->
+    QueryDef("text_heavy_hitters", textHeavyHitters,
       """WITH t AS (SELECT list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), t -> t <> '') AS toks FROM documents),
         |tok AS (SELECT unnest(toks) AS tok FROM t),
         |n AS (SELECT count(*) AS n_tokens FROM tok)
@@ -4716,9 +4635,9 @@ object SparkEntry {
         |FROM tok, n
         |GROUP BY tok, n.n_tokens
         |HAVING count(*) * 200 >= n.n_tokens
-        |ORDER BY freq DESC, tok""".stripMargin,
+        |ORDER BY freq DESC, tok""".stripMargin),
 
-    "text_pii_redact" ->
+    QueryDef("text_pii_redact", textPiiRedact,
       """WITH w AS (
         |  SELECT doc_id,
         |         text || ' contact user' || doc_id || '@example.com or 555-01'
@@ -4729,49 +4648,49 @@ object SparkEntry {
         |      '[0-9]{3}-[0-9]{4,}', '<PHONE>', 'g')) AS redacted_hash,
         |  CAST(len(regexp_extract_all(text, '[a-z0-9.]+@[a-z0-9.]+')) +
         |       len(regexp_extract_all(text, '[0-9]{3}-[0-9]{4,}')) AS BIGINT) AS n_redactions
-        |FROM w ORDER BY doc_id""".stripMargin,
+        |FROM w ORDER BY doc_id""".stripMargin),
 
-    "cube_status" ->
+    QueryDef("cube_status", Queries.cubeStatus,
       """SELECT coalesce(o_orderstatus, 'ALL') AS o_orderstatus,
         |       coalesce(o_orderpriority, 'ALL') AS o_orderpriority,
         |       n_orders
         |FROM (SELECT o_orderstatus, o_orderpriority, count(*) AS n_orders
         |      FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority))
-        |ORDER BY 1, 2""".stripMargin,
+        |ORDER BY 1, 2""".stripMargin),
 
-    "dates_arith" ->
+    QueryDef("dates_arith", Queries.datesArith,
       """SELECT o_orderkey,
         |  CAST(date_diff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) AS BIGINT)
         |    AS days_since_epoch95,
         |  CAST(quarter(o_orderdate) AS BIGINT) AS order_quarter,
         |  date_trunc('month', CAST(o_orderdate AS TIMESTAMP)) AS order_month,
         |  CAST(o_orderdate AS DATE) + 30 AS due_date
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
 
-    "strings_funcs" ->
+    QueryDef("strings_funcs", Queries.stringsFuncs,
       """SELECT c_custkey,
         |  upper(c_name) AS name_upper,
         |  substring(c_name, 1, 8) AS name_prefix,
         |  regexp_replace(c_name, '[0-9]', '#', 'g') AS name_masked,
         |  CAST(length(c_name) AS BIGINT) AS name_len,
         |  CAST(levenshtein(c_mktsegment, 'BUILDING') AS BIGINT) AS seg_dist
-        |FROM customer ORDER BY c_custkey""".stripMargin,
+        |FROM customer ORDER BY c_custkey""".stripMargin),
 
-    "agg_stats" ->
+    QueryDef("agg_stats", Queries.aggStats,
       """SELECT l_returnflag,
         |       round(corr(l_quantity, l_extendedprice), 6) AS qty_price_corr,
         |       round(stddev_samp(l_extendedprice), 2) AS price_stddev,
         |       round(avg(l_extendedprice), 2) AS price_avg,
         |       count(*) AS n
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "agg_strings" ->
+    QueryDef("agg_strings", Queries.aggStrings,
       """SELECT o_orderstatus,
         |       string_agg(o_orderpriority, ',' ORDER BY o_orderpriority) AS priorities
         |FROM (SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "window_session_native" ->
+    QueryDef("window_session_native", Queries.windowSessionNative,
       """WITH e AS (
         |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
         |flagged AS (
@@ -4790,20 +4709,20 @@ object SparkEntry {
         |       max(ts) + INTERVAL 30 MINUTE AS session_end,
         |       count(*) AS n_events
         |FROM sess GROUP BY user_id, session_id
-        |ORDER BY user_id, session_start""".stripMargin,
+        |ORDER BY user_id, session_start""".stripMargin),
 
     // Bounded oracles: the concrete sketch/hash/LSH values are
     // engine-specific by design; their declared CONTRACT (error bound,
     // partition-of-corpus, recall floor, exact Jaccard on the true pair
     // set) is SQL-expressible and hash-gated here.
-    "distinct_approx" ->
+    QueryDef("distinct_approx", Queries.distinctApprox,
       """SELECT count(DISTINCT l_partkey) AS n_parts,
         |       count(DISTINCT l_orderkey) AS n_orders,
         |       true AS parts_within_3pct,
         |       true AS orders_within_3pct
-        |FROM lineitem""".stripMargin,
+        |FROM lineitem""".stripMargin),
 
-    "events_funnel" ->
+    QueryDef("events_funnel", Queries.eventsFunnel,
       """WITH s1 AS (SELECT user_id, min(epoch_us(ts)) AS t1
         |            FROM events WHERE event_type = 'view' GROUP BY 1),
         |s2 AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t2
@@ -4817,9 +4736,9 @@ object SparkEntry {
         |SELECT (SELECT count(DISTINCT user_id) FROM events) AS n_users,
         |       (SELECT count(*) FROM s1) AS n_stage_view,
         |       (SELECT count(*) FROM s2) AS n_stage_click,
-        |       (SELECT count(*) FROM s3) AS n_stage_purchase""".stripMargin,
+        |       (SELECT count(*) FROM s3) AS n_stage_purchase""".stripMargin),
 
-    "events_attribution" ->
+    QueryDef("events_attribution", Queries.eventsAttribution,
       """WITH ev AS (
         |  SELECT user_id, event_type, value, epoch_us(ts) AS us
         |  FROM events WHERE event_type IN ('click', 'purchase')),
@@ -4842,9 +4761,9 @@ object SparkEntry {
         |  round((sum(CASE WHEN attributed THEN us - last_click_us END)
         |         / CAST(sum(CASE WHEN attributed THEN 1 END) AS DOUBLE))
         |        / 1000000.0, 2) AS avg_latency_sec
-        |FROM p""".stripMargin,
+        |FROM p""".stripMargin),
 
-    "events_anomaly" ->
+    QueryDef("events_anomaly", Queries.eventsAnomaly,
       """WITH ev AS (SELECT event_type, value FROM events
         |            WHERE value IS NOT NULL),
         |st AS (SELECT event_type, count(*) AS n,
@@ -4863,9 +4782,10 @@ object SparkEntry {
         |       CAST(sum(CASE WHEN abs(value - mean) > std * 3
         |                     THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
         |FROM ev JOIN d USING (event_type)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "stream_stream_join" ->
+    QueryDef("stream_stream_join", (s, dir) =>
+      EventsStream.runStreamStreamJoin(s, Tables.events(s, dir)),
       """WITH c AS (SELECT user_id, ts AS click_ts FROM events
         |           WHERE event_type = 'click'),
         |p AS (SELECT user_id, ts AS purchase_ts, value FROM events
@@ -4876,9 +4796,10 @@ object SparkEntry {
         |         AS paired_value
         |FROM c JOIN p ON c.user_id = p.user_id
         |  AND p.purchase_ts >= c.click_ts
-        |  AND p.purchase_ts <= c.click_ts + INTERVAL 1 HOUR""".stripMargin,
+        |  AND p.purchase_ts <= c.click_ts + INTERVAL 1 HOUR""".stripMargin),
 
-    "stream_stream_outer" ->
+    QueryDef("stream_stream_outer", (s, dir) =>
+      EventsStream.runStreamStreamOuterJoin(s, Tables.events(s, dir)),
       """WITH c AS (SELECT user_id, ts AS click_ts FROM events
         |           WHERE event_type = 'click'),
         |p AS (SELECT user_id, ts AS purchase_ts, value FROM events
@@ -4892,9 +4813,9 @@ object SparkEntry {
         |         AS paired_value
         |FROM c LEFT JOIN p ON c.user_id = p.user_id
         |  AND p.purchase_ts >= c.click_ts
-        |  AND p.purchase_ts <= c.click_ts + INTERVAL 1 HOUR""".stripMargin,
+        |  AND p.purchase_ts <= c.click_ts + INTERVAL 1 HOUR""".stripMargin),
 
-    "events_retention" ->
+    QueryDef("events_retention", Queries.eventsRetention,
       """WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS d FROM events),
         |cohort AS (SELECT user_id, min(d) AS cohort_d FROM ev GROUP BY 1),
         |act AS (SELECT DISTINCT user_id, d FROM ev),
@@ -4907,16 +4828,16 @@ object SparkEntry {
         |  count(DISTINCT CASE WHEN k = 7 THEN user_id END) AS retained_d7,
         |  count(DISTINCT CASE WHEN k = 14 THEN user_id END) AS retained_d14,
         |  count(DISTINCT CASE WHEN k = 30 THEN user_id END) AS retained_d30
-        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "agg_histogram" ->
+    QueryDef("agg_histogram", Queries.aggHistogram,
       """SELECT CAST(least(greatest(floor(value / 25.0), 0), 20) AS BIGINT)
         |         AS bucket,
         |       count(*) AS n
         |FROM events WHERE value IS NOT NULL
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "window_rolling_range" ->
+    QueryDef("window_rolling_range", Queries.windowRollingRange,
       """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us,
         |                  CAST(round(value * 100) AS BIGINT) AS cents
         |           FROM events WHERE value IS NOT NULL),
@@ -4929,9 +4850,9 @@ object SparkEntry {
         |      FROM e)
         |SELECT user_id, max(roll_n) AS peak_hour_n,
         |       max(roll_cents) AS peak_hour_cents
-        |FROM r GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM r GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "text_tfidf" ->
+    QueryDef("text_tfidf", Queries.textTfidf,
       """WITH t AS (SELECT doc_id,
         |                  unnest(list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), t -> t <> '')) AS term
         |           FROM documents),
@@ -4948,9 +4869,9 @@ object SparkEntry {
         |          ORDER BY score DESC, term) AS BIGINT) AS rank
         |      FROM s)
         |SELECT doc_id, rank, term, score FROM r
-        |WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
+        |WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin),
 
-    "agg_grouping_sets" ->
+    QueryDef("agg_grouping_sets", Queries.aggGroupingSets,
       """SELECT coalesce(o_orderstatus, 'ALL') AS o_orderstatus,
         |       coalesce(o_orderpriority, 'ALL') AS o_orderpriority,
         |       n_orders, total_price
@@ -4959,9 +4880,9 @@ object SparkEntry {
         |         round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 2) AS total_price
         |  FROM orders
         |  GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ()))
-        |ORDER BY o_orderstatus, o_orderpriority""".stripMargin,
+        |ORDER BY o_orderstatus, o_orderpriority""".stripMargin),
 
-    "events_sliding_window" ->
+    QueryDef("events_sliding_window", Queries.eventsSlidingWindow,
       """WITH e AS (SELECT user_id, epoch_us(ts) AS us FROM events),
         |w AS (SELECT user_id, us,
         |             (us // 900000000 - k) * 900000000 AS win_start_us
@@ -4970,9 +4891,9 @@ object SparkEntry {
         |       count(*) AS n_events
         |FROM w
         |WHERE us - win_start_us >= 0 AND us - win_start_us < 3600000000
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "events_sliding_window_approx" ->
+    QueryDef("events_sliding_window_approx", Queries.eventsSlidingWindowApprox,
       """WITH e AS (SELECT user_id, epoch_us(ts) AS us FROM events),
         |w AS (SELECT user_id, us,
         |             (us // 900000000 - k) * 900000000 AS win_start_us
@@ -4980,9 +4901,9 @@ object SparkEntry {
         |SELECT win_start_us, count(*) AS n_events, true AS within_3pct
         |FROM w
         |WHERE us - win_start_us >= 0 AND us - win_start_us < 3600000000
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "text_phrase_search" ->
+    QueryDef("text_phrase_search", Queries.textPhraseSearch,
       """WITH t AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), t -> t <> '') AS w
         |           FROM documents),
         |bg AS (SELECT doc_id, w[i + 1] AS w1, w[i + 2] AS w2
@@ -4990,9 +4911,9 @@ object SparkEntry {
         |       WHERE len(w) >= 2)
         |SELECT doc_id, count(*) AS n_hits FROM bg
         |WHERE w1 = 'hash' AND w2 = 'join'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "text_lm_score" ->
+    QueryDef("text_lm_score", Queries.textLmScore,
       """WITH t AS (SELECT doc_id, list_filter(regexp_split_to_array(text, '[^\p{L}\p{N}]+'), t -> t <> '') AS w
         |           FROM documents),
         |bg AS (SELECT doc_id, w[i + 1] AS w1, w[i + 2] AS w2
@@ -5010,70 +4931,17 @@ object SparkEntry {
         |           CROSS JOIN v)
         |SELECT doc_id, count(*) AS n_bigrams,
         |       round(sum(q) / (count(*) * 1000000.0), 4) AS lm_score
-        |FROM q GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM q GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "corpus_overlap" ->
-      """WITH t AS (SELECT source, list_filter(regexp_split_to_array(text, '[^\p{L}\p{N}]+'), t -> t <> '') AS w
-        |           FROM documents),
-        |d AS (SELECT DISTINCT source,
-        |             md5(array_to_string(w[i + 1 : i + 8], ' ')) AS h
-        |      FROM t, unnest(range(len(w) - 8 + 1)) AS u(i)
-        |      WHERE len(w) >= 8),
-        |s AS (SELECT source, count(*) AS n_spans FROM d GROUP BY 1),
-        |p AS (SELECT a.source AS source_a, b.source AS source_b,
-        |             count(*) AS n_shared
-        |      FROM d a JOIN d b ON a.h = b.h AND a.source < b.source
-        |      GROUP BY 1, 2)
-        |SELECT source_a, source_b, n_shared,
-        |       sa.n_spans AS n_a, sb.n_spans AS n_b,
-        |       round(n_shared /
-        |             CAST(sa.n_spans + sb.n_spans - n_shared AS DOUBLE), 4)
-        |         AS jaccard
-        |FROM p JOIN s sa ON p.source_a = sa.source
-        |       JOIN s sb ON p.source_b = sb.source
-        |ORDER BY 1, 2""".stripMargin,
+    QueryDef("corpus_overlap", Queries.corpusOverlap(_, _), corpusOverlapOracle),
 
-    "text_span_dedup" ->
-      """WITH t AS (SELECT doc_id, list_filter(regexp_split_to_array(text, '[^\p{L}\p{N}]+'), t -> t <> '') AS w
-        |           FROM documents),
-        |s AS (SELECT doc_id,
-        |             md5(array_to_string(w[i + 1 : i + 8], ' ')) AS span_hash
-        |      FROM t, unnest(range(len(w) - 8 + 1)) AS u(i)
-        |      WHERE len(w) >= 8),
-        |g AS (SELECT span_hash, count(*) AS n_occ,
-        |             count(DISTINCT doc_id) AS n_docs
-        |      FROM s GROUP BY 1)
-        |SELECT count(*) AS n_distinct_spans,
-        |       CAST(sum(n_occ) AS BIGINT) AS n_span_instances,
-        |       CAST(sum(CASE WHEN n_docs >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_cross_doc_spans,
-        |       CAST(max(n_docs) AS BIGINT) AS max_span_doc_freq
-        |FROM g""".stripMargin,
+    QueryDef("text_span_dedup", Queries.textSpanDedup(_, _), spanDedupOracle),
 
     // the incremental index must equal the full recompute — same oracle
     // as corpus_overlap by construction
-    "corpus_overlap_incremental" ->
-      """WITH t AS (SELECT source, list_filter(regexp_split_to_array(text, '[^\p{L}\p{N}]+'), t -> t <> '') AS w
-        |           FROM documents),
-        |d AS (SELECT DISTINCT source,
-        |             md5(array_to_string(w[i + 1 : i + 8], ' ')) AS h
-        |      FROM t, unnest(range(len(w) - 8 + 1)) AS u(i)
-        |      WHERE len(w) >= 8),
-        |s AS (SELECT source, count(*) AS n_spans FROM d GROUP BY 1),
-        |p AS (SELECT a.source AS source_a, b.source AS source_b,
-        |             count(*) AS n_shared
-        |      FROM d a JOIN d b ON a.h = b.h AND a.source < b.source
-        |      GROUP BY 1, 2)
-        |SELECT source_a, source_b, n_shared,
-        |       sa.n_spans AS n_a, sb.n_spans AS n_b,
-        |       round(n_shared /
-        |             CAST(sa.n_spans + sb.n_spans - n_shared AS DOUBLE), 4)
-        |         AS jaccard
-        |FROM p JOIN s sa ON p.source_a = sa.source
-        |       JOIN s sb ON p.source_b = sb.source
-        |ORDER BY 1, 2""".stripMargin,
+    QueryDef("corpus_overlap_incremental", corpusOverlapIncremental, corpusOverlapOracle),
 
-    "join_interval_overlap" ->
+    QueryDef("join_interval_overlap", Queries.joinIntervalOverlap,
       """WITH e AS (
         |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
         |flagged AS (
@@ -5095,9 +4963,9 @@ object SparkEntry {
         |       count(DISTINCT (a.user_id, b.user_id)) AS n_user_pairs
         |FROM iv a JOIN iv b
         |  ON a.user_id < b.user_id
-        | AND a.s_us <= b.e_us AND b.s_us <= a.e_us""".stripMargin,
+        | AND a.s_us <= b.e_us AND b.s_us <= a.e_us""".stripMargin),
 
-    "join_interval_overlap_approx" ->
+    QueryDef("join_interval_overlap_approx", Queries.joinIntervalOverlapApprox,
       """WITH e AS (
         |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
         |flagged AS (
@@ -5122,9 +4990,9 @@ object SparkEntry {
         |       true AS within_5pct, true AS est_dominates_sample
         |FROM iv a JOIN iv b
         |  ON a.user_id < b.user_id
-        | AND a.s_us <= b.e_us AND b.s_us <= a.e_us""".stripMargin,
+        | AND a.s_us <= b.e_us AND b.s_us <= a.e_us""".stripMargin),
 
-    "events_transitions" ->
+    QueryDef("events_transitions", Queries.eventsTransitions,
       """WITH t AS (SELECT user_id, event_type,
         |             lead(event_type) OVER (PARTITION BY user_id
         |                                    ORDER BY ts, event_id) AS next_type
@@ -5135,9 +5003,9 @@ object SparkEntry {
         |SELECT from_type, to_type, n,
         |       round(CAST(n AS DOUBLE) /
         |             CAST(sum(n) OVER (PARTITION BY from_type) AS DOUBLE), 4) AS p
-        |FROM g ORDER BY from_type, to_type""".stripMargin,
+        |FROM g ORDER BY from_type, to_type""".stripMargin),
 
-    "join_point_in_interval" ->
+    QueryDef("join_point_in_interval", Queries.joinPointInInterval,
       """WITH e AS (
         |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
         |flagged AS (
@@ -5161,9 +5029,9 @@ object SparkEntry {
         |    ON iv.s_us <= epoch_us(p.ts) AND epoch_us(p.ts) <= iv.e_us
         |  GROUP BY 1)
         |SELECT n_active, count(*) AS n_events
-        |FROM c GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM c GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "events_path_topk" ->
+    QueryDef("events_path_topk", Queries.eventsPathTopk,
       """WITH r AS (SELECT user_id, event_type,
         |             row_number() OVER (PARTITION BY user_id
         |                                ORDER BY ts, event_id) AS rn
@@ -5172,9 +5040,9 @@ object SparkEntry {
         |      FROM r WHERE rn <= 5 GROUP BY 1),
         |g AS (SELECT path, count(*) AS n_users FROM p GROUP BY 1)
         |SELECT path, n_users FROM g
-        |ORDER BY n_users DESC, path LIMIT 20""".stripMargin,
+        |ORDER BY n_users DESC, path LIMIT 20""".stripMargin),
 
-    "window_distribution" ->
+    QueryDef("window_distribution", Queries.windowDistribution,
       """WITH r AS (SELECT o_orderpriority,
         |             CAST(o_totalprice AS DECIMAL(18,2)) AS p,
         |             CAST(ntile(4) OVER w AS BIGINT) AS q,
@@ -5187,9 +5055,9 @@ object SparkEntry {
         |       round(max(pr), 4) AS max_pct_rank,
         |       round(max(cd), 4) AS max_cume_dist,
         |       round(CAST(sum(p) AS DOUBLE), 2) AS total_price
-        |FROM r GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |FROM r GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
-    "agg_corr" ->
+    QueryDef("agg_corr", Queries.aggCorr,
       """WITH e AS (SELECT event_type,
         |             CAST(round(value * 100) AS BIGINT) AS x,
         |             CAST(hour(ts) AS BIGINT) AS y
@@ -5202,9 +5070,9 @@ object SparkEntry {
         |             (sqrt(CAST(n * sxx - sx * sx AS DOUBLE)) *
         |              sqrt(CAST(n * syy - sy * sy AS DOUBLE))), 4)
         |         AS corr_value_hour
-        |FROM m ORDER BY event_type""".stripMargin,
+        |FROM m ORDER BY event_type""".stripMargin),
 
-    "text_boilerplate_ngrams" ->
+    QueryDef("text_boilerplate_ngrams", textBoilerplateNgrams,
       """WITH t AS (SELECT list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), t -> t <> '') AS w FROM documents),
         |bg AS (SELECT w[i + 1] || ' ' || w[i + 2] AS bigram
         |       FROM t, unnest(range(len(w) - 1)) AS u(i)
@@ -5212,11 +5080,11 @@ object SparkEntry {
         |tot AS (SELECT greatest(10, count(*) // 800) AS thr FROM bg),
         |g AS (SELECT bigram, count(*) AS n FROM bg GROUP BY 1)
         |SELECT bigram, n FROM g, tot WHERE g.n >= tot.thr
-        |ORDER BY n DESC, bigram""".stripMargin,
+        |ORDER BY n DESC, bigram""".stripMargin),
 
-    "corpus_curation_funnel" -> curationOracle,
+    QueryDef("corpus_curation_funnel", corpusCurationFunnel, curationOracle),
 
-    "events_gap_fill" ->
+    QueryDef("events_gap_fill", Queries.eventsGapFill,
       """WITH e AS (SELECT event_type,
         |             date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h
         |           FROM events),
@@ -5229,23 +5097,23 @@ object SparkEntry {
         |SELECT event_type, epoch_us(h) AS hour_us,
         |       coalesce(n, 0) AS n_events
         |FROM spine LEFT JOIN hourly USING (event_type, h)
-        |ORDER BY event_type, hour_us""".stripMargin,
+        |ORDER BY event_type, hour_us""".stripMargin),
 
-    "delta_concurrent_append" ->
+    QueryDef("delta_concurrent_append", deltaConcurrentAppend,
       """SELECT count(*) AS n_rows, count(DISTINCT event_id) AS n_ids,
         |       round(sum(value), 2) AS total, true AS serialized_commits
-        |FROM events""".stripMargin,
+        |FROM events""".stripMargin),
 
-    "delta_dynamic_prune" ->
+    QueryDef("delta_dynamic_prune", deltaDynamicPrune,
       """WITH dim AS (SELECT event_id FROM events
         |             WHERE event_type = 'purchase'
         |               AND CAST(ts AS DATE) = DATE '2024-01-10')
         |SELECT count(*) AS n_rows, round(sum(e.value), 2) AS total,
         |       count(DISTINCT e.user_id) AS n_users,
         |       true AS pruned_files, true AS scanned_some
-        |FROM events e JOIN dim USING (event_id)""".stripMargin,
+        |FROM events e JOIN dim USING (event_id)""".stripMargin),
 
-    "corpus_overlap_topk" ->
+    QueryDef("corpus_overlap_topk", Queries.corpusOverlapTopk(_, _),
       """WITH t AS (SELECT doc_id, source, list_filter(regexp_split_to_array(text, '[^\p{L}\p{N}]+'), t -> t <> '') AS w
         |           FROM documents),
         |s AS (SELECT DISTINCT doc_id, source,
@@ -5263,94 +5131,25 @@ object SparkEntry {
         |SELECT source_a, source_b, rank, h AS span_hex,
         |       CAST(n_docs AS BIGINT) AS n_docs
         |FROM r WHERE rank <= 3
-        |ORDER BY source_a, source_b, rank""".stripMargin,
+        |ORDER BY source_a, source_b, rank""".stripMargin),
 
     // the incremental index must equal the full recompute — same oracle
     // as text_span_dedup by construction
-    "span_index_incremental" ->
-      """WITH t AS (SELECT doc_id, list_filter(regexp_split_to_array(text, '[^\p{L}\p{N}]+'), t -> t <> '') AS w
-        |           FROM documents),
-        |s AS (SELECT doc_id,
-        |             md5(array_to_string(w[i + 1 : i + 8], ' ')) AS span_hash
-        |      FROM t, unnest(range(len(w) - 8 + 1)) AS u(i)
-        |      WHERE len(w) >= 8),
-        |g AS (SELECT span_hash, count(*) AS n_occ,
-        |             count(DISTINCT doc_id) AS n_docs
-        |      FROM s GROUP BY 1)
-        |SELECT count(*) AS n_distinct_spans,
-        |       CAST(sum(n_occ) AS BIGINT) AS n_span_instances,
-        |       CAST(sum(CASE WHEN n_docs >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_cross_doc_spans,
-        |       CAST(max(n_docs) AS BIGINT) AS max_span_doc_freq
-        |FROM g""".stripMargin,
+    QueryDef("span_index_incremental", spanIndexIncremental, spanDedupOracle),
 
-    "mm_audio_meta" ->
-      """WITH d AS (SELECT doc_id, octet_length(encode(text)) AS b
-        |           FROM documents),
-        |p AS (SELECT doc_id,
-        |        CASE b % 3 WHEN 0 THEN 8000 WHEN 1 THEN 16000
-        |                   ELSE 44100 END AS rate,
-        |        256 + (b * 7) % 1024 AS ns,
-        |        (b * 2654435761) % 2147483647 AS seed
-        |      FROM d),
-        |s AS (SELECT doc_id, rate, ns, i,
-        |        ((seed + (i + 1) * 48271) % 65536) - 32768 AS v
-        |      FROM p, unnest(range(ns)) AS u(i)),
-        |z AS (SELECT doc_id, v,
-        |        v * lag(v) OVER (PARTITION BY doc_id ORDER BY i) < 0 AS zc
-        |      FROM s),
-        |a AS (SELECT doc_id,
-        |        sum(CAST(v AS BIGINT) * v) AS sum_sq, count(*) AS n,
-        |        max(abs(v)) AS peak,
-        |        sum(CASE WHEN zc THEN 1 ELSE 0 END) AS n_zc
-        |      FROM z GROUP BY 1)
-        |SELECT p.doc_id, CAST(p.rate AS BIGINT) AS sample_rate,
-        |  CAST(p.ns AS BIGINT) AS n_samples,
-        |  CAST(p.ns * 1000 // p.rate AS BIGINT) AS duration_ms,
-        |  round(sqrt(CAST(a.sum_sq AS DOUBLE) / a.n), 4) AS rms,
-        |  CAST(a.peak AS BIGINT) AS peak,
-        |  round(CAST(a.n_zc AS DOUBLE) / (a.n - 1), 6) AS zcr,
-        |  true AS header_ok
-        |FROM p JOIN a USING (doc_id) ORDER BY doc_id""".stripMargin,
+    QueryDef("mm_audio_meta", mmAudioMeta, audioMetaOracle),
 
     // streamed extraction must equal the batch run — same oracle as
     // mm_audio_meta by construction (disjoint drops, pure feature law)
-    "mm_audio_stream" ->
-      """WITH d AS (SELECT doc_id, octet_length(encode(text)) AS b
-        |           FROM documents),
-        |p AS (SELECT doc_id,
-        |        CASE b % 3 WHEN 0 THEN 8000 WHEN 1 THEN 16000
-        |                   ELSE 44100 END AS rate,
-        |        256 + (b * 7) % 1024 AS ns,
-        |        (b * 2654435761) % 2147483647 AS seed
-        |      FROM d),
-        |s AS (SELECT doc_id, rate, ns, i,
-        |        ((seed + (i + 1) * 48271) % 65536) - 32768 AS v
-        |      FROM p, unnest(range(ns)) AS u(i)),
-        |z AS (SELECT doc_id, v,
-        |        v * lag(v) OVER (PARTITION BY doc_id ORDER BY i) < 0 AS zc
-        |      FROM s),
-        |a AS (SELECT doc_id,
-        |        sum(CAST(v AS BIGINT) * v) AS sum_sq, count(*) AS n,
-        |        max(abs(v)) AS peak,
-        |        sum(CASE WHEN zc THEN 1 ELSE 0 END) AS n_zc
-        |      FROM z GROUP BY 1)
-        |SELECT p.doc_id, CAST(p.rate AS BIGINT) AS sample_rate,
-        |  CAST(p.ns AS BIGINT) AS n_samples,
-        |  CAST(p.ns * 1000 // p.rate AS BIGINT) AS duration_ms,
-        |  round(sqrt(CAST(a.sum_sq AS DOUBLE) / a.n), 4) AS rms,
-        |  CAST(a.peak AS BIGINT) AS peak,
-        |  round(CAST(a.n_zc AS DOUBLE) / (a.n - 1), 6) AS zcr,
-        |  true AS header_ok
-        |FROM p JOIN a USING (doc_id) ORDER BY doc_id""".stripMargin,
+    QueryDef("mm_audio_stream", mmAudioStream, audioMetaOracle),
 
-    "distinct_sketch_merge" ->
+    QueryDef("distinct_sketch_merge", Queries.distinctSketchMerge,
       """SELECT count(DISTINCT CAST(ts AS DATE)) AS n_days,
         |       count(DISTINCT user_id) AS exact_users,
         |       true AS merge_law_ok, true AS merged_within_3pct
-        |FROM events""".stripMargin,
+        |FROM events""".stripMargin),
 
-    "etl_profile" ->
+    QueryDef("etl_profile", Queries.etlProfile,
       """WITH p AS (
         |  SELECT 'event_type' AS col_name, count(event_type) AS n_present,
         |         count(*) - count(event_type) AS n_nulls,
@@ -5368,38 +5167,38 @@ object SparkEntry {
         |SELECT col_name, n_present, n_nulls, min_s, max_s,
         |       CAST(n_distinct AS BIGINT) AS n_distinct,
         |       true AS apx_within_5pct
-        |FROM p ORDER BY col_name""".stripMargin,
+        |FROM p ORDER BY col_name""".stripMargin),
 
-    "sample_split" ->
+    QueryDef("sample_split", sampleSplit,
       """SELECT count(*) AS n_total, true AS disjoint_exhaustive,
         |       true AS test_frac_ok
-        |FROM documents""".stripMargin,
+        |FROM documents""".stripMargin),
 
-    "ann_lsh" ->
+    QueryDef("ann_lsh", annLsh,
       """SELECT CAST(8 AS BIGINT) AS n_queries, true AS min_recall_ok,
-        |       true AS mean_recall_ok""".stripMargin,
+        |       true AS mean_recall_ok""".stripMargin),
 
-    "ann_quantized" ->
+    QueryDef("ann_quantized", annQuantized,
       """SELECT CAST(8 AS BIGINT) AS n_queries, true AS min_recall_ok,
-        |       true AS mean_recall_ok, true AS sim_err_ok""".stripMargin,
+        |       true AS mean_recall_ok, true AS sim_err_ok""".stripMargin),
 
-    "ann_pq" ->
+    QueryDef("ann_pq", annPq,
       """SELECT CAST(8 AS BIGINT) AS n_queries, true AS min_recall_ok,
-        |       true AS mean_recall_ok, true AS sim_err_ok""".stripMargin,
+        |       true AS mean_recall_ok, true AS sim_err_ok""".stripMargin),
 
-    "ann_ivf_pq" ->
+    QueryDef("ann_ivf_pq", annIvfPq,
       """SELECT CAST(8 AS BIGINT) AS n_queries, true AS min_recall_ok,
-        |       true AS mean_recall_ok, true AS sim_err_ok""".stripMargin,
+        |       true AS mean_recall_ok, true AS sim_err_ok""".stripMargin),
 
     // the catalog-persistence probe: the fresh session's zero-job load
     // and the codebook JSON round-trip are pinned as booleans; recall
     // floors are ann_pq's (the loaded index must probe as well as the
     // trained one)
-    "ann_index_persist" ->
+    QueryDef("ann_index_persist", annIndexPersist,
       """SELECT CAST(8 AS BIGINT) AS n_queries, true AS min_recall_ok,
         |       true AS mean_recall_ok, true AS sim_err_ok,
         |       true AS loaded_without_train,
-        |       true AS codebooks_identical""".stripMargin,
+        |       true AS codebooks_identical""".stripMargin),
 
     // append-only growth: extension (not retrain) pinned, codebooks
     // kept, code table grew by exactly the batch, next call a pure
@@ -5408,17 +5207,17 @@ object SparkEntry {
     // file yields Shrunk(1) (codebooks kept, the file's code rows
     // DV-deleted, zero survivors), the code table loses EXACTLY that
     // file's rows, and the next call is again a pure load
-    "ann_index_incremental" ->
+    QueryDef("ann_index_incremental", annIndexIncremental,
       """SELECT CAST(8 AS BIGINT) AS n_queries, true AS min_recall_ok,
         |       true AS mean_recall_ok, true AS extended_without_retrain,
         |       true AS code_rows_grew_by_batch,
         |       true AS shrunk_without_retrain,
-        |       true AS code_rows_shrank_by_file""".stripMargin,
+        |       true AS code_rows_shrank_by_file""".stripMargin),
 
     // #141's five-clause merge model run through SQL text, then the SQL
     // UPDATE (+1 on purchases) and SQL DELETE (< 25) applied on top —
     // the CASE chains mirror clause precedence exactly
-    "sql_dml" ->
+    QueryDef("sql_dml", sqlDml,
       s"""WITH c AS (
          |  SELECT event_type AS trip_type, value AS total_amount
          |  FROM events WHERE event_type IN ('purchase', 'view') AND $dqSql),
@@ -5449,13 +5248,13 @@ object SparkEntry {
          |SELECT trip_type, count(*) AS n_rows,
          |       round(sum(total_amount), 2) AS total
          |FROM updated WHERE total_amount >= 25
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // SQL read-side time travel: the oracle models BOTH snapshots — v1
     // (pre-DML) and the current one (UPDATE +100 on purchases, then
     // DELETE < 50) — and pins that TIMESTAMP AS OF at v1's commit time
     // selected exactly the VERSION AS OF 1 rows, plus the history length
-    "sql_time_travel" ->
+    QueryDef("sql_time_travel", sqlTimeTravel,
       s"""WITH c AS (
          |  SELECT event_type AS trip_type, value AS total_amount
          |  FROM events WHERE event_type IN ('purchase', 'view') AND $dqSql),
@@ -5471,12 +5270,12 @@ object SparkEntry {
          |         round(sum(total_amount), 2) FROM v3 GROUP BY 2)
          |SELECT phase, trip_type, CAST(n_rows AS BIGINT) AS n_rows, total,
          |       true AS ts_matches_version, CAST(3 AS BIGINT) AS n_versions
-         |FROM u ORDER BY phase, trip_type""".stripMargin,
+         |FROM u ORDER BY phase, trip_type""".stripMargin),
 
     // SQL DDL lifecycle: create empty → bulk insert → ADD COLUMN widen →
     // column-list insert of wider rows; the pre-widen rows back-fill
     // NULL `note`, the manual rows back-fill NULL `total_amount`
-    "sql_ddl" ->
+    QueryDef("sql_ddl", sqlDdl,
       s"""WITH c AS (
          |  SELECT event_type AS trip_type, value AS total_amount
          |  FROM events WHERE event_type IN ('purchase', 'view') AND $dqSql),
@@ -5489,13 +5288,13 @@ object SparkEntry {
          |       round(sum(coalesce(total_amount, 0)), 2) AS total,
          |       CAST(sum(CASE WHEN note IS NULL THEN 1 ELSE 0 END) AS BIGINT)
          |         AS n_null_note
-         |FROM allrows GROUP BY 1 ORDER BY 1""".stripMargin,
+         |FROM allrows GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // merge-on-read DML end state must be indistinguishable from
     // copy-on-write (the delta_merge_dv discipline): DELETE [100,110),
     // then +1 on purchases >= 150; the no-rewrite probes ride as
     // constant booleans
-    "sql_dml_dv" ->
+    QueryDef("sql_dml_dv", sqlDmlDv,
       s"""WITH c AS (
          |  SELECT event_type AS trip_type, value AS total_amount
          |  FROM events WHERE event_type IN ('purchase', 'view') AND $dqSql),
@@ -5510,13 +5309,13 @@ object SparkEntry {
          |       true AS dv_delete_wrote_no_data,
          |       true AS dv_update_appended_only,
          |       true AS original_files_intact
-         |FROM kept GROUP BY 1 ORDER BY 1""".stripMargin,
+         |FROM kept GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // CDC repair through SQL: dim ends as (fact after the UPDATE,
     // repaired via MERGE-from-CDF post-images) plus the historical
     // back-fill of v1 rows under 20 (PRE-update values — the snapshot
     // read) appended
-    "sql_merge_cdf" ->
+    QueryDef("sql_merge_cdf", sqlMergeCdf,
       s"""WITH c AS (
          |  SELECT event_type AS trip_type, value AS total_amount
          |  FROM events WHERE event_type IN ('purchase', 'view') AND $dqSql),
@@ -5529,12 +5328,12 @@ object SparkEntry {
          |        WHERE total_amount < 20)
          |SELECT trip_type, count(*) AS n_rows,
          |       round(sum(total_amount), 2) AS total
-         |FROM dim GROUP BY 1 ORDER BY 1""".stripMargin,
+         |FROM dim GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // lifecycle verbs: RESTORE rolls the zeroed-amount reprocess back to
     // v1, so the content model is just the base consumer table; every
     // other verb's outcome is a pinned constant
-    "sql_lifecycle" ->
+    QueryDef("sql_lifecycle", sqlLifecycle,
       s"""WITH c AS (
          |  SELECT event_type AS trip_type, value AS total_amount
          |  FROM events WHERE event_type IN ('purchase', 'view') AND $dqSql)
@@ -5545,21 +5344,16 @@ object SparkEntry {
          |       CAST((SELECT count(DISTINCT event_type) FROM events)
          |         AS BIGINT) AS n_foreign_partitions,
          |       true AS detail_consistent
-         |FROM c GROUP BY trip_type ORDER BY trip_type""".stripMargin,
+         |FROM c GROUP BY trip_type ORDER BY trip_type""".stripMargin),
 
     // #153's content model reached through SQL DDL: the ts-range
     // aggregate plus the pinned pruning/derivation probes
-    "sql_generated_cols" ->
-      """SELECT count(*) AS n_rows, round(sum(value), 2) AS total,
-        |       true AS pruned_files, true AS partition_filter_derived
-        |FROM events
-        |WHERE ts >= TIMESTAMP '2024-01-08 00:00:00'
-        |  AND ts <  TIMESTAMP '2024-01-12 00:00:00'""".stripMargin,
+    QueryDef("sql_generated_cols", sqlGeneratedCols, generatedColsOracle),
 
     // timestamp-bounded CDF/RESTORE: the table ends RESTORED to v1, so
     // the content model is the base consumer; the bound-resolution
     // probes ride as pinned booleans
-    "sql_cdf_timestamp" ->
+    QueryDef("sql_cdf_timestamp", sqlCdfTimestamp,
       s"""WITH c AS (
          |  SELECT event_type AS trip_type, value AS total_amount
          |  FROM events WHERE event_type IN ('purchase', 'view') AND $dqSql)
@@ -5567,11 +5361,11 @@ object SparkEntry {
          |       round(sum(total_amount), 2) AS total,
          |       true AS ts_from_matches_version, true AS ts_to_bounds_feed,
          |       true AS restored_to_v1
-         |FROM c GROUP BY 1 ORDER BY 1""".stripMargin,
+         |FROM c GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // CREATE OR REPLACE: the table ends restored to the REPLACED
     // content (purchases, amounts doubled); atomicity probes pinned
-    "sql_replace_table" ->
+    QueryDef("sql_replace_table", sqlReplaceTable,
       s"""WITH c AS (
          |  SELECT event_type AS trip_type, value AS total_amount
          |  FROM events WHERE event_type IN ('purchase', 'view') AND $dqSql),
@@ -5582,11 +5376,11 @@ object SparkEntry {
          |       true AS replace_was_atomic, true AS history_intact,
          |       true AS declared_replace_relaid_out,
          |       true AS missing_table_rejected
-         |FROM r GROUP BY 1 ORDER BY 1""".stripMargin,
+         |FROM r GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // the nested live view models the post-UPDATE aggregate; the
     // snapshot-pin / replace / drop probes ride as pinned booleans
-    "sql_views" ->
+    QueryDef("sql_views", sqlViews,
       s"""WITH c AS (
          |  SELECT event_type AS trip_type, value AS total_amount
          |  FROM events WHERE event_type IN ('purchase', 'view') AND $dqSql),
@@ -5597,11 +5391,11 @@ object SparkEntry {
          |       round(sum(total_amount), 2) AS total,
          |       true AS snapshot_view_pinned, true AS replace_redefined,
          |       true AS drop_removed
-         |FROM upd GROUP BY 1 ORDER BY 1""".stripMargin,
+         |FROM upd GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // partition-scoped maintenance never changes content: base + the
     // two appended thirds; scope/dry-run probes ride as booleans
-    "sql_optimize_partition" ->
+    QueryDef("sql_optimize_partition", sqlOptimizePartition,
       s"""WITH c AS (
          |  SELECT event_id, event_type AS trip_type, value AS total_amount
          |  FROM events WHERE event_type IN ('purchase', 'view') AND $dqSql),
@@ -5615,35 +5409,35 @@ object SparkEntry {
          |       true AS optimize_bounded, true AS other_partitions_intact,
          |       true AS zorder_bounded, true AS dry_run_listed_no_delete,
          |       true AS vacuum_reclaimed_list
-         |FROM all3 GROUP BY 1 ORDER BY 1""".stripMargin,
+         |FROM all3 GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // filtered-ANN floors measured vs the brute-force-over-filtered
     // oracle; every returned neighbor satisfying the predicate is the
     // zero-violation boolean
-    "ann_filtered" ->
+    QueryDef("ann_filtered", annFiltered,
       """SELECT CAST(8 AS BIGINT) AS n_queries, true AS min_recall_ok,
         |       true AS mean_recall_ok, true AS sim_err_ok,
-        |       true AS filter_respected""".stripMargin,
+        |       true AS filter_respected""".stripMargin),
 
     // rebalance probes are engine-internal state transitions; the
     // oracle pins every boolean true and the query census
-    "ann_rebalance" ->
+    QueryDef("ann_rebalance", annRebalance,
       """SELECT CAST(7 AS BIGINT) AS n_queries,
         |       true AS trained_then_extended, true AS skew_flagged,
         |       true AS split_applied, true AS flag_cleared_rows_conserved,
         |       true AS ex_hot_cell_shrank, true AS pure_load_after,
-        |       true AS min_recall_ok, true AS mean_recall_ok""".stripMargin,
+        |       true AS min_recall_ok, true AS mean_recall_ok""".stripMargin),
 
-    "sample_stratified" ->
+    QueryDef("sample_stratified", sampleStratified,
       """SELECT event_type, count(*) AS n_total,
         |       CAST((count(*) * 200 + 999) // 1000 AS BIGINT) AS n_sampled,
         |       true AS subset_ok
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // exact-membership census: the keep coin (portable LCG), the weight
     // (shared quality formula), and the integer keep test are computed
     // independently by both engines — bit_xor pins the exact sample
-    "sample_importance" ->
+    QueryDef("sample_importance", sampleImportance,
       """WITH q AS (SELECT doc_id, source,
         |    CAST(len(list_filter(regexp_split_to_array(text, '[^\p{L}\p{N}]+'), t -> t <> '')) AS BIGINT) AS n_tokens,
         |    round(least(CAST(len(list_filter(regexp_split_to_array(text, '[^\p{L}\p{N}]+'), t -> t <> '')) AS DOUBLE) / 50, 1.0) *
@@ -5658,9 +5452,9 @@ object SparkEntry {
         |       CAST(coalesce(sum(CASE WHEN keep = 1 THEN n_tokens END), 0) AS BIGINT) AS kept_tokens,
         |       CAST(coalesce(bit_xor(CASE WHEN keep = 1 THEN doc_id END), 0) AS BIGINT) AS kept_xor,
         |       round(CAST(sum(keep) AS DOUBLE) / count(*), 4) AS eff_rate
-        |FROM f GROUP BY source ORDER BY source""".stripMargin,
+        |FROM f GROUP BY source ORDER BY source""".stripMargin),
 
-    "sample_mixture" ->
+    QueryDef("sample_mixture", sampleMixture,
       """WITH t AS (SELECT doc_id, source,
         |                  CAST(len(list_filter(regexp_split_to_array(text, '[^\p{L}\p{N}]+'), t -> t <> '')) AS BIGINT) AS tk,
         |                  1 + CAST(regexp_extract(source, '([0-9]+)', 1) AS BIGINT) % 3 AS w
@@ -5680,17 +5474,17 @@ object SparkEntry {
         |       CAST(any_value(target) AS BIGINT) AS target_tokens,
         |       count(*) AS n_docs, CAST(sum(tk) AS BIGINT) AS kept_tokens,
         |       CAST(bit_xor(doc_id) AS BIGINT) AS member_xor
-        |FROM k GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM k GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "ann_ivf" ->
+    QueryDef("ann_ivf", annIvf,
       """SELECT CAST(8 AS BIGINT) AS n_queries, true AS min_recall_ok,
-        |       true AS mean_recall_ok""".stripMargin,
+        |       true AS mean_recall_ok""".stripMargin),
 
-    "stream_dedup" ->
+    QueryDef("stream_dedup", streamDedup,
       """SELECT event_type, count(*) AS n_rows
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "text_repetition" ->
+    QueryDef("text_repetition", textRepetition,
       """WITH t AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), t -> t <> '') AS toks FROM documents),
         |g2 AS (SELECT doc_id, unnest(list_transform(range(len(toks) - 1),
         |              i -> toks[i+1] || ' ' || toks[i+2])) AS g FROM t),
@@ -5703,9 +5497,9 @@ object SparkEntry {
         |       FROM t)
         |SELECT t2.doc_id, n_2grams, top_2gram_n,
         |       round(1 - d3::DOUBLE / n3, 4) AS dup_3gram_frac
-        |FROM top2 t2 JOIN g3 USING (doc_id) ORDER BY doc_id""".stripMargin,
+        |FROM top2 t2 JOIN g3 USING (doc_id) ORDER BY doc_id""".stripMargin),
 
-    "text_contamination" ->
+    QueryDef("text_contamination", textContamination,
       """WITH t AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), t -> t <> '') AS toks FROM documents),
         |sh AS (SELECT doc_id, list_distinct(list_transform(range(len(toks) - 7),
         |         i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3] || ' ' ||
@@ -5717,9 +5511,9 @@ object SparkEntry {
         |         JOIN bench USING (g) GROUP BY 1)
         |SELECT t.doc_id, CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
         |       coalesce(h.n_hits, 0) > 0 AS contaminated
-        |FROM t LEFT JOIN hits h USING (doc_id) ORDER BY doc_id""".stripMargin,
+        |FROM t LEFT JOIN hits h USING (doc_id) ORDER BY doc_id""".stripMargin),
 
-    "mm_resize" ->
+    QueryDef("mm_resize", mmResize,
       """WITH g AS (SELECT doc_id,
         |                  8 + octet_length(encode(text)) % 64 AS src_w,
         |                  8 + octet_length(encode(text)) % 48 AS src_h
@@ -5733,9 +5527,9 @@ object SparkEntry {
         |       greatest(1, CAST(floor(src_h * sc) AS BIGINT)) AS dst_h,
         |       greatest(1, CAST(floor(src_w * sc) AS BIGINT)) *
         |         greatest(1, CAST(floor(src_h * sc) AS BIGINT)) * 3 AS out_bytes
-        |FROM s ORDER BY doc_id""".stripMargin,
+        |FROM s ORDER BY doc_id""".stripMargin),
 
-    "mm_frame_sample" ->
+    QueryDef("mm_frame_sample", mmFrameSample,
       """WITH d AS (SELECT doc_id, octet_length(encode(text)) AS n FROM documents),
         |f AS (SELECT doc_id, n, unnest(range(4)) AS i FROM d)
         |SELECT doc_id, CAST(i AS BIGINT) AS frame_idx,
@@ -5743,9 +5537,9 @@ object SparkEntry {
         |       CAST(least(n, i * greatest(n // 4, 1) + 16)
         |            - i * greatest(n // 4, 1) AS BIGINT) AS frame_bytes
         |FROM f WHERE i * greatest(n // 4, 1) < n
-        |ORDER BY doc_id, frame_idx""".stripMargin,
+        |ORDER BY doc_id, frame_idx""".stripMargin),
 
-    "etl_dq_quarantine" ->
+    QueryDef("etl_dq_quarantine", etlDqQuarantine,
       """WITH d AS (
         |  SELECT CASE
         |    WHEN NOT (user_id IS NOT NULL AND user_id > 0) THEN 'positive(user_id)'
@@ -5756,9 +5550,9 @@ object SparkEntry {
         |SELECT CASE WHEN rule = 'none' THEN 'clean' ELSE 'quarantine' END
         |         AS disposition,
         |       rule, count(*) AS n_rows
-        |FROM d GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |FROM d GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
-    "events_resample" ->
+    QueryDef("events_resample", eventsResample,
       """WITH daily AS (
         |  SELECT user_id, CAST(ts AS DATE) AS day, count(*) AS n_events,
         |         round(sum(value), 2) AS day_total,
@@ -5776,25 +5570,25 @@ object SparkEntry {
         |       last_value(d.day_last IGNORE NULLS)
         |         OVER (PARTITION BY g.user_id ORDER BY g.day) AS last_seen_value
         |FROM grid g LEFT JOIN daily d USING (user_id, day)
-        |ORDER BY user_id, day""".stripMargin,
+        |ORDER BY user_id, day""".stripMargin),
 
-    "window_lead_lag" ->
+    QueryDef("window_lead_lag", windowLeadLag,
       """SELECT event_id, user_id, value,
         |       lag(value, 1) OVER w AS prev_value,
         |       lead(value, 1) OVER w AS next_value,
         |       CAST(ntile(4) OVER w AS BIGINT) AS quartile
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin),
 
-    "corpus_stats" ->
+    QueryDef("corpus_stats", corpusStats,
       """SELECT count(*) AS n_docs,
         |  CAST(sum(len(list_filter(regexp_split_to_array(text, '[^\p{L}\p{N}]+'), t -> t <> ''))) AS BIGINT) AS total_tokens,
         |  round(avg(len(list_filter(regexp_split_to_array(text, '[^\p{L}\p{N}]+'), t -> t <> ''))), 2) AS avg_tokens,
         |  round(quantile_cont(len(list_filter(regexp_split_to_array(text, '[^\p{L}\p{N}]+'), t -> t <> '')), 0.5), 2) AS p50_tokens,
         |  round(quantile_cont(len(list_filter(regexp_split_to_array(text, '[^\p{L}\p{N}]+'), t -> t <> '')), 0.95), 2) AS p95_tokens,
         |  CAST(max(len(list_filter(regexp_split_to_array(text, '[^\p{L}\p{N}]+'), t -> t <> ''))) AS BIGINT) AS max_tokens
-        |FROM documents""".stripMargin,
+        |FROM documents""".stripMargin),
 
     // The minhash-LSH candidate set provably covers every pair with true
     // Jaccard >= 0.2 on this corpus (measured: all qualifying pairs have
@@ -5803,7 +5597,7 @@ object SparkEntry {
     // operator's output equals the full exact-Jaccard pair set — which
     // DuckDB can compute directly. Same argument gives dedup_minhash its
     // pair-set oracle (see the query's Scaladoc for the bound rationale).
-    "dedup_minhash" ->
+    QueryDef("dedup_minhash", dedupMinhash,
       """WITH t AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), t -> t <> '') AS toks
         |           FROM documents),
         |sh AS (SELECT doc_id,
@@ -5815,18 +5609,18 @@ object SparkEntry {
         |                   len(list_distinct(a.sh || b.sh)), 4) AS jaccard
         |      FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
         |SELECT doc_a, doc_b, jaccard, true AS est_ok FROM p
-        |WHERE jaccard >= 0.2 ORDER BY doc_a, doc_b""".stripMargin,
+        |WHERE jaccard >= 0.2 ORDER BY doc_a, doc_b""".stripMargin),
 
-    "dedup_simhash" ->
+    QueryDef("dedup_simhash", dedupSimhash,
       """WITH t AS (SELECT doc_id,
         |             list_sort(list_distinct(list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), t -> t <> ''))) AS tk
         |           FROM documents),
         |g AS (SELECT tk, count(*) AS g FROM t GROUP BY tk HAVING count(*) > 1)
         |SELECT CAST(coalesce(sum(g * (g - 1) // 2), 0) AS BIGINT) AS n_exact_pairs,
         |       true AS exact_covered, true AS est_p99_ok, true AS est_max_ok
-        |FROM g""".stripMargin,
+        |FROM g""".stripMargin),
 
-    "text_fingerprint_roll" ->
+    QueryDef("text_fingerprint_roll", textFingerprintRoll,
       """WITH c AS (SELECT doc_id, md5(text) AS k,
         |                  len(list_filter(regexp_split_to_array(text, '[^\p{L}\p{N}]+'), t -> t <> '')) AS nt
         |           FROM documents),
@@ -5834,9 +5628,9 @@ object SparkEntry {
         |SELECT doc_id, content_class,
         |       CAST(greatest(nt - 7, 1) AS BIGINT) AS n_windows,
         |       true AS roll_class_ok, true AS winnow_fn_ok
-        |FROM c JOIN cls USING (k) ORDER BY doc_id""".stripMargin,
+        |FROM c JOIN cls USING (k) ORDER BY doc_id""".stripMargin),
 
-    "dedup_ngram" ->
+    QueryDef("dedup_ngram", dedupNgram,
       """WITH t AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), t -> t <> '') AS toks
         |           FROM documents),
         |sh AS (SELECT doc_id,
@@ -5848,23 +5642,13 @@ object SparkEntry {
         |                   len(list_distinct(a.sh || b.sh)), 4) AS jaccard
         |      FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
         |SELECT doc_a, doc_b, jaccard FROM p
-        |WHERE jaccard >= 0.2 ORDER BY doc_a, doc_b""".stripMargin,
+        |WHERE jaccard >= 0.2 ORDER BY doc_a, doc_b""".stripMargin),
 
-    "catalog_partitions" ->
-      s"""SELECT CAST(month(ts) AS BIGINT) AS trip_month, count(*) AS n_rows,
-         |       round(sum(value), 2) AS total
-         |FROM events
-         |WHERE event_type = 'purchase' AND $dqSql
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+    QueryDef("catalog_partitions", catalogPartitions, catalogOracle),
 
-    "catalog_persistent" ->
-      s"""SELECT CAST(month(ts) AS BIGINT) AS trip_month, count(*) AS n_rows,
-         |       round(sum(value), 2) AS total
-         |FROM events
-         |WHERE event_type = 'purchase' AND $dqSql
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+    QueryDef("catalog_persistent", catalogPersistent, catalogOracle),
 
-    "stream_sessionize" ->
+    QueryDef("stream_sessionize", streamSessionize,
       """WITH e AS (
         |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
         |flagged AS (
@@ -5885,20 +5669,15 @@ object SparkEntry {
         |  FROM sess GROUP BY 1, 2)
         |SELECT user_id, session_start, session_end, n_events
         |FROM agg
-        |ORDER BY user_id, session_start""".stripMargin,
+        |ORDER BY user_id, session_start""".stripMargin),
 
-    "report_empty" ->
+    QueryDef("report_empty", reportEmpty,
       """SELECT CAST(0 AS BIGINT) AS n_rows, CAST(2 AS BIGINT) AS n_cols,
-        |       'report_month,avg_total_amount' AS cols""".stripMargin,
+        |       'report_month,avg_total_amount' AS cols""".stripMargin),
 
-    "delta_sink" ->
-      s"""SELECT event_type AS trip_type, count(*) AS n_rows,
-         |       round(sum(value), 2) AS total
-         |FROM events
-         |WHERE event_type IN ('purchase', 'view') AND $dqSql
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+    QueryDef("delta_sink", deltaSink, compactionOracle),
 
-    "delta_time_travel" ->
+    QueryDef("delta_time_travel", deltaTimeTravel,
       s"""SELECT * FROM (
          |  SELECT CAST(1 AS BIGINT) AS version, event_type AS trip_type,
          |         count(*) AS n_rows, round(sum(value), 2) AS total
@@ -5912,9 +5691,9 @@ object SparkEntry {
          |  WHERE $dqSql AND (event_type = 'view'
          |        OR (event_type = 'purchase' AND value >= 100))
          |  GROUP BY 2)
-         |ORDER BY version, trip_type""".stripMargin,
+         |ORDER BY version, trip_type""".stripMargin),
 
-    "delta_schema_evolution" ->
+    QueryDef("delta_schema_evolution", deltaSchemaEvolution,
       s"""SELECT * FROM (
          |  SELECT CAST(1 AS BIGINT) AS version, CAST(2 AS BIGINT) AS n_cols,
          |         count(*) AS n_rows, round(sum(value), 2) AS total
@@ -5925,9 +5704,9 @@ object SparkEntry {
          |         count(*), round(sum(value), 2)
          |  FROM events
          |  WHERE event_type IN ('purchase', 'view') AND $dqSql)
-         |ORDER BY version""".stripMargin,
+         |ORDER BY version""".stripMargin),
 
-    "delta_merge" ->
+    QueryDef("delta_merge", deltaMerge,
       s"""SELECT trip_type, count(*) AS n_rows, round(sum(total_amount), 2) AS total,
          |       true AS partial_rewrite
          |FROM (
@@ -5938,11 +5717,11 @@ object SparkEntry {
          |  UNION ALL
          |  SELECT event_type, value FROM events
          |  WHERE event_type = 'view' AND $dqSql)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // same end-state model as delta_merge — merge-on-read must be
     // indistinguishable in content — plus the no-rewrite probes
-    "delta_merge_dv" ->
+    QueryDef("delta_merge_dv", deltaMergeDv,
       s"""SELECT trip_type, count(*) AS n_rows, round(sum(total_amount), 2) AS total,
          |       true AS originals_intact, true AS appended
          |FROM (
@@ -5953,9 +5732,9 @@ object SparkEntry {
          |  UNION ALL
          |  SELECT event_type, value FROM events
          |  WHERE event_type = 'view' AND $dqSql)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "delta_merge_evolve" ->
+    QueryDef("delta_merge_evolve", deltaMergeEvolve,
       s"""SELECT trip_type, count(*) AS n_rows,
          |       round(sum(total_amount), 2) AS total,
          |       CAST(sum(CASE WHEN audited THEN 1 ELSE 0 END) AS BIGINT)
@@ -5967,9 +5746,9 @@ object SparkEntry {
          |              THEN value + 10 ELSE value END AS total_amount,
          |         (event_type = 'purchase' AND value >= 100) AS audited
          |  FROM events WHERE event_type IN ('purchase', 'view') AND $dqSql)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "delta_column_mapping" ->
+    QueryDef("delta_column_mapping", deltaColumnMapping,
       s"""WITH c AS (
          |  SELECT event_type AS trip_type, value AS fare_total
          |  FROM events WHERE event_type IN ('purchase', 'view') AND $dqSql)
@@ -5979,9 +5758,9 @@ object SparkEntry {
          |FROM (SELECT trip_type, fare_total FROM c
          |      UNION ALL
          |      SELECT trip_type, fare_total FROM c WHERE trip_type = 'view')
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "delta_deletion_vectors" ->
+    QueryDef("delta_deletion_vectors", deltaDeletionVectors,
       s"""WITH c AS (
          |  SELECT event_type AS trip_type, value AS total_amount
          |  FROM events WHERE event_type IN ('purchase', 'view') AND $dqSql)
@@ -5989,9 +5768,9 @@ object SparkEntry {
          |       round(sum(total_amount), 2) AS total,
          |       true AS no_data_rewrite, true AS v1_intact
          |FROM c WHERE total_amount >= 20
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "delta_update_dv" ->
+    QueryDef("delta_update_dv", deltaUpdateDv,
       s"""WITH c AS (
          |  SELECT event_type AS trip_type, value AS total_amount
          |  FROM events WHERE event_type IN ('purchase', 'view') AND $dqSql)
@@ -6000,12 +5779,12 @@ object SparkEntry {
          |                      THEN total_amount + 10
          |                      ELSE total_amount END), 2) AS total,
          |       true AS originals_intact, true AS appended, true AS v1_intact
-         |FROM c GROUP BY 1 ORDER BY 1""".stripMargin,
+         |FROM c GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // CTE-modeled clause semantics: one act CASE per target group whose
     // WHEN order mirrors the clause order (CASE is first-match-wins, so
     // the oracle pins precedence, not just end states)
-    "delta_merge_conditional" ->
+    QueryDef("delta_merge_conditional", deltaMergeConditional,
       s"""WITH c AS (
          |  SELECT event_type AS trip_type, value AS total_amount
          |  FROM events WHERE event_type IN ('purchase', 'view') AND $dqSql),
@@ -6030,12 +5809,12 @@ object SparkEntry {
          |  UNION ALL
          |  SELECT 'view', total_amount FROM c
          |  WHERE trip_type = 'view' AND total_amount >= 50)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // final-state model of the three SCD-2 applications: chain length =
     // 1 + changed-in-b1 + changed-in-b2 per key; current attrs = the
     // last batch that touched the key (b2 %14 wins over b1 %7/%11)
-    "delta_scd2" ->
+    QueryDef("delta_scd2", deltaScd2,
       """WITH c AS (SELECT c_custkey AS k, c_acctbal AS bal FROM customer),
         |old_keys AS (
         |  SELECT k,
@@ -6054,11 +5833,11 @@ object SparkEntry {
         |       round(sum(cur_bal), 2) AS bal_current,
         |       CAST(sum(n_versions - 1) AS BIGINT) AS n_closed,
         |       true AS chain_linked, true AS one_current_per_key
-        |FROM allk GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM allk GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // same census model as delta_scd2 — the streamed dimension must equal
     // the batch-applied one — plus the replay-no-op probe
-    "stream_scd2" ->
+    QueryDef("stream_scd2", streamScd2,
       """WITH c AS (SELECT c_custkey AS k, c_acctbal AS bal FROM customer),
         |old_keys AS (
         |  SELECT k,
@@ -6078,9 +5857,9 @@ object SparkEntry {
         |       CAST(sum(n_versions - 1) AS BIGINT) AS n_closed,
         |       true AS chain_linked, true AS one_current_per_key,
         |       true AS replay_noop
-        |FROM allk GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM allk GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "delta_cdf" ->
+    QueryDef("delta_cdf", deltaCdf,
       s"""WITH c AS (
          |  SELECT event_type AS trip_type, value AS total_amount
          |  FROM events WHERE event_type IN ('purchase', 'view') AND $dqSql)
@@ -6105,24 +5884,24 @@ object SparkEntry {
          |        WHERE trip_type = 'view' AND total_amount < 20
          |        UNION ALL SELECT total_amount FROM c
          |        WHERE trip_type = 'view' AND total_amount < 20))
-         |ORDER BY commit_version, change_type""".stripMargin,
+         |ORDER BY commit_version, change_type""".stripMargin),
 
-    "delta_restore" ->
+    QueryDef("delta_restore", deltaRestore,
       s"""SELECT event_type AS trip_type, count(*) AS n_rows,
          |       round(sum(value), 2) AS total, CAST(3 AS BIGINT) AS n_versions
          |FROM events
          |WHERE event_type IN ('purchase', 'view') AND $dqSql
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "delta_vacuum" ->
+    QueryDef("delta_vacuum", deltaVacuum,
       s"""SELECT event_type AS trip_type, count(*) AS n_rows,
          |       round(sum(value), 2) AS total,
          |       true AS files_pruned, true AS old_version_unreadable
          |FROM events
          |WHERE event_type IN ('purchase', 'view') AND $dqSql AND value >= 50
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "delta_clone" ->
+    QueryDef("delta_clone", deltaClone,
       s"""SELECT * FROM (
          |  SELECT 'clone' AS side, event_type AS trip_type,
          |         count(*) AS n_rows, round(sum(value), 2) AS total,
@@ -6136,18 +5915,18 @@ object SparkEntry {
          |  FROM events
          |  WHERE $dqSql AND event_type = 'purchase'
          |  GROUP BY 2)
-         |ORDER BY side, trip_type""".stripMargin,
+         |ORDER BY side, trip_type""".stripMargin),
 
-    "delta_constraints" ->
+    QueryDef("delta_constraints", deltaConstraints,
       s"""WITH c AS (SELECT event_type AS trip_type, value FROM events
          |           WHERE event_type IN ('purchase', 'view') AND $dqSql),
          |u AS (SELECT * FROM c
          |      UNION ALL SELECT * FROM c WHERE trip_type = 'view')
          |SELECT trip_type, count(*) AS n_rows, round(sum(value), 2) AS total,
          |       true AS violation_rejected
-         |FROM u GROUP BY 1 ORDER BY 1""".stripMargin,
+         |FROM u GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "delta_checkpoint" ->
+    QueryDef("delta_checkpoint", deltaCheckpoint,
       s"""WITH c AS (SELECT event_type AS trip_type, value AS total_amount
          |           FROM events
          |           WHERE event_type IN ('purchase', 'view') AND $dqSql),
@@ -6162,15 +5941,15 @@ object SparkEntry {
          |  SELECT CAST(4 AS BIGINT), trip_type, count(*),
          |         round(sum(total_amount), 2), true, true
          |  FROM v4 GROUP BY 2)
-         |ORDER BY version, trip_type""".stripMargin,
+         |ORDER BY version, trip_type""".stripMargin),
 
-    "delta_bloom_skip" ->
+    QueryDef("delta_bloom_skip", deltaBloomSkip,
       """SELECT count(*) AS n_rows, round(sum(value), 2) AS total,
         |       true AS same_answer, true AS range_scans_all,
         |       true AS bloom_skips, true AS multi_file
-        |FROM events WHERE event_id = 123""".stripMargin,
+        |FROM events WHERE event_id = 123""".stripMargin),
 
-    "delta_zorder" ->
+    QueryDef("delta_zorder", deltaZorder,
       """SELECT a.n AS n_rows_id, a.t AS total_id,
         |       b.n AS n_rows_user, b.t AS total_user,
         |       true AS skipped_on_id, true AS skipped_on_user,
@@ -6178,18 +5957,18 @@ object SparkEntry {
         |FROM (SELECT count(*) AS n, round(sum(value), 2) AS t
         |      FROM events WHERE event_id >= 100 AND event_id < 200) a,
         |     (SELECT count(*) AS n, round(sum(value), 2) AS t
-        |      FROM events WHERE user_id < 2) b""".stripMargin,
+        |      FROM events WHERE user_id < 2) b""".stripMargin),
 
-    "delta_mv_incremental" ->
+    QueryDef("delta_mv_incremental", deltaMvIncremental,
       s"""SELECT event_type AS trip_type, count(*) AS n_rows,
          |       round(sum(CASE WHEN value >= 100 THEN value + 10
          |                      ELSE value END), 2) AS total,
          |       true AS matches_recompute, true AS group_deleted
          |FROM events
          |WHERE event_type = 'purchase' AND $dqSql
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "stream_mv" ->
+    QueryDef("stream_mv", streamMv,
       s"""SELECT event_type AS trip_type, count(*) AS n_rows,
          |       round(sum(CASE WHEN value >= 100 THEN value + 10
          |                      ELSE value END), 2) AS total,
@@ -6197,32 +5976,27 @@ object SparkEntry {
          |       true AS replay_clamped
          |FROM events
          |WHERE event_type = 'purchase' AND $dqSql
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "delta_data_skipping" ->
+    QueryDef("delta_data_skipping", deltaDataSkipping,
       """SELECT count(*) AS n_rows, round(sum(value), 2) AS total,
         |       true AS skipped_files, true AS scanned_some
-        |FROM events WHERE event_id >= 100 AND event_id < 200""".stripMargin,
+        |FROM events WHERE event_id >= 100 AND event_id < 200""".stripMargin),
 
     // content model for the converted table's range query; the
     // no-rewrite, full-analyze, and skipping-restored probes pinned true
-    "delta_convert" ->
+    QueryDef("delta_convert", deltaConvert,
       """SELECT count(*) AS n_rows, round(sum(value), 2) AS total,
         |       true AS no_data_rewrite, true AS all_files_analyzed,
         |       true AS skipping_restored
-        |FROM events WHERE event_id >= 100 AND event_id < 200""".stripMargin,
+        |FROM events WHERE event_id >= 100 AND event_id < 200""".stripMargin),
 
     // content model for the ts-range query; the pruning and
     // rule-derivation probes are pinned true (a scan that read every
     // partition, or a prune driven only by file stats, fails the row)
-    "delta_generated_cols" ->
-      """SELECT count(*) AS n_rows, round(sum(value), 2) AS total,
-        |       true AS pruned_files, true AS partition_filter_derived
-        |FROM events
-        |WHERE ts >= TIMESTAMP '2024-01-08 00:00:00'
-        |  AND ts <  TIMESTAMP '2024-01-12 00:00:00'""".stripMargin,
+    QueryDef("delta_generated_cols", deltaGeneratedCols, generatedColsOracle),
 
-    "dedup_droplist" ->
+    QueryDef("dedup_droplist", dedupDroplist,
       """WITH RECURSIVE
         |t AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), t -> t <> '') AS toks FROM documents),
         |sh AS (SELECT doc_id, list_distinct(list_transform(range(len(toks) - 2),
@@ -6239,9 +6013,9 @@ object SparkEntry {
         |cc AS (SELECT node, least(node, min(b)) AS cluster
         |       FROM nodes LEFT JOIN reach ON reach.a = node GROUP BY node)
         |SELECT node AS drop_id, cluster AS keeper FROM cc
-        |WHERE node <> cluster ORDER BY drop_id""".stripMargin,
+        |WHERE node <> cluster ORDER BY drop_id""".stripMargin),
 
-    "dedup_incremental" ->
+    QueryDef("dedup_incremental", dedupIncremental,
       """WITH t AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), t -> t <> '') AS toks
         |           FROM documents),
         |sh AS (SELECT doc_id,
@@ -6257,9 +6031,9 @@ object SparkEntry {
         |       jaccard
         |FROM p
         |WHERE jaccard >= 0.2 AND (da % 4 = 0 OR db % 4 = 0)
-        |ORDER BY new_doc, matched_doc""".stripMargin,
+        |ORDER BY new_doc, matched_doc""".stripMargin),
 
-    "stream_dedup_incremental" ->
+    QueryDef("stream_dedup_incremental", streamDedupIncremental,
       """WITH t AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), t -> t <> '') AS toks
         |           FROM documents),
         |sh AS (SELECT doc_id,
@@ -6283,9 +6057,9 @@ object SparkEntry {
         |JOIN age aa ON aa.doc_id = da
         |JOIN age ab ON ab.doc_id = db
         |WHERE jaccard >= 0.2 AND greatest(aa.age, ab.age) >= 1
-        |ORDER BY new_doc, matched_doc""".stripMargin,
+        |ORDER BY new_doc, matched_doc""".stripMargin),
 
-    "dedup_pipeline" ->
+    QueryDef("dedup_pipeline", dedupPipeline,
       """WITH RECURSIVE
         |c AS (SELECT doc_id, md5(lower(trim(text))) AS k FROM documents),
         |ck AS (SELECT k, min(doc_id) AS keeper FROM c GROUP BY k),
@@ -6312,7 +6086,7 @@ object SparkEntry {
         |  FROM cc WHERE node <> cluster)
         |SELECT * FROM (SELECT * FROM exact_drops UNION ALL
         |               SELECT * FROM near_drops)
-        |ORDER BY drop_id""".stripMargin,
+        |ORDER BY drop_id""".stripMargin),
 
     // #75's CDC end-state model, streamed: the feed content is identical
     // to delta_cdf's batch read; the exactly-once restart probe (run-2
@@ -6321,7 +6095,7 @@ object SparkEntry {
     // batches under maxCommitsPerTrigger=1) are pinned true. The v4
     // delete removes the [20, 30) band remaining after v3 took < 20;
     // 'view' rows count twice (original + negative-keyed arrival copy)
-    "stream_table" ->
+    QueryDef("stream_table", streamTable,
       s"""WITH c AS (
          |  SELECT event_type AS trip_type, value AS total_amount
          |  FROM events WHERE event_type IN ('purchase', 'view') AND $dqSql)
@@ -6358,7 +6132,7 @@ object SparkEntry {
          |        UNION ALL SELECT total_amount FROM c
          |        WHERE trip_type = 'view'
          |          AND total_amount >= 20 AND total_amount < 30))
-         |ORDER BY commit_version, change_type""".stripMargin,
+         |ORDER BY commit_version, change_type""".stripMargin),
 
     // the sink ingests the FULL staged input exactly once across four
     // batch commits and a checkpoint restart — the content model is the
@@ -6366,16 +6140,16 @@ object SparkEntry {
     // (round 13) so does the mid-stream maintenance cycle: compaction +
     // log checkpoint ran AND changed neither the content nor the
     // exactly-once accounting
-    "stream_table_sink" ->
+    QueryDef("stream_table_sink", streamTableSink,
       """SELECT event_type, count(*) AS n_rows,
         |       round(sum(value), 2) AS total, true AS exactly_once,
         |       true AS maintenance_ran
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // exact per-doc census of the paragraph-dedup model: same planted
     // boundaries, same segment-aware 20-token windows, same md5
     // ownership window, same reassembled-text md5
-    "dedup_paragraph" ->
+    QueryDef("dedup_paragraph", dedupParagraph,
       s"""WITH pdocs AS (
          |  SELECT doc_id,
          |         replace(text, ' the ', chr(10) || chr(10) || 'the ') AS text
@@ -6395,7 +6169,7 @@ object SparkEntry {
          |       round(1.0 - CAST(n_kept AS DOUBLE) / n_paras, 4)
          |         AS removed_frac,
          |       coalesce(fp, md5('')) AS text_fp
-         |FROM agg ORDER BY doc_id""".stripMargin,
+         |FROM agg ORDER BY doc_id""".stripMargin),
 
     // DuckDB re-derives the expected domain WITHOUT URL parsing (the
     // independent derivation is the stronger oracle: a Spark
@@ -6407,7 +6181,7 @@ object SparkEntry {
     // (!www.ck → EVERY host under it is ONE 'www.ck' domain — the
     // oracle derives that collapse independently), and a 3-label exact
     // rule (k12.ak.us)
-    "curate_domains" ->
+    QueryDef("curate_domains", curateDomains,
       """WITH d AS (SELECT doc_id,
         |             CASE WHEN doc_id % 8 = 6 THEN 'www.ck'
         |               ELSE source || CAST(doc_id % 7 AS VARCHAR) ||
@@ -6435,14 +6209,14 @@ object SparkEntry {
         |       coalesce(k.n_kept, 0) AS n_kept,
         |       coalesce(k.kept_xor, 0) AS kept_xor
         |FROM inv i LEFT JOIN kept k USING (domain)
-        |ORDER BY i.domain""".stripMargin,
+        |ORDER BY i.domain""".stripMargin),
 
     // exact census of SemDeDup's keep-one rule on the planted corpus:
     // at tau=0.9 every qualifying pair is within-cell (identical values
     // share a cell by construction; scaled copies by cosine assignment),
     // so the global smaller-id dominance rule below IS the cell
     // decomposition's answer — membership pinned by bit_xor
-    "dedup_semantic" ->
+    QueryDef("dedup_semantic", dedupSemantic,
       """WITH scaled AS (
         |  SELECT vec_id AS orig_id,
         |         list_transform(embedding, x -> CAST(CAST(x AS DOUBLE)
@@ -6461,6 +6235,6 @@ object SparkEntry {
         |       CAST(coalesce(bit_xor(vec_id), 0) AS BIGINT) AS dropped_xor,
         |       (SELECT CAST(count(*) AS BIGINT) FROM corpus)
         |         - CAST(count(*) AS BIGINT) AS n_kept
-        |FROM dropped""".stripMargin,
+        |FROM dropped""".stripMargin),
   )
 }

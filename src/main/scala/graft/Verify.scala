@@ -1,21 +1,26 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  /** JSON string literal: escapes backslash, quote and ALL control chars
+    * (<0x20) — a tab or CR in builder-authored SQL would otherwise make
+    * the driver's json.load fail and silently zero the round's
+    * correctness. Bench's artifacts use it too. */
+  private[graft] def jsonStr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.driver("graft-verify", 4)
     new java.io.File(outDir).mkdirs()
     // failed queries must be VISIBLE in the correctness report, not absent
     // from it: a throwing query writes a `<name>.ERROR` sentinel (class +
@@ -26,16 +31,8 @@ object Verify {
     // dev-loop subset (comma-separated keys), mirroring Bench's
     // SPARK_GRAFT_BENCH_ONLY — the driver never sets this, so the full
     // registry always runs in the round gate
-    val registry = sys.env.get("SPARK_GRAFT_VERIFY_ONLY") match {
-      case None => SparkEntry.queries
-      case Some(list) =>
-        val want = list.split(',').map(_.trim).filter(_.nonEmpty)
-        val missing = want.filterNot(SparkEntry.queries.contains)
-        require(missing.isEmpty,
-          s"SPARK_GRAFT_VERIFY_ONLY names unknown queries: ${missing.mkString(", ")}")
-        SparkEntry.queries.view.filterKeys(want.toSet).toMap
-    }
-    registry.foreach { case (name, fn) =>
+    val only = "SPARK_GRAFT_VERIFY_ONLY"
+    SparkEntry.select(sys.env.get(only), only).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -45,29 +42,12 @@ object Verify {
         failures(name) = msg
         Files.writeString(Paths.get(s"$outDir/$name.ERROR"), msg)
       }
-      // the result is on disk — reclaim this scenario's scratch dirs
-      // and drop its dead cached frames (same leak Bench releases)
-      SparkEntry.cleanupTempDirs()
-      spark.catalog.clearCache()
+      SparkEntry.afterQuery(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val errJson = failures
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/verify_errors.json"), errJson)
+    def obj(m: Iterable[(String, String)]): String =
+      m.map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), obj(SparkEntry.oracleSql))
+    Files.writeString(Paths.get(s"$outDir/verify_errors.json"), obj(failures))
     spark.stop()
     if (failures.nonEmpty)
       System.err.println(

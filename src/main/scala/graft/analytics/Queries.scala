@@ -753,7 +753,7 @@ object Queries {
     * division — deterministic), clamped to [1s, span]. One tiny
     * aggregate, a bounded driver scalar (same class as the IVF centroid
     * pull). Result sets are bucket-invariant — width only moves work. */
-  private[graft] def adaptiveBucketUs(intervals: DataFrame): Long = {
+  private def adaptiveBucketUs(intervals: DataFrame): Long = {
     val stats = intervals.agg(
       sum(col("e_us") - col("s_us")).as("len"), count(lit(1)).as("n"),
       min(col("s_us")).as("lo"), max(col("e_us")).as("hi")).collect()(0)

@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftPlanBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst expression for cosine similarity over two
@@ -94,8 +94,8 @@ object GraftFunctions {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)), "built-in")
 
-  def cosine_sim(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("cosine_sim", a, b)
-  }
+  /** Column front door: builds the expression directly, so a call never
+    * touches the session's function registry (`spark` is unused). */
+  def cosine_sim(spark: SparkSession, a: Column, b: Column): Column =
+    column(CosineSim(expression(a), expression(b)))
 }

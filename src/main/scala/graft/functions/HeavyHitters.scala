@@ -3,12 +3,12 @@ package graft.functions
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftPlanBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -182,7 +182,7 @@ case class MisraGries(
 }
 
 object MisraGries {
-  /** Idempotent per-session registration + Column face: the analyzer
+  /** Idempotent per-session registration, for SQL use: the analyzer
     * wraps the bare AggregateFunction in an AggregateExpression, exactly
     * as for built-in aggregates. `k` must be a literal int. */
   def register(spark: SparkSession): Unit =
@@ -196,8 +196,9 @@ object MisraGries {
         MisraGries(exprs(0), k)
       }, "built-in")
 
-  def mg_sketch(spark: SparkSession, tokens: Column, k: Int): Column = {
-    register(spark)
-    call_function("mg_sketch", tokens, org.apache.spark.sql.functions.lit(k))
-  }
+  /** Column front door: builds the aggregate expression directly, so a
+    * call never touches the session's function registry (`spark` is
+    * unused). */
+  def mg_sketch(spark: SparkSession, tokens: Column, k: Int): Column =
+    column(MisraGries(expression(tokens), k).toAggregateExpression())
 }

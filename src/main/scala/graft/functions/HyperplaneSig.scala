@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftPlanBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Random-hyperplane LSH signature: maps an `array<double>` vector to
@@ -94,10 +94,8 @@ object HyperplaneSigFunction {
         exprs(1).eval().asInstanceOf[Int], exprs(2).eval().asInstanceOf[Int]),
       "built-in")
 
-  def hyperplane_sig(spark: SparkSession, v: Column, tables: Int, bits: Int): Column = {
-    register(spark)
-    call_function("hyperplane_sig", v,
-      org.apache.spark.sql.functions.lit(tables),
-      org.apache.spark.sql.functions.lit(bits))
-  }
+  /** Column front door: builds the expression directly, so a call never
+    * touches the session's function registry (`spark` is unused). */
+  def hyperplane_sig(spark: SparkSession, v: Column, tables: Int, bits: Int): Column =
+    column(HyperplaneSig(expression(v), tables, bits))
 }

@@ -38,7 +38,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * IDN rules ship ONLY in their IDNA2008/UTS46 punycode (`xn--`) form
   * (round 16 — round 14 shipped both spellings, round 15 made every
   * probed host IDNA-normalize to punycode FIRST, so the PSL's own 453
-  * Unicode spellings were unreachable and `tools/SlimPsl` shed them
+  * Unicode spellings were unreachable and `graft.tools.SlimPsl` (last
+  * held in commit 52ef7a0) shed them
   * after verifying each punycode twin with the runtime's own IDN
   * call): `shop.example.公司.cn` and `shop.example.xn--55qx5d.cn`
   * both resolve to the ONE canonical registrable
@@ -109,7 +110,8 @@ object PslSuffixImpl {
     * spelling (curation must never throw on crawl garbage — the
     * default-rule path still yields a domain). Since round 16 the
     * resource carries ONLY punycode spellings — the normalization here
-    * is what made the Unicode twins unreachable (`tools/SlimPsl`). */
+    * is what made the Unicode twins unreachable (`graft.tools.SlimPsl`,
+    * last held in commit 52ef7a0). */
   private def toAsciiHost(host: String): String = {
     var i = 0
     while (i < host.length) {

@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftPlanBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, LongType}
 
 /** Native integer dot product over two int8 code columns
@@ -79,8 +79,8 @@ object QuantDotFunction {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "quant_dot", exprs => QuantDot(exprs(0), exprs(1)), "built-in")
 
-  def quant_dot(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("quant_dot", a, b)
-  }
+  /** Column front door: builds the expression directly, so a call never
+    * touches the session's function registry (`spark` is unused). */
+  def quant_dot(spark: SparkSession, a: Column, b: Column): Column =
+    column(QuantDot(expression(a), expression(b)))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftPlanBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.unsafe.types.UTF8String
@@ -193,16 +193,12 @@ object SketchFunctions {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "sig_agreement", exprs => SigAgreement(exprs(0), exprs(1)), "built-in")
   }
-  def simhash64(spark: SparkSession, tokens: Column): Column = {
-    register(spark)
-    call_function("simhash64", tokens)
-  }
-  def minhash_sig(spark: SparkSession, shingles: Column, numPerm: Int): Column = {
-    register(spark)
-    call_function("minhash_sig", shingles, lit(numPerm))
-  }
-  def sig_agreement(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("sig_agreement", a, b)
-  }
+  /** Column front doors: build the expression directly, so a call never
+    * touches the session's function registry (`spark` is unused). */
+  def simhash64(spark: SparkSession, tokens: Column): Column =
+    column(SimHash64(expression(tokens)))
+  def minhash_sig(spark: SparkSession, shingles: Column, numPerm: Int): Column =
+    column(MinHashSig(expression(shingles), numPerm))
+  def sig_agreement(spark: SparkSession, a: Column, b: Column): Column =
+    column(SigAgreement(expression(a), expression(b)))
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftPlanBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -90,12 +90,10 @@ object TextHashFunctions {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "token_min_hash", exprs => TokenMinHash(exprs.head), "built-in")
   }
-  def rolling_hash(spark: SparkSession, text: Column): Column = {
-    register(spark)
-    call_function("rolling_hash", text)
-  }
-  def token_min_hash(spark: SparkSession, text: Column): Column = {
-    register(spark)
-    call_function("token_min_hash", text)
-  }
+  /** Column front doors: build the expression directly, so a call never
+    * touches the session's function registry (`spark` is unused). */
+  def rolling_hash(spark: SparkSession, text: Column): Column =
+    column(RollingHash(expression(text)))
+  def token_min_hash(spark: SparkSession, text: Column): Column =
+    column(TokenMinHash(expression(text)))
 }

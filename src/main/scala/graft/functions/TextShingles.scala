@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftPlanBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -241,22 +241,12 @@ object TextShingleFunctions {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "word_ngrams",
       exprs => WordNgrams(exprs(0), exprs(1).eval().asInstanceOf[Int]), "built-in")
-  def word_ngrams(spark: SparkSession, text: Column, n: Int): Column = {
-    register(spark)
-    call_function("word_ngrams", text, lit(n))
-  }
-  def paragraph_windows(spark: SparkSession, text: Column, w: Int): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "paragraph_windows",
-      exprs => ParagraphWindows(exprs(0), exprs(1).eval().asInstanceOf[Int]),
-      "built-in")
-    call_function("paragraph_windows", text, lit(w))
-  }
-  def paragraph_window_stats(spark: SparkSession, text: Column, w: Int): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "paragraph_window_stats",
-      exprs => ParagraphWindowStats(exprs(0), exprs(1).eval().asInstanceOf[Int]),
-      "built-in")
-    call_function("paragraph_window_stats", text, lit(w))
-  }
+  /** Column front doors: build the expression directly, so a call never
+    * touches the session's function registry (`spark` is unused). */
+  def word_ngrams(spark: SparkSession, text: Column, n: Int): Column =
+    column(WordNgrams(expression(text), n))
+  def paragraph_windows(spark: SparkSession, text: Column, w: Int): Column =
+    column(ParagraphWindows(expression(text), w))
+  def paragraph_window_stats(spark: SparkSession, text: Column, w: Int): Column =
+    column(ParagraphWindowStats(expression(text), w))
 }

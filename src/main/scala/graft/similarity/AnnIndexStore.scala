@@ -356,12 +356,6 @@ object AnnIndexStore {
     total / vs.size
   }
 
-  /** Probe hook (tools/ProbeTrain): the retrain path's drift-baseline
-    * computation, exposed for phase timing. */
-  private[graft] def meanDistortionProbe(spark: SparkSession,
-      resid: org.apache.spark.sql.DataFrame, cb: Pq.Codebooks): Double =
-    meanDistortion(sampleVectors(resid), cb)
-
   /** Deterministic hash-sample of a frame's vectors as driver doubles:
     * the [[DriftSample]] rows of smallest `xxhash64(vec_id)` — a
     * distributed top-k (TakeOrdered) over the WHOLE frame, so the

@@ -2,9 +2,10 @@ package graft.tools
 
 import java.io.{File, FileWriter}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.{GraftSession, SparkEntry}
 
 /** Plan-evidence capture for the optimization round: runs registry
   * queries under a QueryExecutionListener and appends the FORMATTED
@@ -20,20 +21,10 @@ object DumpPlans {
     require(args.length >= 3, "usage: DumpPlans <outDir> <suffix> <queries>")
     val outDir = new File(args(0)); outDir.mkdirs()
     val suffix = args(1)
-    val names = args.drop(2).flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
+    val queries = SparkEntry.select(Some(args.drop(2).mkString(",")), "DumpPlans")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.SparkEntry.ensureBucketedTables(spark, sfDir)
-    graft.SparkEntry.drainTempDirs()
+    val spark = GraftSession.driver("graft-dump-plans", 32, logLevel = "ERROR")
+    SparkEntry.ensureBucketedTables(spark, sfDir)
 
     @volatile var sink: Option[FileWriter] = None
     val listener = new QueryExecutionListener {
@@ -55,8 +46,7 @@ object DumpPlans {
     }
     spark.listenerManager.register(listener)
 
-    names.foreach { name =>
-      val fn = graft.SparkEntry.queries(name)
+    queries.foreach { case (name, fn) =>
       val f = new File(outDir, s"${name}_$suffix.txt")
       val w = new FileWriter(f)
       w.write(s"# $name — every executed plan of one scenario run ($suffix)\n")
@@ -73,8 +63,7 @@ object DumpPlans {
         Thread.sleep(300)
         w.close()
       }
-      graft.SparkEntry.cleanupTempDirs()
-      spark.catalog.clearCache()
+      SparkEntry.afterQuery(spark)
       println(s"wrote ${f.getPath}")
     }
     spark.stop()

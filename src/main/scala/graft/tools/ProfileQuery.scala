@@ -1,10 +1,11 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable.ArrayBuffer
+
+import graft.{GraftSession, SparkEntry}
 
 /** Optimization-round profiler: runs registry queries under a
   * SparkListener and prints, per query, the wall time split into
@@ -28,20 +29,10 @@ object ProfileQuery {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ProfileQuery <query>[,<query>...]")
-    val names = args.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
+    val queries = SparkEntry.select(Some(args.mkString(",")), "ProfileQuery")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.SparkEntry.ensureBucketedTables(spark, sfDir)
-    graft.SparkEntry.drainTempDirs()
+    val spark = GraftSession.driver("graft-profile", 32)
+    SparkEntry.ensureBucketedTables(spark, sfDir)
 
     val starts = TrieMap.empty[Int, (Long, String)]
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[JobRec]()
@@ -71,11 +62,7 @@ object ProfileQuery {
       }
     })
 
-    val missing = names.filterNot(graft.SparkEntry.queries.contains)
-    require(missing.isEmpty, s"unknown queries: ${missing.mkString(", ")}")
-
-    names.foreach { name =>
-      val fn = graft.SparkEntry.queries(name)
+    queries.foreach { case (name, fn) =>
       // one warmup pass (codegen/JIT), then the measured pass
       (0 until 2).foreach { round =>
         jobs.clear()
@@ -86,8 +73,7 @@ object ProfileQuery {
         val t1 = System.nanoTime()
         df.write.format("noop").mode("overwrite").save()
         val t2 = System.nanoTime()
-        graft.SparkEntry.cleanupTempDirs()
-        spark.catalog.clearCache()
+        SparkEntry.afterQuery(spark)
         if (round == 1) {
           val wallMs = (t2 - t0) / 1e6
           val buildMs = (t1 - t0) / 1e6

@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 
 /** Scale-stress data generator: replicates a testdata scale-factor
   * directory K× with key offsets, preserving referential integrity
@@ -33,13 +33,8 @@ object ScaleUp {
     val src = args(0)
     val dst = args(1)
     val copies = args(2).toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-scaleup",
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val idCols: Map[String, Seq[String]] = Map(

@@ -32,15 +32,13 @@ object GraftPlanBridge {
       .internalCreateDataFrame(df.queryExecution.toRdd, df.schema,
         isStreaming = false)
 
-  /** Catalyst expression → Column, directly — for native expressions
-    * whose parameters are driver metadata riding in the expression
-    * itself (e.g. a PQ codebook). The registry round-trip
-    * (`createOrReplaceTempFunction` + `call_function`) used for
-    * literal-argument functions is WRONG for those: the registered
-    * builder closes over one call's metadata under a session-global
-    * name, so two concurrent calls can interleave register/resolve and
-    * silently bind each other's data. Direct construction has no shared
-    * name to race on. */
+  /** Catalyst expression → Column, directly — how every graft Column
+    * front door builds its native expression. A registry round-trip
+    * (`createOrReplaceTempFunction` + `call_function`) would rewrite a
+    * session-global name on every call: a builder closing over one
+    * call's driver metadata (e.g. a PQ codebook) could be bound by a
+    * concurrent call, and each re-registration logs a warning. Direct
+    * construction has no shared name to race on. */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
 

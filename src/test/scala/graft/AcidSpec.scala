@@ -442,10 +442,6 @@ class AcidSpec extends SparkSpec {
     val r = tmp()
     TxLog.overwrite((1L to 8L).map(i => (i, i.toDouble)).toDF("id", "amt").coalesce(1), r)
     assert(TxLog.fileCount(spark, r) == 1)
-    // staging scopes a session conf per write; concurrent commits in one
-    // session can leave it set, so restore it for the specs that follow
-    val sizingKey = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    val sizingPrior = spark.conf.getOption(sizingKey)
     val rowLevel: Seq[() => Unit] = Seq(
       () => TxLog.merge(Seq((1L, 100.0), (11L, 11.0)).toDF("id", "amt"), r, Seq("id")),
       () => TxLog.mergeConditional(Seq((2L, 200.0), (12L, 12.0)).toDF("id", "amt"), r,
@@ -462,13 +458,7 @@ class AcidSpec extends SparkSpec {
       scala.concurrent.ExecutionContext.fromExecutor(pool)))
     start.countDown()
     try Await.result(Future.sequence(racing), 300.seconds)
-    finally {
-      pool.shutdown()
-      sizingPrior match {
-        case Some(v) => spark.conf.set(sizingKey, v)
-        case None => spark.conf.unset(sizingKey)
-      }
-    }
+    finally pool.shutdown()
     assert(TxLog.currentVersion(spark, r) == 1L + writers.size, "one commit per writer")
     val model = (1L to 8L).map(i => i -> i.toDouble).toMap - 4L ++
       Map(1L -> 100.0, 11L -> 11.0, 2L -> 200.0, 12L -> 12.0, 3L -> 300.0)

@@ -1,12 +1,10 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** The bench line is consumed from a ~2000-char stdout tail with sbt's
   * `[success] Total time: ...` line appended after it — these tests pin
   * the size contract so the line can never again overflow the window
   * (rounds 2–3 did, and were recorded as unparseable). */
-class BenchSpec extends AnyFunSuite {
+class BenchSpec extends SparkSpec {
 
   private val sbtSuffix =
     "\n[success] Total time: 258 s (04:18), completed Aug 12, 2026, 7:02:17 PM\n"
@@ -76,6 +74,43 @@ class BenchSpec extends AnyFunSuite {
     assert(line.contains(s""""${names.head}":"AnalysisException"""))
     // the failed query's time-to-failure is not reported as a result
     assert(!line.contains(s""""${names.head}":2.35"""))
+  }
+
+  test("registry: 177 distinct names, each declared once with an oracle") {
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.size == 177 && names.distinct.size == 177)
+    assert(SparkEntry.registry.forall(_.oracleSql.trim.nonEmpty))
+    assert(SparkEntry.queries.keys.toSeq == SparkEntry.oracleSql.keys.toSeq,
+      "runner and oracle maps must iterate in the same order")
+  }
+
+  test("the shared selector rejects unknown names and names them") {
+    for (env <- Seq("SPARK_GRAFT_VERIFY_ONLY", "SPARK_GRAFT_BENCH_ONLY")) {
+      val e = intercept[IllegalArgumentException](
+        SparkEntry.select(Some("q1_avg_monthly, no_such_query"), env))
+      assert(e.getMessage.contains(env) && e.getMessage.contains("no_such_query"))
+    }
+    val e = intercept[IllegalArgumentException](
+      Bench.selected(Map("SPARK_GRAFT_BENCH_ONLY" -> "no_such_query")))
+    assert(e.getMessage.contains("SPARK_GRAFT_BENCH_ONLY names unknown queries: no_such_query"))
+    assert(SparkEntry.select(Some(" q2_avg_hourly,q1_avg_monthly "), "x").keySet ==
+      Set("q1_avg_monthly", "q2_avg_hourly"))
+    assert(SparkEntry.select(None, "x") eq SparkEntry.queries)
+    assert(!Bench.selected(Map.empty).contains(Bench.SelfTestQuery))
+  }
+
+  test("a selftest run over a two-query subset reports failed:1") {
+    val registry = Bench.selected(Map("SPARK_GRAFT_BENCH_SELFTEST" -> "1",
+      "SPARK_GRAFT_BENCH_ONLY" -> s"q1_avg_monthly,${Bench.SelfTestQuery}"))
+    assert(registry.keySet == Set("q1_avg_monthly", Bench.SelfTestQuery))
+    val passes = Seq.fill(2)(Bench.pass(spark, sf, registry))
+    val errs = Bench.firstErrors(passes)
+    assert(errs.keySet == Set(Bench.SelfTestQuery))
+    val best = registry.keys.map(n => n -> passes.map(_(n).total).max).toMap
+    val line = Bench.renderCompact(best, errs, 0.0, 0.0, sf)
+    assert(line.contains(""""failed":1"""))
+    assert(line.contains(s""""errors":{"${Bench.SelfTestQuery}":"""))
+    assert(line.contains(""""queries":{"q1_avg_monthly":"""))
   }
 
   test("fmtSec keeps 3 significant digits and trims zeros") {

@@ -367,8 +367,9 @@ class Round14Spec extends SparkSpec {
     // 7,807 at round 14 (both spellings); round 16 SHED the 453
     // Unicode-spelled IDN rules — hosts IDNA-normalize to punycode
     // BEFORE the probe since round 15, so only the xn-- twins are
-    // reachable (tools/SlimPsl verified every twin present with the
-    // runtime's own IDN call before dropping)
+    // reachable (graft.tools.SlimPsl, last held in commit 52ef7a0,
+    // verified every twin present with the runtime's own IDN call before
+    // dropping)
     assert(PslSuffixImpl.rules.exact.size == 7354,
       s"exact rules: ${PslSuffixImpl.rules.exact.size}")
     assert(PslSuffixImpl.rules.wildcardBases.size == 18,

@@ -26,6 +26,13 @@ step perfbench-selftest bash -c 'cd perfbench && sbt -batch test'
 grep -E "^\[info\] Tests: " "$LOGS/perfbench-selftest.log"
 rm -rf /tmp/graft_verify
 step verify sbt -batch "runMain graft.Verify $HOME/testdata/sf0.01 /tmp/graft_verify"
+# the Column front doors build their expressions without the session
+# function registry; a call that rewrites it logs this WARN every time
+if grep -q 'replaced a previously registered function' "$LOGS/verify.log"; then
+  echo "check.sh: step 'verify' rewrote session functions (count, function):" >&2
+  grep -o 'The function [^ ]* replaced' "$LOGS/verify.log" | sort | uniq -c >&2
+  exit 1
+fi
 python3 tools/parity.py "$HOME/testdata/sf0.01" /tmp/graft_verify
 step bench env SPARK_GRAFT_SF_DIR="$HOME/testdata/sf0.1" \
   SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" sbt -batch 'runMain graft.Bench'
